@@ -2,18 +2,19 @@ package graft.core
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, If, IsNull, Literal}
+import org.apache.spark.sql.catalyst.expressions.{If, IsNull, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.DoubleType
 
-import graft.functions.{CosineSimilarity, Fnv1a64, HyperplaneSignature, MinHashSignature, ShingleHashes, SimHash64}
+import graft.functions.{CosineSimilarity, SqlFunctions}
 
 /** Session extension wiring (SURVEY §7: register via
-  * SparkSessionExtensions): makes every graft native expression
-  * available to plain SQL users on any session built
-  * `.withExtensions(new GraftExtensions)` — no per-session registry
-  * calls — and injects the engine's optimizer rules.
+  * SparkSessionExtensions): injects every row of the
+  * [[graft.functions.SqlFunctions]] table, so each graft native
+  * expression is callable from plain SQL on any session built
+  * `.withExtensions(new GraftExtensions)`, and injects the engine's
+  * optimizer rules.
   *
   * Usage:
   *   SparkSession.builder().withExtensions(new GraftExtensions). …
@@ -22,127 +23,8 @@ import graft.functions.{CosineSimilarity, Fnv1a64, HyperplaneSignature, MinHashS
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    def info(name: String, usage: String) =
-      new ExpressionInfo("graft", null, name, usage, "")
-
-    e.injectFunction((FunctionIdentifier("graft_fnv64"),
-      info("graft_fnv64", "graft_fnv64(str) - FNV-1a 64-bit hash"),
-      (exprs: Seq[Expression]) => Fnv1a64(exprs.head)))
-
-    e.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
-      info("graft_shingle_hashes", "graft_shingle_hashes(text, n) - distinct word n-gram FNV hashes"),
-      (exprs: Seq[Expression]) =>
-        ShingleHashes(exprs.head, graft.functions.LitArgs.litInt(exprs(1), "n"))))
-
-    e.injectFunction((FunctionIdentifier("graft_minhash_sig"),
-      info("graft_minhash_sig", "graft_minhash_sig(hashes, k) - k minhash permutation minima"),
-      (exprs: Seq[Expression]) =>
-        MinHashSignature(exprs.head, graft.functions.LitArgs.litInt(exprs(1), "k"))))
-
-    e.injectFunction((FunctionIdentifier("graft_shingle_strings"),
-      info("graft_shingle_strings", "graft_shingle_strings(text, n) - distinct word n-gram shingle strings"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.ShingleStrings(exprs.head, graft.functions.LitArgs.litInt(exprs(1), "n"))))
-
-    e.injectFunction((FunctionIdentifier("graft_simhash64"),
-      info("graft_simhash64", "graft_simhash64(hashes) - 64-bit simhash"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-
-    e.injectFunction((FunctionIdentifier("graft_chunk_strings"),
-      info("graft_chunk_strings", "graft_chunk_strings(text, width) - consecutive width-token chunks"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.ChunkStrings(exprs.head, graft.functions.LitArgs.litInt(exprs(1), "width"))))
-
-    e.injectFunction((FunctionIdentifier("graft_chunk_hashes"),
-      info("graft_chunk_hashes", "graft_chunk_hashes(text, width) - FNV hashes of consecutive width-token chunks"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.ChunkHashes(exprs.head, graft.functions.LitArgs.litInt(exprs(1), "width"))))
-
-    e.injectFunction((FunctionIdentifier("graft_rolling_hashes"),
-      info("graft_rolling_hashes", "graft_rolling_hashes(text, width) - FNV hashes of every stride-1 width-token window"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.RollingHashes(exprs.head, graft.functions.LitArgs.litInt(exprs(1), "width"))))
-
-    e.injectFunction((FunctionIdentifier("graft_overlap_chunks"),
-      info("graft_overlap_chunks", "graft_overlap_chunks(text, width, stride) - overlapping width-token chunks stepping by stride, tail clipped"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.OverlapChunkStrings(exprs.head,
-          graft.functions.LitArgs.litInt(exprs(1), "width"),
-          graft.functions.LitArgs.litInt(exprs(2), "stride"))))
-
-    e.injectFunction((FunctionIdentifier("graft_top_k"),
-      info("graft_top_k", "graft_top_k(value, k) - aggregate: the k largest values, sorted descending (bounded partial buffers)"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.TopK(exprs.head, graft.functions.LitArgs.litInt(exprs(1), "k"))))
-
-    e.injectFunction((FunctionIdentifier("graft_cosine"),
-      info("graft_cosine", "graft_cosine(a, b) - cosine similarity in double precision"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-
-    e.injectFunction((FunctionIdentifier("graft_hyperplane_sig"),
-      info("graft_hyperplane_sig", "graft_hyperplane_sig(vec, planes, seed) - random-hyperplane LSH bucket"),
-      (exprs: Seq[Expression]) => HyperplaneSignature.make(exprs)))
-
-    e.injectFunction((FunctionIdentifier("graft_nearest_centroid"),
-      info("graft_nearest_centroid",
-        "graft_nearest_centroid(vec, centroids) - argmax-cosine centroid id over array<struct<cid,cv>>"),
-      (exprs: Seq[Expression]) => graft.functions.NearestCentroid(exprs(0), exprs(1))))
-
-    e.injectFunction((FunctionIdentifier("graft_quant_stats"),
-      info("graft_quant_stats",
-        "graft_quant_stats(vec) - int8 quantization stats struct(scale, qsum, qmin, qmax)"),
-      (exprs: Seq[Expression]) => graft.functions.QuantStats(exprs.head)))
-
-    e.injectFunction((FunctionIdentifier("graft_hll_register"),
-      info("graft_hll_register",
-        "graft_hll_register(hash, p) - HyperLogLog register coords [bucket, rho] of a bigint key"),
-      (exprs: Seq[Expression]) => graft.functions.HllRegister(exprs.head,
-        graft.functions.LitArgs.litInt(exprs(1), "p"))))
-
-    // ---- the mergeable KLL quantile-sketch family (rounds 12-13) ----
-    import graft.functions.LitArgs.{litDoubles, litInt}
-
-    e.injectFunction((FunctionIdentifier("graft_kll_quantiles"),
-      info("graft_kll_quantiles",
-        "graft_kll_quantiles(value, array(ps...), k) - aggregate: KLL-sketched quantile values, ~1/k rank error"),
-      (exprs: Seq[Expression]) => graft.functions.KllQuantiles(
-        exprs.head, litDoubles(exprs(1), "ps"), litInt(exprs(2), "k"))))
-
-    e.injectFunction((FunctionIdentifier("graft_kll_quantiles_w"),
-      info("graft_kll_quantiles_w",
-        "graft_kll_quantiles_w(value, weight, array(ps...), k) - aggregate: weighted (pre-counted) sketch quantiles"),
-      (exprs: Seq[Expression]) => graft.functions.KllQuantilesWeighted(
-        exprs.head, exprs(1), litDoubles(exprs(2), "ps"), litInt(exprs(3), "k"))))
-
-    e.injectFunction((FunctionIdentifier("graft_kll_sketch"),
-      info("graft_kll_sketch",
-        "graft_kll_sketch(value, k) - aggregate: persistable serialized sketch state (binary)"),
-      (exprs: Seq[Expression]) => graft.functions.KllSketchAgg(
-        exprs.head, litInt(exprs(1), "k"))))
-
-    e.injectFunction((FunctionIdentifier("graft_kll_sketch_w"),
-      info("graft_kll_sketch_w",
-        "graft_kll_sketch_w(value, weight, k) - aggregate: weighted persistable sketch state (binary)"),
-      (exprs: Seq[Expression]) => graft.functions.KllSketchAggWeighted(
-        exprs.head, exprs(1), litInt(exprs(2), "k"))))
-
-    e.injectFunction((FunctionIdentifier("graft_kll_merge"),
-      info("graft_kll_merge",
-        "graft_kll_merge(sketch) - aggregate: fold serialized sketches (shards/days) into one; mixed k fails loud"),
-      (exprs: Seq[Expression]) => graft.functions.KllMerge(exprs.head)))
-
-    e.injectFunction((FunctionIdentifier("graft_kll_values"),
-      info("graft_kll_values",
-        "graft_kll_values(sketch, array(ps...)) - exact-rank quantile read of a serialized sketch"),
-      (exprs: Seq[Expression]) => graft.functions.KllValues(
-        exprs.head, litDoubles(exprs(1), "ps"))))
-
-    e.injectFunction((FunctionIdentifier("graft_kll_values_interp"),
-      info("graft_kll_values_interp",
-        "graft_kll_values_interp(sketch, array(ps...)) - percentile/quantile_cont lerp read of a serialized sketch"),
-      (exprs: Seq[Expression]) => graft.functions.KllValues(
-        exprs.head, litDoubles(exprs(1), "ps"), interp = true)))
-
+    for (f <- SqlFunctions.all)
+      e.injectFunction((FunctionIdentifier(f.name), f.info, f.builder))
     e.injectOptimizerRule(_ => SelfCosineRule)
   }
 }

@@ -2,15 +2,17 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 
-/** SQL-registered front end for Spark's own `BloomFilterMightContain`
-  * predicate — the codegen'd membership probe Catalyst itself injects
-  * for runtime bloom-filter joins. Exposed here so an EXPLICIT Bloom
-  * constant (built once from a small blocklist via the public
-  * `df.stat.bloomFilter`, serialized with `BloomFilter.writeTo`) can
-  * prefilter a 100 TB scan as a narrow predicate: the filter bytes are
-  * a foldable literal, so the probe constant-folds into whole-stage
-  * codegen with zero shuffle and no per-row deserialization.
+/** Column (and SQL `graft_bloom_might_contain`) front end for Spark's
+  * own `BloomFilterMightContain` predicate — the codegen'd membership
+  * probe Catalyst itself injects for runtime bloom-filter joins.
+  * Exposed here so an EXPLICIT Bloom constant (built once from a small
+  * blocklist via the public `df.stat.bloomFilter`, serialized with
+  * `BloomFilter.writeTo`) can prefilter a 100 TB scan as a narrow
+  * predicate: the filter bytes are a foldable literal, so the probe
+  * constant-folds into whole-stage codegen with zero shuffle and no
+  * per-row deserialization.
   *
   * The value side must be the RAW long key (not a rehash):
   * `stat.bloomFilter` inserts integral columns with `putLong`, and
@@ -19,15 +21,7 @@ import org.apache.spark.sql.{Column, SparkSession}
   */
 object BloomMightContain {
 
-  private val FnName = "graft_bloom_might_contain"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
-
   /** `bloomBytes` must be a BINARY literal (constant), `value` a LONG. */
-  def mightContain(spark: SparkSession, bloomBytes: Column, value: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, bloomBytes, value)
-  }
+  def mightContain(spark: SparkSession, bloomBytes: Column, value: Column): Column =
+    column(BloomFilterMightContain(expression(bloomBytes), expression(value)))
 }

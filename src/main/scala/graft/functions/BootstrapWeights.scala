@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Deterministic Poisson-bootstrap resample weights of a row — the
   * scale form of the bootstrap: instead of materializing B resampled
@@ -98,17 +99,7 @@ object BootstrapWeights {
     new GenericArrayData(out)
   }
 
-  private val FnName = "graft_bootstrap_weights"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => BootstrapWeights(exprs.head,
-        LitArgs.litInt(exprs(1), "b")), "built-in")
-
   /** Column form: array of b+1 multiplicities (index 0 = identity). */
-  def weights(spark: SparkSession, key: Column, b: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, key,
-      org.apache.spark.sql.functions.lit(b))
-  }
+  def weights(spark: SparkSession, key: Column, b: Int): Column =
+    column(BootstrapWeights(expression(key), b))
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** PRODUCTION-VOCAB BPE application as one native Catalyst expression
@@ -179,21 +180,9 @@ final class BpeMergeTable(xs: Array[String], ys: Array[String])
 }
 
 object BpeEncodeVocab {
-  private val FnName = "graft_bpe_encode"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => BpeEncodeVocab(exprs.head,
-        LitArgs.litStrings(exprs(1), "merge left symbols"),
-        LitArgs.litStrings(exprs(2), "merge right symbols")), "built-in")
-
   /** Column form: pre-token array → merged token array under the
     * literal `merges` table (rank = position). */
   def encode(spark: SparkSession, preTokens: Column,
-             merges: Seq[(String, String)]): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, preTokens,
-      org.apache.spark.sql.functions.typedLit(merges.map(_._1)),
-      org.apache.spark.sql.functions.typedLit(merges.map(_._2)))
-  }
+             merges: Seq[(String, String)]): Column =
+    column(BpeEncodeVocab(expression(preTokens), merges.map(_._1), merges.map(_._2)))
 }

@@ -2,9 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Coarse-bucket id of a fine cell: `count of boundaries <= cell` for
   * an ASCENDING boundary array — the quantile family's bucket
@@ -69,32 +69,9 @@ object CellBucket {
     lo
   }
 
-  private val FnName = "graft_cell_bucket"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, { exprs =>
-        require(exprs.length == 2,
-          s"$FnName(cell, array(bounds...)): expected 2 args, got ${exprs.length}")
-        CellBucket(exprs.head, litLongs(exprs(1), "bounds"))
-      }, "built-in")
-
-  private def litLongs(e: Expression, what: String): Seq[Long] = {
-    if (!e.foldable) throw new IllegalArgumentException(
-      s"$what must be a literal array of bigints, got ${e.sql}")
-    e.eval() match {
-      case a: ArrayData => a.toLongArray().toSeq
-      case other => throw new IllegalArgumentException(
-        s"$what must be a literal array of bigints, got $other")
-    }
-  }
-
   /** Column form: bucket id (int) of the long `cell` under ascending
-    * `bounds`. The boundary array travels as ONE typed literal (a
-    * single Literal node), never as per-element expression children. */
-  def bucket(spark: SparkSession, cell: Column, bounds: Array[Long]): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, cell,
-      org.apache.spark.sql.functions.typedLit(bounds.toSeq))
-  }
+    * `bounds`. The boundary array is expression state, never
+    * per-element expression children. */
+  def bucket(spark: SparkSession, cell: Column, bounds: Array[Long]): Column =
+    column(CellBucket(expression(cell), bounds.toSeq))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Consecutive fixed-width token chunks of a text column
@@ -78,17 +79,8 @@ object ChunkStrings {
   private def isSpace(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f' || c == 0x0b
 
-  private val FnName = "graft_chunk_strings"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => ChunkStrings(exprs.head, LitArgs.litInt(exprs(1), "width")), "built-in")
-
-  def chunkStrings(spark: SparkSession, text: Column, width: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, text,
-      org.apache.spark.sql.functions.lit(width))
-  }
+  def chunkStrings(spark: SparkSession, text: Column, width: Int): Column =
+    column(ChunkStrings(expression(text), width))
 }
 
 /** FNV-1a 64 hashes of the same chunks as [[ChunkStrings]]
@@ -169,17 +161,8 @@ object ChunkHashes {
   private def isSpace(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f' || b == 0x0b
 
-  private val FnName = "graft_chunk_hashes"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => ChunkHashes(exprs.head, LitArgs.litInt(exprs(1), "width")), "built-in")
-
-  def chunkHashes(spark: SparkSession, text: Column, width: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, text,
-      org.apache.spark.sql.functions.lit(width))
-  }
+  def chunkHashes(spark: SparkSession, text: Column, width: Int): Column =
+    column(ChunkHashes(expression(text), width))
 }
 
 /** Overlapping `width`-token chunks stepping by `stride` tokens
@@ -250,19 +233,8 @@ object OverlapChunkStrings {
   private def isSpace(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f' || c == 0x0b
 
-  private val FnName = "graft_overlap_chunks"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => OverlapChunkStrings(exprs.head,
-        LitArgs.litInt(exprs(1), "width"), LitArgs.litInt(exprs(2), "stride")), "built-in")
-
-  def overlapChunks(spark: SparkSession, text: Column, width: Int, stride: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, text,
-      org.apache.spark.sql.functions.lit(width),
-      org.apache.spark.sql.functions.lit(stride))
-  }
+  def overlapChunks(spark: SparkSession, text: Column, width: Int, stride: Int): Column =
+    column(OverlapChunkStrings(expression(text), width, stride))
 }
 
 /** FNV-1a 64 hashes of every stride-1 `width`-token window
@@ -297,15 +269,6 @@ object RollingHashes {
   def compute(text: UTF8String, width: Int): ArrayData =
     ChunkHashes.compute(text, width, 1)
 
-  private val FnName = "graft_rolling_hashes"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => RollingHashes(exprs.head, LitArgs.litInt(exprs(1), "width")), "built-in")
-
-  def rollingHashes(spark: SparkSession, text: Column, width: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, text,
-      org.apache.spark.sql.functions.lit(width))
-  }
+  def rollingHashes(spark: SparkSession, text: Column, width: Int): Column =
+    column(RollingHashes(expression(text), width))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Cosine similarity over ARRAY(FLOAT)/ARRAY(DOUBLE) as a native
   * expression (the optimization SURVEY §4 reserves for exactly this
@@ -63,14 +64,6 @@ object CosineSimilarity {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  private val FnName = "graft_cosine"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-
-  def cosine(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, a, b)
-  }
+  def cosine(spark: SparkSession, a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** The d count-min-sketch bucket indices of a 64-bit key, as a native
   * codegen expression: bucket_j = splitmix64(h ^ seed_j) & (w-1),
@@ -57,16 +58,6 @@ object CountMinBuckets {
     new GenericArrayData(out)
   }
 
-  private val FnName = "graft_countmin_buckets"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => CountMinBuckets(exprs.head,
-        LitArgs.litInt(exprs(1), "d"), LitArgs.litInt(exprs(2), "w")), "built-in")
-
-  def buckets(spark: SparkSession, key: Column, d: Int, w: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, key,
-      org.apache.spark.sql.functions.lit(d), org.apache.spark.sql.functions.lit(w))
-  }
+  def buckets(spark: SparkSession, key: Column, d: Int, w: Int): Column =
+    column(CountMinBuckets(expression(key), d, w))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** FNV-1a 64-bit hash as a native Catalyst expression.
@@ -50,19 +51,6 @@ object Fnv1a64 {
     h
   }
 
-  private val FnName = "graft_fnv64"
-
-  /** Register as a SQL-callable function on this session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => Fnv1a64(exprs.head), "built-in")
-
-  /** Column form; registers on the session first (Column construction
-    * from a raw Expression is session-private in Spark 4, so routing
-    * through the function registry keeps us on public API).
-    */
-  def fnv64(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, c)
-  }
+  def fnv64(spark: SparkSession, c: Column): Column =
+    column(Fnv1a64(expression(c)))
 }

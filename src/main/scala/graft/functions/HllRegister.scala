@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** HyperLogLog register coordinates `[bucket, rho]` of a 64-bit key,
   * as a native codegen expression.
@@ -65,16 +66,6 @@ object HllRegister {
     new GenericArrayData(Array(bucket, rho))
   }
 
-  private val FnName = "graft_hll_register"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => HllRegister(exprs.head, LitArgs.litInt(exprs(1), "p")),
-      "built-in")
-
-  def registerCoords(spark: SparkSession, key: Column, p: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, key,
-      org.apache.spark.sql.functions.lit(p))
-  }
+  def registerCoords(spark: SparkSession, key: Column, p: Int): Column =
+    column(HllRegister(expression(key), p))
 }

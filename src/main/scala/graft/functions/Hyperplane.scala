@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Random-hyperplane LSH signature as a native Catalyst expression:
   * the sign bits of `planes` dot products against deterministic
@@ -135,23 +136,8 @@ object HyperplaneSignature {
     sig
   }
 
-  private val FnName = "graft_hyperplane_sig"
-
-  def make(exprs: Seq[Expression]): HyperplaneSignature =
-    HyperplaneSignature(exprs.head,
-      LitArgs.litInt(exprs(1), "planes"),
-      LitArgs.litLong(exprs(2), "seed"))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, make, "built-in")
-
-  def signature(spark: SparkSession, vec: Column, planes: Int, seed: Long): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, vec,
-      org.apache.spark.sql.functions.lit(planes),
-      org.apache.spark.sql.functions.lit(seed))
-  }
+  def signature(spark: SparkSession, vec: Column, planes: Int, seed: Long): Column =
+    column(HyperplaneSignature(expression(vec), planes, seed))
 
   /** Raw projections (not just their signs) against the same weight
     * family — the Johnson–Lindenstrauss dimensionality reduction the
@@ -225,21 +211,6 @@ case class RandomProjection(child: Expression, planes: Int, seed: Long)
 }
 
 object RandomProjection {
-  private val FnName = "graft_random_projection"
-
-  def make(exprs: Seq[Expression]): RandomProjection =
-    RandomProjection(exprs.head,
-      LitArgs.litInt(exprs(1), "planes"),
-      LitArgs.litLong(exprs(2), "seed"))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, make, "built-in")
-
-  def project(spark: SparkSession, vec: Column, planes: Int, seed: Long): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, vec,
-      org.apache.spark.sql.functions.lit(planes),
-      org.apache.spark.sql.functions.lit(seed))
-  }
+  def project(spark: SparkSession, vec: Column, planes: Int, seed: Long): Column =
+    column(RandomProjection(expression(vec), planes, seed))
 }

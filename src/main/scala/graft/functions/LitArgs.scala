@@ -2,13 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Shared validation for SQL-registered functions whose non-column
-  * arguments must be literals (shingle width, minhash k, LSH planes…).
+/** Shared validation for the [[SqlFunctions]] builders whose
+  * non-column arguments must be literals (shingle width, minhash k,
+  * LSH planes…).
   *
   * Guarding on `foldable` BEFORE `eval()` turns "obscure Catalyst
   * unbound-reference error mid-analysis" into a clean
   * 'n must be a literal int' message when a user passes a column
-  * (round-2 advice on ShingleStrings.register).
+  * (round-2 advice).
   */
 private[graft] object LitArgs {
 
@@ -46,6 +47,18 @@ private[graft] object LitArgs {
         }
       case other => throw new IllegalArgumentException(
         s"$what must be a literal array of strings, got $other")
+    }
+  }
+
+  /** Literal `array(10L, …)` argument (the [[CellBucket]] boundary
+    * array). */
+  def litLongs(e: Expression, what: String): Seq[Long] = {
+    if (!e.foldable) throw new IllegalArgumentException(
+      s"$what must be a literal array of bigints, got ${e.sql}")
+    e.eval() match {
+      case a: org.apache.spark.sql.catalyst.util.ArrayData => a.toLongArray().toSeq
+      case other => throw new IllegalArgumentException(
+        s"$what must be a literal array of bigints, got $other")
     }
   }
 

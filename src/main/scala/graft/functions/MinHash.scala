@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** MinHash signature as a native Catalyst expression: for an
   * ARRAY(LONG) of shingle hashes, computes the k permutation minima in
@@ -66,15 +67,6 @@ object MinHashSignature {
     new GenericArrayData(mins)
   }
 
-  private val FnName = "graft_minhash_sig"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => MinHashSignature(exprs.head, LitArgs.litInt(exprs(1), "k")), "built-in")
-
-  def signature(spark: SparkSession, hashes: Column, k: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, hashes,
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def signature(spark: SparkSession, hashes: Column, k: Int): Column =
+    column(MinHashSignature(expression(hashes), k))
 }

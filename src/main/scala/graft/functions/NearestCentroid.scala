@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Nearest-centroid assignment as a native expression: the argmax of
   * cosine similarity between one row's vector and a (small, broadcast)
@@ -116,14 +117,6 @@ object NearestCentroid {
     bestIdx
   }
 
-  private val FnName = "graft_nearest_centroid"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => NearestCentroid(exprs(0), exprs(1)), "built-in")
-
-  def nearest(spark: SparkSession, vec: Column, cents: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, vec, cents)
-  }
+  def nearest(spark: SparkSession, vec: Column, cents: Column): Column =
+    column(NearestCentroid(expression(vec), expression(cents)))
 }

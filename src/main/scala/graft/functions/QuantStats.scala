@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Int8 scalar-quantization statistics for one embedding in a single
   * JVM pass: `STRUCT(scale DOUBLE, qsum BIGINT, qmin BIGINT, qmax
@@ -96,14 +97,6 @@ object QuantStats {
     new GenericInternalRow(Array[Any](scale, qsum, qmin, qmax))
   }
 
-  private val FnName = "graft_quant_stats"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => QuantStats(exprs.head), "built-in")
-
-  def stats(spark: SparkSession, vec: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, vec)
-  }
+  def stats(spark: SparkSession, vec: Column): Column =
+    column(QuantStats(expression(vec)))
 }

@@ -12,6 +12,7 @@ import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Mergeable KLL-style quantile-sketch buffer: a ladder of value
   * arrays where level `i` holds items of weight `2^i`. Updates land in
@@ -668,138 +669,48 @@ object KllValues {
 
 object KllQuantiles {
 
-  private val FnName = "graft_kll_quantiles"
+  /** Installs the SQL surface (`graft_kll_quantiles`, `graft_kll_*`, …)
+    * on a plain session — see [[SqlFunctions.register]]. */
+  def register(spark: SparkSession): Unit = SqlFunctions.register(spark)
 
-  /** SQL surface: `graft_kll_quantiles(v, array(0.5, 0.9), 256)` —
-    * quantile list and k must be literals (LitArgs convention). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, { exprs =>
-        require(exprs.length == 3,
-          s"$FnName(value, array(ps...), k): expected 3 args, got ${exprs.length}")
-        KllQuantiles(exprs.head, litDoubles(exprs(1), "ps"),
-          LitArgs.litInt(exprs(2), "k"))
-      }, "built-in")
-
-  private def litDoubles(e: Expression, what: String): Seq[Double] =
-    LitArgs.litDoubles(e, what)
+  def registerWeighted(spark: SparkSession): Unit = SqlFunctions.register(spark)
 
   /** Column form: `array<double>` of the `ps` quantiles of `value`. */
   def kllQuantiles(spark: SparkSession, value: Column,
-                   ps: Seq[Double], k: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName,
-      value.cast("double"),
-      org.apache.spark.sql.functions.array(
-        ps.map(org.apache.spark.sql.functions.lit): _*),
-      org.apache.spark.sql.functions.lit(k))
-  }
-
-  private val WeightedFn = "graft_kll_quantiles_w"
-
-  /** SQL surface: `graft_kll_quantiles_w(v, w, array(0.5, 0.9), 256)`
-    * — weighted (pre-counted) quantile sketch. */
-  def registerWeighted(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      WeightedFn, { exprs =>
-        require(exprs.length == 4,
-          s"$WeightedFn(value, weight, array(ps...), k): expected 4 args, " +
-            s"got ${exprs.length}")
-        KllQuantilesWeighted(exprs.head, exprs(1),
-          litDoubles(exprs(2), "ps"), LitArgs.litInt(exprs(3), "k"))
-      }, "built-in")
+                   ps: Seq[Double], k: Int): Column =
+    column(KllQuantiles(expression(value.cast("double")), ps, k))
 
   /** Column form: `array<double>` of the `ps` quantiles of the
     * expanded multiset (`value` with integer multiplicity `weight`). */
   def kllQuantilesWeighted(spark: SparkSession, value: Column,
-                           weight: Column, ps: Seq[Double], k: Int): Column = {
-    registerWeighted(spark)
-    org.apache.spark.sql.functions.call_function(WeightedFn,
-      value.cast("double"), weight.cast("long"),
-      org.apache.spark.sql.functions.array(
-        ps.map(org.apache.spark.sql.functions.lit): _*),
-      org.apache.spark.sql.functions.lit(k))
-  }
+                           weight: Column, ps: Seq[Double], k: Int): Column =
+    column(KllQuantilesWeighted(expression(value.cast("double")),
+      expression(weight.cast("long")), ps, k))
 
   // ---- the roll-up trio: build sketch STATE, merge it, read it ------
 
-  private val SketchFn = "graft_kll_sketch"
-  private val SketchWFn = "graft_kll_sketch_w"
-  private val MergeFn = "graft_kll_merge"
-  private val ValuesFn = "graft_kll_values"
-  private val ValuesInterpFn = "graft_kll_values_interp"
-
-  def registerRollup(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      SketchWFn, { exprs =>
-        require(exprs.length == 3,
-          s"$SketchWFn(value, weight, k): expected 3 args, got ${exprs.length}")
-        KllSketchAggWeighted(exprs.head, exprs(1), LitArgs.litInt(exprs(2), "k"))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ValuesInterpFn, { exprs =>
-        require(exprs.length == 2,
-          s"$ValuesInterpFn(sketch, array(ps...)): expected 2 args, got ${exprs.length}")
-        KllValues(exprs.head, litDoubles(exprs(1), "ps"), interp = true)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      SketchFn, { exprs =>
-        require(exprs.length == 2,
-          s"$SketchFn(value, k): expected 2 args, got ${exprs.length}")
-        KllSketchAgg(exprs.head, LitArgs.litInt(exprs(1), "k"))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      MergeFn, { exprs =>
-        require(exprs.length == 1,
-          s"$MergeFn(sketch): expected 1 arg, got ${exprs.length}")
-        KllMerge(exprs.head)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ValuesFn, { exprs =>
-        require(exprs.length == 2,
-          s"$ValuesFn(sketch, array(ps...)): expected 2 args, got ${exprs.length}")
-        KllValues(exprs.head, litDoubles(exprs(1), "ps"))
-      }, "built-in")
-  }
-
   /** Aggregate to a persistable serialized sketch (`binary`). */
-  def kllSketch(spark: SparkSession, value: Column, k: Int): Column = {
-    registerRollup(spark)
-    org.apache.spark.sql.functions.call_function(SketchFn,
-      value.cast("double"), org.apache.spark.sql.functions.lit(k))
-  }
+  def kllSketch(spark: SparkSession, value: Column, k: Int): Column =
+    column(KllSketchAgg(expression(value.cast("double")), k))
 
   /** Fold a column of serialized sketches into one (`binary`). */
-  def kllMerge(spark: SparkSession, sketch: Column): Column = {
-    registerRollup(spark)
-    org.apache.spark.sql.functions.call_function(MergeFn, sketch)
-  }
+  def kllMerge(spark: SparkSession, sketch: Column): Column =
+    column(KllMerge(expression(sketch)))
 
   /** Quantiles of a serialized sketch (`array<double>`). */
-  def kllValues(spark: SparkSession, sketch: Column, ps: Seq[Double]): Column = {
-    registerRollup(spark)
-    org.apache.spark.sql.functions.call_function(ValuesFn, sketch,
-      org.apache.spark.sql.functions.array(
-        ps.map(org.apache.spark.sql.functions.lit): _*))
-  }
+  def kllValues(spark: SparkSession, sketch: Column, ps: Seq[Double]): Column =
+    column(KllValues(expression(sketch), ps))
 
   /** Weighted (pre-counted) aggregate to a persistable sketch. */
   def kllSketchWeighted(spark: SparkSession, value: Column, weight: Column,
-                        k: Int): Column = {
-    registerRollup(spark)
-    org.apache.spark.sql.functions.call_function(SketchWFn,
-      value.cast("double"), weight.cast("long"),
-      org.apache.spark.sql.functions.lit(k))
-  }
+                        k: Int): Column =
+    column(KllSketchAggWeighted(expression(value.cast("double")),
+      expression(weight.cast("long")), k))
 
   /** INTERPOLATED quantiles of a serialized sketch (`array<double>`) —
     * `percentile`/`quantile_cont` lerp semantics; exact parity with
     * them in the no-compaction regime. */
   def kllValuesInterp(spark: SparkSession, sketch: Column,
-                      ps: Seq[Double]): Column = {
-    registerRollup(spark)
-    org.apache.spark.sql.functions.call_function(ValuesInterpFn, sketch,
-      org.apache.spark.sql.functions.array(
-        ps.map(org.apache.spark.sql.functions.lit): _*))
-  }
+                      ps: Seq[Double]): Column =
+    column(KllValues(expression(sketch), ps, interp = true))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Integer quantization of a vector in one codegen'd pass:
   * `floor(v[i] · scale)` per element, emitted as ARRAY(DOUBLE) whose
@@ -61,15 +62,6 @@ object QuantizeVec {
     new GenericArrayData(out)
   }
 
-  private val FnName = "graft_quantize_vec"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => QuantizeVec(exprs.head, LitArgs.litInt(exprs(1), "scale")), "built-in")
-
-  def quantize(spark: SparkSession, vec: Column, scale: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, vec,
-      org.apache.spark.sql.functions.lit(scale))
-  }
+  def quantize(spark: SparkSession, vec: Column, scale: Int): Column =
+    column(QuantizeVec(expression(vec), scale))
 }

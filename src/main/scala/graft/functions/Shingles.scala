@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distinct word n-gram shingles of a text column, emitted directly as
@@ -87,17 +88,8 @@ object ShingleHashes {
   private def isSpace(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f' || b == 0x0b
 
-  private val FnName = "graft_shingle_hashes"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => ShingleHashes(exprs.head, LitArgs.litInt(exprs(1), "n")), "built-in")
-
-  def shingleHashes(spark: SparkSession, text: Column, n: Int = 3): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, text,
-      org.apache.spark.sql.functions.lit(n))
-  }
+  def shingleHashes(spark: SparkSession, text: Column, n: Int = 3): Column =
+    column(ShingleHashes(expression(text), n))
 }
 
 /** Distinct word n-gram shingles as STRINGS (ARRAY(STRING)) — the
@@ -165,17 +157,8 @@ object ShingleStrings {
   private def isSpace(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f' || c == 0x0b
 
-  private val FnName = "graft_shingle_strings"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => ShingleStrings(exprs.head, LitArgs.litInt(exprs(1), "n")), "built-in")
-
-  def shingleStrings(spark: SparkSession, text: Column, n: Int = 3): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, text,
-      org.apache.spark.sql.functions.lit(n))
-  }
+  def shingleStrings(spark: SparkSession, text: Column, n: Int = 3): Column =
+    column(ShingleStrings(expression(text), n))
 }
 
 /** 64-bit SimHash of an ARRAY(LONG) hash column: per-bit ±1 majority
@@ -220,14 +203,6 @@ object SimHash64 {
     sig
   }
 
-  private val FnName = "graft_simhash64"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => SimHash64(exprs.head), "built-in")
-
-  def simhash64(spark: SparkSession, hashes: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, hashes)
-  }
+  def simhash64(spark: SparkSession, hashes: Column): Column =
+    column(SimHash64(expression(hashes)))
 }

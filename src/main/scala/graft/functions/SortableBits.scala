@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Order-preserving integer rendering of a double: the IEEE-754 bit
   * pattern with the standard sortable transform (negative values get
@@ -53,14 +54,6 @@ object SortableDoubleBits {
     b ^ ((b >> 63) & 0x7fffffffffffffffL)
   }
 
-  private val FnName = "graft_sortable_double_bits"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => SortableDoubleBits(exprs.head), "built-in")
-
-  def sortable(spark: SparkSession, v: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, v)
-  }
+  def sortable(spark: SparkSession, v: Column): Column =
+    column(SortableDoubleBits(expression(v)))
 }

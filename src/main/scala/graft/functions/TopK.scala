@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
 import org.apache.spark.sql.types.{ArrayType, DataType}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Bounded-buffer per-group top-k aggregate: keeps the `k` LARGEST
   * values of `child` (any orderable type — for "top-k by score" pass
@@ -128,16 +129,7 @@ case class TopK(child: Expression, k: Int,
 
 object TopK {
 
-  private val FnName = "graft_top_k"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => TopK(exprs.head, LitArgs.litInt(exprs(1), "k")), "built-in")
-
   /** Column form: array of the k largest `value`s, sorted descending. */
-  def topK(spark: SparkSession, value: Column, k: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, value,
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def topK(spark: SparkSession, value: Column, k: Int): Column =
+    column(TopK(expression(value), k))
 }

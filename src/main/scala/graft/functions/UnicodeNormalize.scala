@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode normalization (NFC/NFD/NFKC/NFKD) as a native Catalyst
@@ -57,28 +58,11 @@ object UnicodeNormalize {
     else UTF8String.fromString(Normalizer.normalize(str, f))
   }
 
-  private val FnName = "graft_nfc"
+  /** Column form of NFC, the form DuckDB can replay (SQL: `graft_nfc`). */
+  def nfc(spark: SparkSession, c: Column): Column = normalized(spark, c, "NFC")
 
-  /** SQL surface: `graft_nfc(str)` = NFC normalization (the form DuckDB
-    * can replay; other forms go through the Column API). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => UnicodeNormalize(exprs.head, "NFC"), "built-in")
-
-  /** Column form (routes through the registry — Column-from-Expression
-    * is session-private in Spark 4). NFC only; use [[normalized]] for
-    * the other forms. */
-  def nfc(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, c)
-  }
-
-  /** Column form for any normalization form, via a per-form registered
-    * function name. */
-  def normalized(spark: SparkSession, c: Column, form: String): Column = {
-    val name = s"graft_unicode_${form.toLowerCase}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => UnicodeNormalize(exprs.head, form), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  /** Column form for any normalization form; an unknown `form` (the
+    * names are case-sensitive) throws here, at the call. */
+  def normalized(spark: SparkSession, c: Column, form: String): Column =
+    column(UnicodeNormalize(expression(c), form))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Z-order (Morton) interleave of two dimension keys — the multi-column
   * clustering key for data-skipping layouts: sort/range-partition a
@@ -61,14 +62,6 @@ object ZOrder2 {
     v
   }
 
-  private val FnName = "graft_zorder2"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => ZOrder2(exprs.head, exprs(1)), "built-in")
-
-  def zorder(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(FnName, a, b)
-  }
+  def zorder(spark: SparkSession, a: Column, b: Column): Column =
+    column(ZOrder2(expression(a), expression(b)))
 }

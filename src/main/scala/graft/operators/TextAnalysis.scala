@@ -395,11 +395,8 @@ object TextAnalysis {
     * arithmetic wraps, which is the hashing semantic — Spark-level
     * arithmetic would throw under ANSI mode).
     */
-  def fingerprint(spark: SparkSession, text: Column): Column = {
-    Fnv1a64.register(spark)
-    call_function("graft_fnv64",
-      regexp_replace(lower(trim(text)), "\\s+", " "))
-  }
+  def fingerprint(spark: SparkSession, text: Column): Column =
+    Fnv1a64.fnv64(spark, regexp_replace(lower(trim(text)), "\\s+", " "))
 
   /** PII-redaction patterns (training-data scrubbing): lookaround-free
     * so Java regex and RE2 agree character-for-character. Email first —
