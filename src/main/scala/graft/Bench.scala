@@ -11,7 +11,8 @@ import graft.core.{Sessions, Tables}
   * `count()` would let Catalyst prune projections and skip sorts.
   * Tables are touched once first so parquet footers and the OS page
   * cache are warm (the driver measures engine time, not disk cold
-  * start).
+  * start); the touch also fills `Tables.load`'s schema cache, so no
+  * timed query pays a schema-inference job.
   *
   * Stability: queries slower than their re-measure threshold —
   * 2× the query's anchor from `bench_anchors.json` (the per-query min
@@ -119,7 +120,8 @@ object Bench {
       shufflePartitions = cpus, appName = "graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    Tables.names.foreach(n => Tables.load(spark, sfDir, n).count()) // warm cache
+    // warm the page cache and Tables.load's schema cache
+    Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
     // one throwaway query to amortize first-plan codegen/JIT so the
     // first timed query isn't charged for JVM warmup
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -402,11 +404,19 @@ object Bench {
     // here, full per-query detail in the file artifact above.
     val summary =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_failed":${failed.size},"n_contended":${contendedFinal.size},"detail":"$outPath"}"""
+    // the second-to-last stdout line: the 20 heaviest queries in at most
+    // 600 chars (the lightest dropped first if names run long), so a
+    // 2000-char tail of stdout still carries per-query figures
+    val heaviest = Iterator.iterate(results.filter(_._2 >= 0).sortBy(-_._2).take(20))(_.init)
+      .map(_.map { case (k, v) => "\"" + k + f"\":$v%.2f" }
+        .mkString("""{"heaviest_s":{""", ",", "}}"))
+      .find(_.length <= 600).get
     // stop Spark BEFORE printing: anything Spark writes to stdout
     // during shutdown would land AFTER the JSON and break the driver's
     // tail-parse (BENCH_r10/r11 both arrived with parsed=null) — the
-    // contract is that this line is the LAST stdout line of the run
+    // contract is that the summary is the LAST stdout line of the run
     spark.stop()
+    println(heaviest)
     println(summary)
     System.out.flush()
   }

@@ -53,6 +53,14 @@ object Sessions {
       // |V|-row state frame fans 32 near-empty tasks into every round at
       // any scale factor. Guide §2.2 (fewer, larger partitions).
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      // Generated-class cache sized to the query mix. At Spark's default
+      // of 100 entries the 21 short Relational + SqlPath queries
+      // recompiled 150-184 classes on every steady-state pass (counted
+      // with CodegenMetrics); at 1000 a steady pass compiles 0. The
+      // metadata push job needs 37 classes in total and fits either way.
+      // A static conf: the cache is built once per JVM, so the first
+      // session's value holds for every later session.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       // NOTE (r19 measurement): lowering
       // spark.sql.adaptive.coalescePartitions.minPartitionSize to 64k
       // session-wide was tried to stop AQE collapsing small-byte but

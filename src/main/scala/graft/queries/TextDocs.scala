@@ -726,7 +726,7 @@ object TextDocs {
       // planning-sized lists.
       val lex = Retrieval.bm25(docs(s, dir), "doc_id", "text",
         Seq("vector", "stream", "merge", "window"), k = 50)
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Tables.load(s, dir, "embeddings")
       val sem = graft.operators.Similarity.bruteForceTopK(
           emb.filter(col("vec_id") =!= 0), "vec_id", "embedding",
           emb.filter(col("vec_id") === 0), 50)

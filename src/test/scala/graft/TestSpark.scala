@@ -4,6 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (SURVEY §5 guidance). */
 object TestSpark {
+  /** Root of the generated star-schema test data: one `sf<scale>`
+    * directory per scale factor (TESTDATA.md). */
+  val dataRoot = "/root/testdata"
+
   lazy val spark: SparkSession = {
     val s = graft.core.Sessions.configure(
       SparkSession.builder().master("local[4]")
