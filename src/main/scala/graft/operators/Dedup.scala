@@ -376,13 +376,14 @@ object Dedup {
     * edges, find connected components with iterative min-label
     * propagation, keep only the minimum id of each component.
     *
-    * The min label travels one hop per round, so `iterations` rounds
-    * resolve components of diameter ≤ iterations — near-dup clusters
-    * are tight in practice (diameter 1-3), so the default of 8 is
-    * generous. Each round is two hash joins on ids; no
-    * driver-side graph state, so it scales with the cluster like any
-    * join (this is the standard large-scale alternative to
-    * driver-resident union-find).
+    * The min label travels one hop per round, and one more round
+    * observes that nothing changed, so `iterations` rounds resolve
+    * components of diameter < iterations — near-dup clusters are tight
+    * in practice (diameter 1-3), so the default of 8 is generous; a
+    * wider component throws [[ComponentsNotConverged]]. Each round is
+    * two hash joins on ids; no driver-side graph state, so it scales
+    * with the cluster like any join (this is the standard large-scale
+    * alternative to driver-resident union-find).
     */
   def dropNearDuplicates(docs: DataFrame, idCol: String,
                          pairs: DataFrame, iterations: Int = 8): DataFrame = {
@@ -424,74 +425,43 @@ object Dedup {
 
   /** Connected-component labels `(a, lbl)` for every id in `docs`,
     * lbl = the component's minimum id — the shared core of the two
-    * survivor policies above. */
+    * survivor policies above. A round carries a per-row "label changed"
+    * flag, so its convergence check is one aggregate over the cut frame;
+    * a component whose diameter needs more than `iterations` rounds
+    * fails with [[ComponentsNotConverged]] rather than keeping extra
+    * survivors. */
   private def ccLabels(docs: DataFrame, idCol: String,
                        pairs: DataFrame, iterations: Int): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val edges = pairs.select(col("ida").as("a"), col("idb").as("b"))
       .union(pairs.select(col("idb").as("a"), col("ida").as("b")))
       .distinct()
-      .persist(lvl)
-    // Iterative algorithm: each round is materialized through ONE Spark
-    // action. `labels` appears three times per round, so a lazy lineage
-    // doubles in size every iteration (2^n plan blowup, measured 76 s
-    // for what is now ~2 s at sf0.1); the checkpoint truncates the
-    // lineage and materializes on the SAME job that computes the
-    // convergence aggregate — the earlier two-actions-per-round
-    // formulation had unstable tail latency under load (a dozen+
-    // scheduler round-trips at up to 2× per round).
-    //
-    // Fault tolerance at scale: localCheckpoint stores blocks on
-    // executors only — an executor loss mid-run makes them
-    // unrecomputable. When the cluster has a checkpoint dir configured
-    // (sc.setCheckpointDir, standard on long-running 100 TB jobs),
-    // reliable checkpoint() is used instead, surviving executor loss;
-    // local[N] iteration and tests take the cheap local path. On the
-    // reliable path the frame is persisted FIRST so the checkpoint
-    // write job reads cached blocks instead of recomputing the round's
-    // joins from scratch (Dataset.checkpoint launches a second job);
-    // each round unpersists the previous round's cache entry. Local-
-    // checkpoint blocks are reclaimed by the ContextCleaner once each
-    // round's frame is dereferenced (Dataset.unpersist cannot free
-    // them — they are not CacheManager entries); reliable-checkpoint
-    // files honor spark.cleaner.referenceTracking.cleanCheckpoints.
-    val sc = docs.sparkSession.sparkContext
-    val reliable = sc.getCheckpointDir.isDefined
-    var prevCached: Option[DataFrame] = None
-    def ckpt(df: DataFrame, eager: Boolean): DataFrame =
-      if (reliable) {
-        df.persist(lvl)
-        val out = df.checkpoint(eager)
-        prevCached.foreach(_.unpersist())
-        prevCached = Some(df)
-        out
-      } else df.localCheckpoint(eager)
-    var labels = ckpt(docs.select(col(idCol).as("a"), col(idCol).as("lbl")), eager = true)
-    var converged = false
-    var i = 0
-    while (i < iterations && !converged) {
-      val neighbourLbl = edges
-        .join(labels.select(col("a").as("b"), col("lbl")), Seq("b"))
-        .select(col("a"), col("lbl"))
-      val next = labels.union(neighbourLbl)
-        .groupBy("a").agg(min(col("lbl")).as("lbl"))
-      // carry the per-row "label changed" flag so convergence is an
-      // aggregate of the materialized frame, not a second job
-      val merged = ckpt(next.join(labels.withColumnRenamed("lbl", "prev"), Seq("a"))
-        .select(col("a"), col("lbl"), (col("lbl") =!= col("prev")).as("chg")),
-        eager = false)
-      val changed = merged.agg(coalesce(max(col("chg")), lit(false)))
-        .head.getBoolean(0)
-      labels = merged.select("a", "lbl")
-      converged = !changed
-      i += 1
-    }
-    prevCached.foreach(_.unpersist())
-    // labels are checkpoint-materialized by the convergence action of
-    // the last round — the edge cache can go before the caller consumes
-    edges.unpersist()
-    labels
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (components, _, converged) = FixedPoint.run[DataFrame](docs.sparkSession,
+      iterations, earlyStop = true,
+      init = round => round.cut(docs.select(col(idCol).as("a"), col(idCol).as("lbl"))),
+      step = (round, prev) => {
+        val labels = prev.select("a", "lbl")
+        val neighbourLbl = edges
+          .join(labels.select(col("a").as("b"), col("lbl")), Seq("b"))
+          .select(col("a"), col("lbl"))
+        val next = labels.union(neighbourLbl)
+          .groupBy("a").agg(min(col("lbl")).as("lbl"))
+        round.cut(next.join(labels.withColumnRenamed("lbl", "prev"), Seq("a"))
+          .select(col("a"), col("lbl"), (col("lbl") =!= col("prev")).as("chg")))
+      },
+      certificate = Some((_, next) =>
+        !next.agg(coalesce(max(col("chg")), lit(false))).head.getBoolean(0)),
+      finish = _.select("a", "lbl"),
+      inputs = Seq(edges))
+    if (!converged) throw ComponentsNotConverged(iterations)
+    components
   }
+
+  /** [[dropNearDuplicates]] / [[dropNearDuplicatesBy]] ran out of rounds
+    * before every component's minimum id reached all its members. */
+  final case class ComponentsNotConverged(iterations: Int) extends RuntimeException(
+    s"near-duplicate components did not converge within iterations = $iterations " +
+      "(a component's diameter needs more rounds); raise `iterations`")
 
   /** Benchmark-contamination report: for each document in the `test`
     * split, how many of its distinct n-gram shingles appear in ANY

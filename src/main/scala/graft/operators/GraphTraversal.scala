@@ -12,10 +12,8 @@ import org.apache.spark.sql.functions._
   * Per round the frontier joins edges on src (shuffle keyed on the
   * join key, |frontier-adjacent edges| rows), dedups, and anti-joins
   * the visited set so a node keeps its FIRST (minimal) hop count —
-  * exactly BFS layering. Rounds are cut with checkpoints (reliable
-  * when a cluster checkpoint dir is set, local otherwise) because the
-  * visited frame re-enters the next round's plan twice — lineage would
-  * double per hop.
+  * exactly BFS layering. Hops run on [[FixedPoint]]: the visited frame
+  * re-enters the next round's plan twice, so each layer is cut.
   *
   * maxHops bounds both the iteration count and the state: visited
   * never exceeds |V| rows of (node, hop). Nothing quadratic, no
@@ -27,8 +25,8 @@ object GraphTraversal {
     * within `maxHops` edges: `(node, hops)`, one row per reached node,
     * hops = length of the shortest path. `directed = false` (default)
     * traverses edges both ways.
-    */
-  /** @param maxBroadcastNodes while the visited set stays at or under
+    *
+    * @param maxBroadcastNodes while the visited set stays at or under
     *        this many rows, the frontier probe and the visited
     *        anti-join BROADCAST — checkpointed frames carry no size
     *        statistics, so without the hint every hop sort-merge-joins
@@ -41,50 +39,31 @@ object GraphTraversal {
               maxHops: Int, directed: Boolean = false,
               maxBroadcastNodes: Long = 10_000_000L): DataFrame = {
     require(maxHops >= 0, "bfsHops: maxHops must be >= 0")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val fwd = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val adj = (if (directed) fwd
                else fwd.unionByName(
                  edges.select(col(dstCol).as("src"), col(srcCol).as("dst"))))
-      .distinct().persist(lvl)
+      .distinct().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    val sc = edges.sparkSession.sparkContext
-    val reliable = sc.getCheckpointDir.isDefined
-    // local mode: LAZY mark — the count() every layer already needs is
-    // the materializing action, so each hop runs ONE job instead of a
-    // checkpoint job plus a count job. Reliable mode stays eager (the
-    // files must hit stable storage before the hop is declared done).
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(false)
-
-    // layers are checkpointed individually; `visited` is their UNION —
-    // re-checkpointing the growing union every hop would rewrite all
-    // prior layers each round
-    var layers = List(ckpt(seeds.select(col(seedCol).as("node")).distinct()
-      .withColumn("hops", lit(0))))
-    var frontier = layers.head.select(col("node"))
-    // layer counts are free (the checkpoint materializes anyway) and
-    // drive both the early exit and the broadcast decision
-    var visitedCount = layers.head.count()
-    var frontierCount = visitedCount
-    def hint(df: DataFrame): DataFrame =
-      if (visitedCount <= maxBroadcastNodes) broadcast(df) else df
-    var h = 0
-    while (h < maxHops && frontierCount > 0) {
-      h += 1
-      val visitedNodes = layers.map(_.select(col("node"))).reduce(_ unionByName _)
-      val next = hint(frontier).join(adj, frontier("node") === adj("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(hint(visitedNodes), Seq("node"), "left_anti")
-      val layer = ckpt(next.withColumn("hops", lit(h)))
-      frontierCount = layer.count()
-      if (frontierCount > 0) {
-        visitedCount += frontierCount
-        layers = layer :: layers
-        frontier = layer.select(col("node"))
-      }
-    }
-    adj.unpersist()
-    layers.map(l => l.select(col("node"), col("hops"))).reduce(_ unionByName _)
+    // layers are cut individually; `visited` is their UNION —
+    // re-cutting the growing union every hop would rewrite all prior
+    // layers each round. A layer's count is the hop's one job: it ends
+    // the walk on an empty layer and sizes the broadcast decision.
+    FixedPoint.run[List[FixedPoint.Counted]](edges.sparkSession, maxHops, earlyStop = true,
+      init = round => List(new FixedPoint.Counted(round.cut(
+        seeds.select(col(seedCol).as("node")).distinct().withColumn("hops", lit(0))))),
+      step = (round, layers) => {
+        def hint(df: DataFrame): DataFrame =
+          if (layers.map(_.rows).sum <= maxBroadcastNodes) broadcast(df) else df
+        val frontier = layers.head.df.select(col("node"))
+        val visited = layers.map(_.df.select(col("node"))).reduce(_ unionByName _)
+        val next = hint(frontier).join(adj, frontier("node") === adj("src"))
+          .select(col("dst").as("node")).distinct()
+          .join(hint(visited), Seq("node"), "left_anti")
+        new FixedPoint.Counted(round.cut(next.withColumn("hops", lit(layers.size)))) :: layers
+      },
+      certificate = Some((_, layers) => layers.head.rows == 0L),
+      finish = _.map(_.df).reduce(_ unionByName _),
+      inputs = Seq(adj))._1
   }
 }

@@ -23,19 +23,15 @@ import org.apache.spark.sql.functions._
   * the 1-row max rides as a BROADCAST aggregate (crossJoin) rather
   * than a per-round driver fold. Each round ends with ONE tiny driver
   * action — a |V|-keyed join of the new and previous hub frames
-  * aggregated to max|Δh| — which (a) materializes the round's lazily-
-  * cut chain so the round's raw half-round frames can be released
-  * IMMEDIATELY (at most the current round's TWO raw |V|-row frames
-  * are ever cached, where the round-9 form buffered all 2·iters of
-  * them to the end), and (b) doubles as the CONVERGENCE CERTIFICATE:
+  * aggregated to max|Δh| — the [[FixedPoint]] CONVERGENCE CERTIFICATE:
   * [[scoresConverged]] with `earlyStop` skips the remaining rounds
   * once max|Δh| ≤ `tol` (default 0.0 — a PROVEN fixpoint, so skipped
   * rounds are exact no-ops and the output is identical to running
-  * them). Vertex frames broadcast below `maxBroadcastNodes`, rounds
-  * cut with the shared [[RoundCheckpointer]]. Nodes nothing points at
-  * hold authority 0; pure sinks hold hub 0 — both kept (left join,
-  * coalesce), since "this node has no hub role" is signal, not
-  * absence. Returns `(node, hub, auth)` unrounded; callers round for
+  * them). Vertex frames broadcast below `maxBroadcastNodes`; at most
+  * the current round's two raw half-round frames are cached. Nodes
+  * nothing points at hold authority 0; pure sinks hold hub 0 — both
+  * kept (left join, coalesce), since "this node has no hub role" is
+  * signal, not absence. Returns `(node, hub, auth)` unrounded; callers round for
   * cross-engine comparison (only per-sum float order differs).
   */
 object Hits {
@@ -48,11 +44,8 @@ object Hits {
 
   /** [[scores]] plus the convergence certificate `(result, roundsRun,
     * converged)`: the per-round max|Δh| aggregate every round already
-    * pays (it is the round's materializing action) is compared against
-    * `tol`; with `earlyStop` a round whose certificate passes is the
-    * LAST round run ([[KCore.kCoreConverged]]'s contract — the check
-    * runs on the final round too, so a fixpoint reached exactly at the
-    * cap still certifies). At the default `tol = 0.0` the fixpoint is
+    * pays is compared against `tol` (the [[FixedPoint]] certificate
+    * contract). At the default `tol = 0.0` the fixpoint is
     * exact, so early-stopped output is bit-identical to the uncapped
     * run. */
   def scoresConverged(edges: DataFrame, srcCol: String, dstCol: String,
@@ -71,73 +64,47 @@ object Hits {
     require(nNodes > 0, "hits: empty edge set — no scores to compute")
     val small = nNodes <= maxBroadcastNodes
     def hint(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val ckpt = new RoundCheckpointer(
-      edges.sparkSession.sparkContext.getCheckpointDir.isDefined)
 
-    var h = ckpt(nodes.select(col("node"), lit(1.0).as("h")))
-    var a: DataFrame = null
-    // the CURRENT round's raw half-round frames: persisted because each
-    // feeds both its max-aggregate branch and the normalize join;
-    // released as soon as the NEXT certificate action has materialized
-    // the frames derived from them — never more than these two live
-    var liveRaws: Seq[DataFrame] = Nil
-    var r = 0
-    var converged = false
-    while (r < iters && !(earlyStop && converged)) {
-      // the previous round's certificate action materialized everything
-      // derived from its raws — release them BEFORE persisting this
-      // round's pair, so at most two raw frames are ever cached
-      liveRaws.foreach(_.unpersist())
-      liveRaws = Nil
-      // authority half-round: a(v) = Σ h(u) over in-edges, normalized
-      // by the broadcast 1-row max
-      val aRaw = e
-        .join(hint(h.select(col("node").as("src"), col("h"))), Seq("src"))
-        .groupBy(col("dst").as("node")).agg(sum(col("h")).as("ar"))
-        .persist(lvl)
-      // populate before the normalize plan runs: its two consumers (the
-      // per-node join and the 1-row max) both ride in as BROADCAST
-      // builds, which execute concurrently ahead of the main stages —
-      // against an unpopulated cache each recomputes the |E|-keyed
-      // half-round join (guide §5; the Dedup/GraphStats discipline)
-      aRaw.count()
-      a = ckpt(nodes
-        .join(hint(aRaw), Seq("node"), "left")
-        .crossJoin(broadcast(aRaw.agg(max(col("ar")).as("ma"))))
-        .select(col("node"),
-          coalesce(col("ar") / col("ma"), lit(0.0)).as("a")))
-      // hub half-round: h(u) = Σ a(v) over out-edges, max-normalized
-      val hRaw = e
-        .join(hint(a.select(col("node").as("dst"), col("a"))), Seq("dst"))
-        .groupBy(col("src").as("node")).agg(sum(col("a")).as("hr"))
-        .persist(lvl)
-      hRaw.count() // same two-broadcast-consumer discipline as aRaw
-      val hPrev = h
-      h = ckpt(nodes
-        .join(hint(hRaw), Seq("node"), "left")
-        .crossJoin(broadcast(hRaw.agg(max(col("hr")).as("mh"))))
-        .select(col("node"),
-          coalesce(col("hr") / col("mh"), lit(0.0)).as("h")))
-      r += 1
-      // the round's ONE driver action: max|Δh| over a |V|-keyed join of
-      // two cut frames — materializes the whole round chain (so the
-      // raws below can go) and is the convergence certificate
-      val dh = h
-        .join(hPrev.select(col("node"), col("h").as("__h0")), Seq("node"))
-        .agg(max(abs(col("h") - col("__h0"))).as("dh"))
-        .head().getDouble(0)
-      liveRaws = Seq(aRaw, hRaw)
-      // the certificate is recorded unconditionally — `earlyStop` only
-      // decides whether a passing round is the LAST round run, so a cap
-      // run that happens to end exactly at the fixpoint still certifies
-      converged = dh <= tol
+    // one half-round: score `out` of each node = Σ `score` of `prev` over
+    // the edges reaching it `from` the other end, normalized by the
+    // broadcast 1-row max. The raw frame feeds both the per-node join and
+    // the max, so it is cached and populated first: both consumers ride
+    // in as BROADCAST builds that run concurrently ahead of the main
+    // stages, and against an unpopulated cache each would recompute the
+    // |E|-keyed join
+    def half(round: FixedPoint.Round, prev: DataFrame, score: String,
+             from: String, to: String, out: String): DataFrame = {
+      val raw = round.cache(e
+        .join(hint(prev.select(col("node").as(from), col(score))), Seq(from))
+        .groupBy(col(to).as("node")).agg(sum(col(score)).as("raw")))
+      raw.count()
+      round.cut(nodes
+        .join(hint(raw), Seq("node"), "left")
+        .crossJoin(broadcast(raw.agg(max(col("raw")).as("mx"))))
+        .select(col("node"), coalesce(col("raw") / col("mx"), lit(0.0)).as(out)))
     }
-    val out = h.join(a, Seq("node"))
-      .select(col("node"), col("h").as("hub"), col("a").as("auth"))
-      .localCheckpoint(true)
-    liveRaws.foreach(_.unpersist())
-    ckpt.release()
-    e.unpersist(); nodes.unpersist()
-    (out, r, converged)
+
+    // state (h, a); a has no value before the first round
+    FixedPoint.run[(DataFrame, DataFrame)](edges.sparkSession, iters, earlyStop,
+      init = round => (round.cut(nodes.select(col("node"), lit(1.0).as("h"))),
+        nodes.select(col("node"), lit(0.0).as("a"))),
+      // authority a(v) = Σ h(u) over in-edges, then hub h(u) = Σ a(v)
+      // over out-edges
+      step = { case (round, (h, _)) =>
+        val a = half(round, h, "h", from = "src", to = "dst", out = "a")
+        (half(round, a, "a", from = "dst", to = "src", out = "h"), a)
+      },
+      // max|Δh| over a |V|-keyed join of two cut frames: the round's one
+      // driver action
+      certificate = Some { case ((hPrev, _), (h, _)) =>
+        h.join(hPrev.select(col("node"), col("h").as("__h0")), Seq("node"))
+          .agg(max(abs(col("h") - col("__h0"))).as("dh"))
+          .head().getDouble(0) <= tol
+      },
+      finish = { case (h, a) =>
+        h.join(a, Seq("node"))
+          .select(col("node"), col("h").as("hub"), col("a").as("auth"))
+      },
+      inputs = Seq(e, nodes))
   }
 }

@@ -19,11 +19,11 @@ import org.apache.spark.sql.functions._
   * semi-joins that drop edges touching a peeled endpoint — |E|-keyed
   * joins, no driver-side graph state. The survivor frame is |V|-sized
   * and broadcasts below `maxBroadcastNodes` (the [[PageRank.ranks]]
-  * size-statistics rationale). Rounds are cut with the shared
-  * [[RoundCheckpointer]] discipline. A fixed `rounds` cap keeps the
-  * result an exact closed form of (edges, k, rounds) — replayable by
-  * an unrolled oracle — with an optional early-stop certificate in
-  * the [[LabelPropagation.communitiesConverged]] style.
+  * size-statistics rationale). Rounds run on [[FixedPoint]]. A fixed
+  * `rounds` cap keeps the result an exact closed form of (edges, k,
+  * rounds) — replayable by an unrolled oracle — with an optional
+  * early-stop certificate in the
+  * [[LabelPropagation.communitiesConverged]] style.
   */
 object KCore {
 
@@ -61,45 +61,27 @@ object KCore {
     val sym = raw.unionByName(raw.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val small = {
-      // one action: |V| of the symmetrized graph for the hint decision
-      val n = sym.select(col("src")).distinct().count()
-      n <= maxBroadcastNodes
-    }
+    // one action: |V| of the symmetrized graph for the hint decision
+    val small = sym.select(col("src")).distinct().count() <= maxBroadcastNodes
     def hint(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val ckpt = new RoundCheckpointer(
-      edges.sparkSession.sparkContext.getCheckpointDir.isDefined)
 
-    var e = ckpt(sym)
-    // a peeled node always owned >= 1 residual edge, so "no node
-    // peeled" is EXACTLY "edge count unchanged" — one count per round
-    // that doubles as the materializer of the new frame (the LPA
-    // flips-check discipline); the initial count is the only extra job
-    var eCnt = if (earlyStop) e.count() else -1L
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      // symmetric edges: out-degree on src IS the undirected degree
-      val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src").as("node"))
-      val next = ckpt(e
-        .join(hint(keep.select(col("node").as("src"))), Seq("src"), "left_semi")
-        .join(hint(keep.select(col("node").as("dst"))), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst")))
-      r += 1
-      if (earlyStop) {
-        val c = next.count()
-        converged = c == eCnt
-        eCnt = c
-      }
-      e = next
-    }
-    val out = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
-    // materialize before the round caches release (the shared
-    // final-frame discipline)
-    val materialized = out.localCheckpoint(true)
-    ckpt.release()
-    sym.unpersist()
-    (materialized, r, converged)
+    // a peeled node always owned >= 1 residual edge, so "no node peeled"
+    // is EXACTLY "edge count unchanged": with earlyStop, one count per
+    // round
+    FixedPoint.run[FixedPoint.Counted](edges.sparkSession, rounds, earlyStop,
+      init = round => new FixedPoint.Counted(round.cut(sym)),
+      step = (round, s) => {
+        // symmetric edges: out-degree on src IS the undirected degree
+        val e = s.df
+        val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k).select(col("src").as("node"))
+        new FixedPoint.Counted(round.cut(e
+          .join(hint(keep.select(col("node").as("src"))), Seq("src"), "left_semi")
+          .join(hint(keep.select(col("node").as("dst"))), Seq("dst"), "left_semi")
+          .select(col("src"), col("dst"))))
+      },
+      certificate = Option.when(earlyStop)((prev, next) => prev.rows == next.rows),
+      finish = s => s.df.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree")),
+      inputs = Seq(sym))
   }
 }

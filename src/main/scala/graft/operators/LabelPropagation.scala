@@ -29,10 +29,8 @@ import org.apache.spark.sql.functions._
   * keyed on src plus two hash aggs. Vertex-state joins broadcast below
   * `maxBroadcastNodes` (checkpointed frames carry no size statistics —
   * the [[PageRank]] lesson); above it they stay shuffled, correct for
-  * web-scale graphs. Rounds are cut with checkpoints (reliable when a
-  * cluster checkpoint dir is set, lazy-local otherwise) because the
-  * label frame re-enters the next round's plan — lineage would double
-  * per iteration.
+  * web-scale graphs. Rounds run on [[FixedPoint]]: the label frame
+  * re-enters the next round's plan, so each round is cut.
   */
 object LabelPropagation {
 
@@ -61,9 +59,8 @@ object LabelPropagation {
     * round is a no-op — deep graphs stop paying unneeded rounds, and
     * `converged = true` certifies the fixpoint (`roundsRun` < `iters`
     * tells a shallow graph it finished early). With `earlyStop = false`
-    * the local path keeps its zero-jobs-per-round laziness (the
-    * caller's single action materializes the chain) and
-    * `converged = false` is reported uninspected.
+    * no round runs a job of its own and `converged = false` is reported
+    * uninspected.
     */
   def communitiesConverged(edges: DataFrame, srcCol: String, dstCol: String,
                            iters: Int = 3, directed: Boolean = false,
@@ -89,63 +86,35 @@ object LabelPropagation {
     val small = nodes.count() <= maxBroadcastNodes
     def hint(df: DataFrame): DataFrame = if (small) broadcast(df) else df
 
-    // LPA needs no per-round scalar (unlike PageRank's dangling mass),
-    // so without earlyStop local mode marks rounds lazily and the
-    // caller's single action materializes the whole chain — zero extra
-    // jobs per iteration. Reliable mode persists BEFORE the eager
-    // checkpoint so the checkpoint's write job reads the cache instead
-    // of recomputing the round's joins — the shared
-    // [[RoundCheckpointer]] discipline.
-    val ckpt = new RoundCheckpointer(
-      edges.sparkSession.sparkContext.getCheckpointDir.isDefined)
-
-    var lab = ckpt(nodes.select(col("node"), col("node").as("lbl")))
-    var rounds = 0
-    var converged = false
-    while (rounds < iters && !converged) {
-      val votes = adj
-        .join(hint(lab.select(col("node").as("src"), col("lbl"))), Seq("src"))
-        .groupBy(col("dst").as("node"), col("lbl"))
-        .agg(count(lit(1)).as("cnt"))
-      // most frequent neighbor label, smallest label on ties: min_by
-      // over the (-cnt, lbl) pair — one hash agg, no window sort.
-      // (-cnt is safe: cnt ≤ |V| can never approach Long.MinValue.)
-      val adopt = votes.groupBy("node")
-        .agg(min_by(col("lbl"),
-          struct((lit(0L) - col("cnt")).as("nc"), col("lbl"))).as("lbl"))
-      // undirected: the symmetric adjacency gives every node ≥1 vote,
-      // so `adopt` IS the next label frame — no carry-forward join.
-      // Directed: a node with no in-edges gets no votes and must keep
-      // its previous label (coalesce through a left join).
-      val next = ckpt(
-        if (directed)
-          lab.select(col("node"), col("lbl").as("prev"))
-            .join(adopt, Seq("node"), "left")
-            .select(col("node"), coalesce(col("lbl"), col("prev")).as("lbl"))
-        else adopt)
-      rounds += 1
-      if (earlyStop) {
-        // |V|-row equi-join on the node key + one count — both label
-        // frames are checkpoint-cut, so the comparison reads two
-        // materialized |V| frames, never the round chain. The check
-        // runs on the FINAL round too: a fixpoint reached exactly at
-        // round `iters` must certify converged=true, not depend on
-        // whether the caller's cap happened to leave headroom
-        val flips = next
-          .join(lab.select(col("node"), col("lbl").as("prev")), Seq("node"))
-          .filter(col("lbl") =!= col("prev")).count()
-        converged = flips == 0L
-      }
-      lab = next
-    }
-    val out = lab.select(col("node"), col("lbl").as("community"))
-    // materialize the final frame BEFORE releasing its inputs: on the
-    // lazy local-checkpoint path the caller's action would otherwise
-    // re-run the whole round chain (and adj's distinct union) against
-    // unpersisted inputs (round-8 advice)
-    if (!ckpt.reliable) lab.count()
-    ckpt.release()
-    adj.unpersist(); nodes.unpersist()
-    (out, rounds, converged)
+    FixedPoint.run[DataFrame](edges.sparkSession, iters, earlyStop,
+      init = round => round.cut(nodes.select(col("node"), col("node").as("lbl"))),
+      step = (round, lab) => {
+        val votes = adj
+          .join(hint(lab.select(col("node").as("src"), col("lbl"))), Seq("src"))
+          .groupBy(col("dst").as("node"), col("lbl"))
+          .agg(count(lit(1)).as("cnt"))
+        // most frequent neighbor label, smallest label on ties: min_by
+        // over the (-cnt, lbl) pair — one hash agg, no window sort.
+        // (-cnt is safe: cnt ≤ |V| can never approach Long.MinValue.)
+        val adopt = votes.groupBy("node")
+          .agg(min_by(col("lbl"),
+            struct((lit(0L) - col("cnt")).as("nc"), col("lbl"))).as("lbl"))
+        // undirected: the symmetric adjacency gives every node ≥1 vote,
+        // so `adopt` IS the next label frame — no carry-forward join.
+        // Directed: a node with no in-edges gets no votes and must keep
+        // its previous label (coalesce through a left join).
+        round.cut(
+          if (directed)
+            lab.select(col("node"), col("lbl").as("prev"))
+              .join(adopt, Seq("node"), "left")
+              .select(col("node"), coalesce(col("lbl"), col("prev")).as("lbl"))
+          else adopt)
+      },
+      // |V|-row equi-join on the node key + one count over two cut frames
+      certificate = Option.when(earlyStop)((lab, next) =>
+        next.join(lab.select(col("node"), col("lbl").as("prev")), Seq("node"))
+          .filter(col("lbl") =!= col("prev")).count() == 0L),
+      finish = _.select(col("node"), col("lbl").as("community")),
+      inputs = Seq(adj, nodes))
   }
 }

@@ -21,11 +21,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   *
   * Scale shape: each iteration shuffles |E| contribution rows keyed on
   * dst plus |V| rank rows — never materializing anything quadratic.
-  * Like the connected-components dedup, every round is cut through a
-  * checkpoint: the rank frame appears in several places in the next
-  * round's plan, so a lazy lineage doubles per iteration (2^n plan
-  * blowup); with a cluster checkpoint dir configured the reliable
-  * path survives executor loss, local runs take localCheckpoint.
+  * Rounds run on [[FixedPoint]]: the rank frame appears in several
+  * places in the next round's plan, so every round is cut.
   */
 object PageRank {
 
@@ -61,61 +58,10 @@ object PageRank {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().persist(lvl)
     val nNodes = nodes.count() // one action: N constant + broadcast decision
-    val small = nNodes <= maxBroadcastNodes
-    def hint(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("od"))
-      .persist(lvl)
-
-    // local mode: LAZY lineage cut — the mark is what stops the 2^n
-    // plan blowup, and the next iteration's dangling-mass action is the
-    // materializer, so each round runs exactly ONE job. Reliable mode
-    // keeps eager checkpoints (executor-loss recovery needs the files
-    // on stable storage before the round is declared done). Shared
-    // discipline: [[RoundCheckpointer]].
-    val ckpt = new RoundCheckpointer(
-      edges.sparkSession.sparkContext.getCheckpointDir.isDefined)
-
-    var r = ckpt(nodes.select(col("node"), lit(1.0 / nNodes).as("r")))
-    // previous round's contribution cache: released only after the NEXT
-    // round's action has materialized the rank frame built from it
-    var prevCAll: Option[DataFrame] = None
-    for (_ <- 1 to iters) {
-      // Σ_{u→v} r(u)/outdeg(u), keyed on dst — partial agg map-side;
-      // rank and degree frames are |V|-sized → broadcast when small.
-      // ROLLUP(dst) fuses the dangling-mass reduction into this same
-      // aggregation: the grand-total row (dst NULL — edge dsts are
-      // never null) carries Σc = the rank mass on NON-dangling nodes,
-      // so D = Σr − Σc = 1 − Σc (the loop invariant Σr = 1 holds to
-      // float residue, which this identity actively re-normalizes
-      // instead of letting it drift). Replaces the former per-iteration
-      // anti-join-over-ranks job; the Expand doubling |E| rows is
-      // map-side-combined before any shuffle.
-      val cAll = e
-        .join(hint(r.select(col("node").as("src"), col("r"))), Seq("src"))
-        .join(hint(deg), Seq("src"))
-        .rollup(col("dst"))
-        .agg(sum(col("r") / col("od")).as("c"))
-        .persist(lvl)
-      // ONE row (planning-sized, the Stats offsets pattern): fold the
-      // dangling mass into a literal so the rank-update job carries no
-      // broadcast subquery. This head() is the round's single job: it
-      // materializes cAll AND the lazily-marked previous rank frame.
-      val dm = 1.0 - cAll.filter(col("dst").isNull)
-        .select(coalesce(col("c"), lit(0.0))).head().getDouble(0)
-      prevCAll.foreach(_.unpersist()) // prev rank frame is now stored
-      prevCAll = Some(cAll)
-      r = ckpt(nodes
-        .join(hint(cAll.filter(col("dst").isNotNull)
-          .select(col("dst").as("node"), col("c"))), Seq("node"), "left")
-        .select(col("node"),
-          (lit((1.0 - damping) / nNodes) +
-            lit(damping) * (coalesce(col("c"), lit(0.0)) +
-              lit(dm / nNodes))).as("r")))
-    }
-    if (!ckpt.reliable) r.count() // materialize the last frame before its inputs go
-    prevCAll.foreach(_.unpersist())
-    ckpt.release()
-    e.unpersist(); nodes.unpersist(); deg.unpersist()
+    val r = propagate(e, nodes, lit(1.0 / nNodes), iters,
+      nNodes <= maxBroadcastNodes, inputs = Seq(e, nodes))(dm =>
+      lit((1.0 - damping) / nNodes) +
+        lit(damping) * (coalesce(col("c"), lit(0.0)) + lit(dm / nNodes)))
     (r, nNodes)
   }
 
@@ -136,10 +82,9 @@ object PageRank {
     * exactly (1-d)·0 + … = 0 at every round: the score IS the trust
     * reachability.
     *
-    * Same Pregel-in-DataFrame scale shape, checkpoint discipline, and
-    * ROLLUP dangling fusion as [[ranks]] (one |E|-join + one
-    * partial-agged aggregation job per round; vertex joins broadcast
-    * below `maxBroadcastNodes`) — the methods stay separate because
+    * Same round loop as [[ranks]] (one |E|-join + one partial-agged
+    * ROLLUP aggregation job per round; vertex joins broadcast below
+    * `maxBroadcastNodes`); only the rank-update column differs, since
     * the uniform path's float constants ((1-d)/N precomputed on the
     * driver) are oracle-pinned and must not change form.
     */
@@ -175,40 +120,53 @@ object PageRank {
       .select(col("node"),
         when(col("__s").isNotNull, lit(1.0 / nSeeds)).otherwise(lit(0.0)).as("p"))
       .persist(lvl)
-    val small = nNodes <= maxBroadcastNodes
+    val r = propagate(e, nodesP, col("p"), iters, nNodes <= maxBroadcastNodes,
+      inputs = Seq(e, flagged, nodesP))(dm =>
+      lit(1.0 - damping) * col("p") +
+        lit(damping) * (coalesce(col("c"), lit(0.0)) + lit(dm) * col("p")))
+    (r, nNodes)
+  }
+
+  /** The loop [[ranks]] and [[trustRanks]] share: `iters` rounds over
+    * `vertices` (`node` plus whatever `update` reads) from rank `r0`.
+    * `update(dm)` is the rank column given the round's dangling mass
+    * `dm`; each caller keeps its own oracle-pinned float form.
+    *
+    * Σ_{u→v} r(u)/outdeg(u) is keyed on dst, partial-agged map-side;
+    * rank and degree frames are |V|-sized → broadcast when `small`.
+    * ROLLUP(dst) fuses the dangling-mass reduction into this same
+    * aggregation: the grand-total row (dst NULL — edge dsts are never
+    * null) carries Σc = the rank mass on NON-dangling nodes, so
+    * D = Σr − Σc = 1 − Σc (the loop invariant Σr = 1 holds to float
+    * residue, which this identity actively re-normalizes instead of
+    * letting it drift). The Expand doubling |E| rows is
+    * map-side-combined before any shuffle. The one-row dangling mass is
+    * folded into a literal on the driver (the Stats offsets pattern),
+    * so the rank update carries no broadcast subquery; that `head()` is
+    * the round's single job. */
+  private def propagate(e: DataFrame, vertices: DataFrame, r0: Column,
+                        iters: Int, small: Boolean, inputs: Seq[DataFrame])(
+                        update: Double => Column): DataFrame = {
     def hint(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("od"))
-      .persist(lvl)
-    val ckpt = new RoundCheckpointer(
-      edges.sparkSession.sparkContext.getCheckpointDir.isDefined)
-
-    var r = ckpt(nodesP.select(col("node"), col("p").as("r")))
-    var prevCAll: Option[DataFrame] = None
-    for (_ <- 1 to iters) {
-      // identical rollup-fused contribution/dangling job as ranks
-      val cAll = e
-        .join(hint(r.select(col("node").as("src"), col("r"))), Seq("src"))
-        .join(hint(deg), Seq("src"))
-        .rollup(col("dst"))
-        .agg(sum(col("r") / col("od")).as("c"))
-        .persist(lvl)
-      val dm = 1.0 - cAll.filter(col("dst").isNull)
-        .select(coalesce(col("c"), lit(0.0))).head().getDouble(0)
-      prevCAll.foreach(_.unpersist())
-      prevCAll = Some(cAll)
-      r = ckpt(nodesP
-        .join(hint(cAll.filter(col("dst").isNotNull)
-          .select(col("dst").as("node"), col("c"))), Seq("node"), "left")
-        .select(col("node"),
-          (lit(1.0 - damping) * col("p") +
-            lit(damping) * (coalesce(col("c"), lit(0.0)) +
-              lit(dm) * col("p"))).as("r")))
-    }
-    if (!ckpt.reliable) r.count()
-    prevCAll.foreach(_.unpersist())
-    ckpt.release()
-    e.unpersist(); flagged.unpersist(); nodesP.unpersist(); deg.unpersist()
-    (r, nNodes)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    FixedPoint.run[DataFrame](e.sparkSession, iters, earlyStop = false,
+      init = round => round.cut(vertices.select(col("node"), r0.as("r"))),
+      step = (round, r) => {
+        val cAll = round.cache(e
+          .join(hint(r.select(col("node").as("src"), col("r"))), Seq("src"))
+          .join(hint(deg), Seq("src"))
+          .rollup(col("dst"))
+          .agg(sum(col("r") / col("od")).as("c")))
+        val dm = 1.0 - cAll.filter(col("dst").isNull)
+          .select(coalesce(col("c"), lit(0.0))).head().getDouble(0)
+        round.cut(vertices
+          .join(hint(cAll.filter(col("dst").isNotNull)
+            .select(col("dst").as("node"), col("c"))), Seq("node"), "left")
+          .select(col("node"), update(dm).as("r")))
+      },
+      finish = identity,
+      inputs = inputs :+ deg)._1
   }
 
   /** [[trustRanks]] scaled like [[relativeRanks]] (rank·N, so 1.0 =
