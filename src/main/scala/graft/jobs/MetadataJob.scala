@@ -1,6 +1,7 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 import graft.core.ScopedConf
 import graft.operators.GraphExpansion
@@ -9,7 +10,8 @@ import graft.sources.{CsvGraphStage, MetadataSource, SqsPublisher}
 /** Job orchestration (SURVEY §2.A rows C1-C3, §3): the reference's
   * extract → group → expand → stage-CSV → publish lifecycle
   * (job/sample_mysql_aws_sqs_job.py:38-82, customized_job.py:53-92)
-  * as one lazy Spark plan with two actions (stage write; publish).
+  * as one Spark plan cut once after expansion, with two stage writes
+  * and the publish.
   *
   * Config contract (dotted scopes, mirroring the reference's):
   *   extractor.jdbc.url / extractor.jdbc.query   — or —
@@ -62,13 +64,19 @@ final class MetadataJob(spark: SparkSession, conf: ScopedConf,
     }
   }
 
-  /** Full lifecycle: extract → expand → stage → publish. */
+  /** Full lifecycle: extract → expand → stage → publish. The expanded
+    * tables are cut once with a lazy `localCheckpoint`: the node write
+    * stores them and the relation write reads them back instead of
+    * re-scanning and re-aggregating the catalog. The cut is released
+    * after the relation write, also when a write fails. */
   def launch(): Unit =
     try {
       val loader = conf.scoped("loader.csv")
-      val tables = GraphExpansion.tableMetadata(spark, extract())
-      CsvGraphStage.writeNodes(GraphExpansion.nodes(spark, tables), loader("node_dir"))
-      CsvGraphStage.writeRelations(GraphExpansion.relations(spark, tables), loader("relation_dir"))
+      val tables = GraphExpansion.tableMetadata(spark, extract()).localCheckpoint(false)
+      try {
+        CsvGraphStage.writeNodes(GraphExpansion.nodes(spark, tables), loader("node_dir"))
+        CsvGraphStage.writeRelations(GraphExpansion.relations(spark, tables), loader("relation_dir"))
+      } finally release(tables)
       publishStaged()
       succeeded += 1
       emit("success")
@@ -79,6 +87,14 @@ final class MetadataJob(spark: SparkSession, conf: ScopedConf,
         throw e
     }
 
+  /** Drop the blocks a `localCheckpoint` stored: the cut's RDD, found
+    * under the Dataset's plan. */
+  private def release(cut: Dataset[_]): Unit =
+    cut.queryExecution.analyzed.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
   /** Publisher-only mode: read staged CSVs and publish. The raw CSV
     * frames go to the publisher (not the typed model) so JSON keys are
     * the staged headers verbatim — KEY/LABEL/START_KEY/… — matching
@@ -86,10 +102,8 @@ final class MetadataJob(spark: SparkSession, conf: ScopedConf,
   def publishStaged(): Unit = {
     val loader = conf.scoped("loader.csv")
     val pub = conf.scoped("publisher.awssqs")
-    val nodes = spark.read.option("header", "true").option("emptyValue", "")
-      .csv(loader("node_dir"))
-    val rels = spark.read.option("header", "true").option("emptyValue", "")
-      .csv(loader("relation_dir"))
+    val nodes = CsvGraphStage.readStagedNodes(spark, loader("node_dir"))
+    val rels = CsvGraphStage.readStagedRelations(spark, loader("relation_dir"))
     val queue = pub("queue_url")
     val gid = pub.getOrElse("message_group_id", SqsPublisher.DefaultGroupId)
     if (pub.getBoolean("chunked")) SqsPublisher.publishChunked(nodes, rels, transport, queue, gid)

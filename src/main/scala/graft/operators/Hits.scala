@@ -61,6 +61,7 @@ object Hits {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().persist(lvl)
     val nNodes = nodes.count() // one action: emptiness + broadcast decision
+    if (nNodes == 0) { e.unpersist(); nodes.unpersist() }
     require(nNodes > 0, "hits: empty edge set — no scores to compute")
     val small = nNodes <= maxBroadcastNodes
     def hint(df: DataFrame): DataFrame = if (small) broadcast(df) else df

@@ -114,6 +114,7 @@ object PageRank {
     val stats = flagged.agg(count(lit(1)).as("n"), sum(col("__s")).as("s")).head()
     val nNodes = stats.getLong(0)
     val nSeeds = if (stats.isNullAt(1)) 0L else stats.getLong(1)
+    if (nSeeds == 0) { e.unpersist(); flagged.unpersist() }
     require(nSeeds > 0,
       "trustRanks: no seed node appears in the graph — empty restart vector")
     val nodesP = flagged

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -151,9 +150,9 @@ object SqsSink {
 
   private object Committed extends WriterCommitMessage
 
-  /** Per-task envelope accumulator — identical chunking discipline to
-    * publishChunked (UTF-8 byte budget, skeleton overhead, fail loudly
-    * on rows that can never fit).
+  /** Per-task writer over [[SqsPublisher.Envelopes]], the accumulator
+    * publishChunked uses (UTF-8 byte budget, skeleton overhead, fail
+    * loudly on rows that can never fit).
     *
     * Values are converted Catalyst-internal → external Scala through
     * the standard converter before JSON rendering, so a timestamp
@@ -165,15 +164,12 @@ object SqsSink {
                                     isNodes: Boolean, maxBytes: Int,
                                     dedupEpoch: Option[Long])
       extends DataWriter[InternalRow] {
-    private val cols: Seq[String] = schema.fieldNames.toSeq
     private val toExternal =
       org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(schema)
-    private val buf = ArrayBuffer.empty[String]
-    private var size = 30
+    private val envelopes =
+      new SqsPublisher.Envelopes(schema.fieldNames.toSeq, isNodes, maxBytes)(send)
 
-    private def flush(): Unit = if (buf.nonEmpty) {
-      val body = if (isNodes) SqsPublisher.envelope(buf.toSeq, Nil)
-                 else SqsPublisher.envelope(Nil, buf.toSeq)
+    private def send(body: String): Unit = {
       // CONTENT-derived dedup id (sha-256 of epoch + body, 64 hex chars,
       // inside SQS's 128-char attribute bound): a replayed epoch that
       // re-produces the same envelopes maps to the same ids regardless
@@ -188,21 +184,13 @@ object SqsSink {
         md.digest(body.getBytes("UTF-8")).map("%02x".format(_)).mkString
       }
       transport.send(queueUrl, body, groupId, dedupId)
-      buf.clear(); size = 30
     }
 
-    override def write(r: InternalRow): Unit = {
-      val vals = toExternal(r).asInstanceOf[org.apache.spark.sql.Row].toSeq
-      val j = SqsPublisher.rowJson(cols, vals)
-      val jb = j.getBytes("UTF-8").length
-      if (30 + jb > maxBytes) throw SqsPublisher.RowTooLarge(jb, maxBytes)
-      if (size + jb + 2 > maxBytes) flush()
-      buf += j
-      size += jb + 2
-    }
+    override def write(r: InternalRow): Unit =
+      envelopes.add(toExternal(r).asInstanceOf[org.apache.spark.sql.Row])
 
-    override def commit(): WriterCommitMessage = { flush(); Committed }
-    override def abort(): Unit = buf.clear()
+    override def commit(): WriterCommitMessage = { envelopes.flush(); Committed }
+    override def abort(): Unit = envelopes.discard()
     override def close(): Unit = ()
   }
 }

@@ -11,8 +11,9 @@ import graft.operators.{Dedup, GraphTraversal, Hits, KCore, LabelPropagation, Pa
 
 /** The seven iterative graph entry points share one round driver: their
   * jobs per call stay pinned, no explicit cache outlives a call, the
-  * reliable-checkpoint path gives the local path's answer, and Dedup's
-  * connected components fail loudly when the round cap is too small. */
+  * reliable-checkpoint path gives the local path's answer (a rejected
+  * input leaves no cache either), and Dedup's connected components fail
+  * loudly when the round cap is too small. */
 class FixedPointSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -90,6 +91,21 @@ class FixedPointSpec extends AnyFunSuite {
         (if (leaked != 0) Seq(s"$name: $leaked explicit caches left after return") else Nil)
     }
     assert(failures.isEmpty, failures.mkString("; "))
+  }
+
+  test("a rejected input releases the frames persisted before the check") {
+    val sc = spark.sparkContext
+    val calls: Seq[(String, () => Any)] = Seq(
+      "Hits.scoresConverged on an empty edge set" -> (() =>
+        Hits.scoresConverged(graph.limit(0), "s", "d", iters = 3)),
+      "PageRank.trustRanks with no seed in the graph" -> (() =>
+        PageRank.trustRanks(graph, "s", "d", Seq(99L).toDF("n"), "n", iters = 3)))
+    calls.foreach { case (name, call) =>
+      val baseline = GraftTestSparkAccess.explicitPersistCount(sc)
+      intercept[IllegalArgumentException](call())
+      val leaked = GraftTestSparkAccess.explicitPersistCount(sc) - baseline
+      assert(leaked == 0, s"$name: $leaked explicit caches left after the error")
+    }
   }
 
   test("reliable-checkpoint path equals the local path") {

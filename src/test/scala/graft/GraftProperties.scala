@@ -172,6 +172,25 @@ object GraftProperties extends Properties("graft") {
       cols.zip(cells).forall { case (c, v) => node.get(c).asText() == v }
     }
 
+  // any UTF-16 text: ASCII, 2- and 3-byte chars, surrogate pairs, and
+  // unpaired high and low surrogates
+  private val genUtf16: Gen[String] = Gen.listOf(Gen.frequency(
+    4 -> Gen.choose(' ', '~'),
+    2 -> Gen.choose('\u0080', '\u07ff'),
+    2 -> Gen.choose('\u0800', '\ud7ff'),
+    2 -> Gen.choose(0x10000, 0x10ffff).map(cp => new String(Character.toChars(cp))),
+    1 -> Gen.choose('\ud800', '\udfff'),
+    1 -> Gen.choose('\ue000', '\uffff'))
+    .map(_.toString)).map(_.mkString)
+
+  property("utf8Length == getBytes(UTF_8).length, on any range, lone surrogates = 1 byte") =
+    forAll(genUtf16, Gen.choose(0.0, 1.0), Gen.choose(0.0, 1.0)) { (s, a, b) =>
+      val (from, to) = ((s.length * math.min(a, b)).toInt, (s.length * math.max(a, b)).toInt)
+      SqsPublisher.utf8Length(s) == s.getBytes(java.nio.charset.StandardCharsets.UTF_8).length &&
+        SqsPublisher.utf8Length(s, from, to) ==
+          s.substring(from, to).getBytes(java.nio.charset.StandardCharsets.UTF_8).length
+    }
+
   // ---- HashReplay: the oracle's HUGEINT-mod-2^64 replay machinery ----
   //
   // These pin the SQL-side hash replay (queries/HashReplay, used by the

@@ -127,4 +127,88 @@ class SqsPublisherSpec extends AnyFunSuite {
     val relCount = bodies.map(b => "\"START_KEY\"".r.findAllIn(b).size).sum
     assert(keyCount == 500 && relCount == 100)
   }
+
+  // Hostile rows for the golden bodies: quote, backslash, control chars,
+  // CJK, emoji, a lone surrogate (Spark stores strings as UTF-8, so it
+  // reaches the publisher as '?'), null and "", sized so that 200-byte
+  // envelopes hold one to three rows each.
+  private def hostileNodes = Seq(
+    ("q\"uote", "back\\slash", "Table"),
+    ("ctl", "\u0001bell\u001f", "Table"),
+    ("nl", "line\nbreak\r\ttab", "Column"),
+    ("cjk", "\u8BD5\u9A8C\u6570\u636E\u8868", "Column"),
+    ("emoji", "\uD83D\uDE00\uD83C\uDF89", "Column"),
+    ("lone", "x\uD800y", "Column"),
+    ("null", null, "Column"),
+    ("empty", "", "Column"),
+    ("long", "\u00E9" * 30, "Description")).toDF("KEY", "name", "LABEL").coalesce(1)
+  private def hostileRelations = Seq(
+    ("q\"uote", "Table", "cjk", "Column", "COLUMN_OF", "COLUMN"),
+    ("emoji", "Column", null, "Table", "", "TABLE"),
+    ("\u8BD5", "A", "\uD83D\uDE00", "B", "x\\y", "T"))
+    .toDF("START_KEY", "START_LABEL", "END_KEY", "END_LABEL", "REVERSE_TYPE", "TYPE").coalesce(1)
+
+  // bodies the publisher produced for the hostile rows before the
+  // envelope builder was shared, byte for byte
+  private val goldenChunked = Seq(
+    "{\"nodes\": [{\"KEY\": \"q\\\"uote\", \"name\": \"back\\\\slash\", " +
+      "\"LABEL\": \"Table\"}, {\"KEY\": \"ctl\", \"name\": \"\\u0001bell\\u001f\", " +
+      "\"LABEL\": \"Table\"}], \"relations\": []}",
+    "{\"nodes\": [{\"KEY\": \"nl\", \"name\": \"line\\nbreak\\r\\ttab\", " +
+      "\"LABEL\": \"Column\"}, {\"KEY\": \"cjk\", " +
+      "\"name\": \"\u8BD5\u9A8C\u6570\u636E\u8868\", \"LABEL\": \"Column\"}], " +
+      "\"relations\": []}",
+    "{\"nodes\": [{\"KEY\": \"emoji\", \"name\": \"\uD83D\uDE00\uD83C\uDF89\", " +
+      "\"LABEL\": \"Column\"}, {\"KEY\": \"lone\", \"name\": \"x?y\", \"LABEL\": \"Column\"}, " +
+      "{\"KEY\": \"null\", \"name\": null, \"LABEL\": \"Column\"}], \"relations\": []}",
+    "{\"nodes\": [{\"KEY\": \"empty\", \"name\": \"\", \"LABEL\": \"Column\"}, " +
+      "{\"KEY\": \"long\", " +
+      "\"name\": \"" + "\u00E9" * 30 + "\", " +
+      "\"LABEL\": \"Description\"}], \"relations\": []}",
+    "{\"nodes\": [], \"relations\": [{\"START_KEY\": \"q\\\"uote\", " +
+      "\"START_LABEL\": \"Table\", \"END_KEY\": \"cjk\", \"END_LABEL\": \"Column\", " +
+      "\"REVERSE_TYPE\": \"COLUMN_OF\", \"TYPE\": \"COLUMN\"}]}",
+    "{\"nodes\": [], \"relations\": [{\"START_KEY\": \"emoji\", \"START_LABEL\": \"Column\", " +
+      "\"END_KEY\": null, \"END_LABEL\": \"Table\", \"REVERSE_TYPE\": \"\", " +
+      "\"TYPE\": \"TABLE\"}]}",
+    "{\"nodes\": [], \"relations\": [{\"START_KEY\": \"\u8BD5\", \"START_LABEL\": \"A\", " +
+      "\"END_KEY\": \"\uD83D\uDE00\", \"END_LABEL\": \"B\", \"REVERSE_TYPE\": \"x\\\\y\", " +
+      "\"TYPE\": \"T\"}]}")
+  private val goldenParity =
+    "{\"nodes\": [{\"KEY\": \"q\\\"uote\", \"name\": \"back\\\\slash\", " +
+      "\"LABEL\": \"Table\"}, {\"KEY\": \"ctl\", \"name\": \"\\u0001bell\\u001f\", " +
+      "\"LABEL\": \"Table\"}, {\"KEY\": \"nl\", \"name\": \"line\\nbreak\\r\\ttab\", " +
+      "\"LABEL\": \"Column\"}, {\"KEY\": \"cjk\", " +
+      "\"name\": \"\u8BD5\u9A8C\u6570\u636E\u8868\", \"LABEL\": \"Column\"}, " +
+      "{\"KEY\": \"emoji\", \"name\": \"\uD83D\uDE00\uD83C\uDF89\", \"LABEL\": \"Column\"}, " +
+      "{\"KEY\": \"lone\", \"name\": \"x?y\", \"LABEL\": \"Column\"}, {\"KEY\": \"null\", " +
+      "\"name\": null, \"LABEL\": \"Column\"}, {\"KEY\": \"empty\", \"name\": \"\", " +
+      "\"LABEL\": \"Column\"}, {\"KEY\": \"long\", " +
+      "\"name\": \"" + "\u00E9" * 30 + "\", " +
+      "\"LABEL\": \"Description\"}], \"relations\": [{\"START_KEY\": \"q\\\"uote\", " +
+      "\"START_LABEL\": \"Table\", \"END_KEY\": \"cjk\", \"END_LABEL\": \"Column\", " +
+      "\"REVERSE_TYPE\": \"COLUMN_OF\", \"TYPE\": \"COLUMN\"}, {\"START_KEY\": \"emoji\", " +
+      "\"START_LABEL\": \"Column\", \"END_KEY\": null, \"END_LABEL\": \"Table\", " +
+      "\"REVERSE_TYPE\": \"\", \"TYPE\": \"TABLE\"}, {\"START_KEY\": \"\u8BD5\", " +
+      "\"START_LABEL\": \"A\", \"END_KEY\": \"\uD83D\uDE00\", \"END_LABEL\": \"B\", " +
+      "\"REVERSE_TYPE\": \"x\\\\y\", \"TYPE\": \"T\"}]}"
+
+  test("golden bodies: chunked, graft-sqs and parity publish the hostile rows byte for byte") {
+    val chunked = new SqsPublisher.Recording
+    SqsPublisher.publishChunked(hostileNodes, hostileRelations, chunked, "q://g", maxBytes = 200)
+    assert(chunked.sent.map(_._2) == goldenChunked)
+    val v2 = new SqsPublisher.Recording
+    for ((df, kind) <- Seq((hostileNodes, "nodes"), (hostileRelations, "relations")))
+      df.write.format("graft-sqs").option("queue_url", "q://g")
+        .option("transport", s"recording:${v2.id}").option("kind", kind)
+        .option("max_bytes", "200").mode("append").save()
+    assert(v2.sent.map(_._2) == goldenChunked)
+    val parity = new SqsPublisher.Recording
+    assert(SqsPublisher.publishParity(hostileNodes, hostileRelations, parity, "q://g") == goldenParity)
+    assert(parity.sent.map(_._2) == Seq(goldenParity))
+    // a lone surrogate that bypasses Spark's UTF-8 strings stays raw
+    assert(SqsPublisher.rowJson(Seq("k\"ey", "v", "n", "e"),
+      Seq("x\uD800\u0002\uDC00y\"\\", null, 1.5, "")) ==
+      "{\"k\\\"ey\": \"x\uD800\\u0002\uDC00y\\\"\\\\\", \"v\": null, \"n\": \"1.5\", \"e\": \"\"}")
+  }
 }

@@ -21,4 +21,12 @@ object GraftTestSparkAccess {
   def explicitPersistCount(sc: SparkContext): Int =
     sc.getPersistentRDDs.values
       .count(r => !org.apache.spark.rdd.GraftRddAccess.isLocallyCheckpointed(r))
+
+  /** RDD blocks the block manager still holds for RDDs created after
+    * `rddId`: cached partitions and `localCheckpoint` blocks alike. */
+  def rddBlocksAfter(sc: SparkContext, rddId: Int): Seq[org.apache.spark.storage.BlockId] =
+    sc.env.blockManager.master.getMatchingBlockIds({
+      case org.apache.spark.storage.RDDBlockId(id, _) => id > rddId
+      case _ => false
+    }, askStorageEndpoints = true)
 }
