@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Moments.{exact, finite, offGrid}
+
 /** Statistical analysis operators: per-group OLS regression, pairwise
   * correlation matrices, and a two-sample Kolmogorov-Smirnov test —
   * the model-the-data half of a profiling suite (distribution drift,
@@ -1159,54 +1161,58 @@ object Stats {
 
   /** One-way ANOVA F statistic — does `valueCol`'s mean differ across
     * the levels of `groupCol`? The variance decomposition runs on
-    * EXACT per-group decimal moments: ONE partial-agged hash pass
-    * yields each group's count, Σv and Σv² in decimal(18,6)-derived
-    * types (exact in any aggregation order for ≤6-dp inputs; a value
-    * needing MORE than 6 dp trips the same-pass sentinel and fails
-    * LOUD — the decimal cast would otherwise round it silently, the
-    * [[gini]] hazard class), and the |groups|-row driver fold
-    * finishes the double algebra in a pinned group-sorted order. One
-    * row out: `(k, n, ss_between, ss_within, f)`; NULL values/groups
-    * excluded. Requires ≥2 groups and n > k (a positive within-group
-    * degrees-of-freedom), fail loud.
+    * EXACT per-group moments — ONE [[Moments.pass]] grouped by the
+    * group's string rendering (count, Σv, Σv²; at most
+    * [[anovaMaxGroups]] groups, fail loud) — and the |groups|-row
+    * driver fold finishes the double algebra in a pinned group-sorted
+    * order. One row out: `(k, n, ss_between, ss_within, f)`; NULL
+    * groups and NULL/NaN/±Inf values excluded. Requires ≥2 groups and
+    * n > k (a positive within-group degrees-of-freedom), fail loud.
     */
   def anovaF(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
     val session = df.sparkSession
     import session.implicits._
-    def d6(c: org.apache.spark.sql.Column) = c.cast("decimal(18,6)")
-    val rows = df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
-      .groupBy(col(groupCol).cast("string").as("g"))
-      .agg(count(lit(1)).as("n"),
-        sum(d6(col(valueCol))).as("s"),
-        // (18,6)² = decimal(37,12): exact product, exact sum
-        sum(d6(col(valueCol)) * d6(col(valueCol))).as("q"),
-        // 6-dp sentinel, same pass (gini's contract: loud, not rounded)
-        sum(when(col(valueCol).cast("double") =!=
-          round(col(valueCol).cast("double"), 6), 1L).otherwise(0L)).as("nf"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1),
-        BigDecimal(r.getDecimal(2)), BigDecimal(r.getDecimal(3)), r.getLong(4)))
-      .sortBy(_._1)
-    rows.foreach { case (g, _, _, _, nf) =>
-      require(nf == 0L,
-        s"anovaF: $nf values in group '$g' need more than 6 decimal " +
-          "places — the decimal(18,6) moments would round them silently; " +
-          "rescale to the 6-dp grid first")
-    }
+    val rows = Moments.pass(df, Seq(col(groupCol).cast("string")),
+        Seq(col(valueCol)), Seq((0, 0)), "anovaF",
+        Moments.Cap(anovaMaxGroups, s"$anovaMaxGroups groups"))(_.getString(0))
+      .toSeq.sortBy(_._1)
     val k = rows.length
-    val n = rows.map(_._2).sum
+    val n = rows.map(_._2.n).sum
     require(k >= 2, s"anovaF: need >= 2 groups, got $k")
     require(n > k, s"anovaF: need n > k for within-group df (n=$n, k=$k)")
-    val s = rows.map(_._3).sum // exact grand sums
-    val q = rows.map(_._4).sum
+    val s = rows.map(_._2.s(0)).sum // exact grand sums
+    val q = rows.map(_._2.q(0, 0)).sum
     // pinned group-sorted fold — the only float summation in the op
-    val sumSg2 = rows.foldLeft(0.0) { case (a, (_, ng, sg, _, _)) =>
-      a + sg.toDouble * sg.toDouble / ng.toDouble
+    val sumSg2 = rows.foldLeft(0.0) { case (a, (_, m)) =>
+      a + m.s(0).toDouble * m.s(0).toDouble / m.n.toDouble
     }
     val ssb = sumSg2 - s.toDouble * s.toDouble / n.toDouble
     val ssw = q.toDouble - sumSg2
     val f = (ssb / (k - 1).toDouble) / (ssw / (n - k).toDouble)
     Seq((k.toLong, n, ssb, ssw, f)).toDF("k", "n", "ss_between", "ss_within", "f")
+  }
+
+  /** [[anovaF]]'s bound on the groups its driver fold collects (the
+    * `maxFoldRows` default of the grouped family). */
+  private val anovaMaxGroups = 1_000_000L
+
+  /** The two-sample moment pass shared by the welchT family
+    * ([[welchT]], [[powerMde]], [[msprt]], [[msprtCI]]): per sample
+    * (n, Σv, Σv²) from ONE [[Moments.pass]] grouped by the 0/1
+    * indicator. A NULL condition row is sample B (the pairCounts
+    * convention). Fails loud (prefixed with `op`) on an arm under 2
+    * rows — an empty input included. */
+  private def twoSampleMoments(df: DataFrame, valueCol: String,
+      sampleACond: org.apache.spark.sql.Column, op: String)
+      : (Long, BigDecimal, BigDecimal, Long, BigDecimal, BigDecimal) = {
+    val arms = Moments.pass(df, Seq(when(sampleACond, 1L).otherwise(0L)),
+      Seq(col(valueCol)), Seq((0, 0)), op, Moments.Cap(2, "2 arms"))(_.getLong(0))
+    val none = (0L, BigDecimal(0), BigDecimal(0))
+    val (na, sa, qa) = arms.get(1L).fold(none)(_.nsq)
+    val (nb, sb, qb) = arms.get(0L).fold(none)(_.nsq)
+    require(na >= 2 && nb >= 2,
+      s"$op: both samples need >= 2 rows for a variance (n_a=$na, n_b=$nb)")
+    (na, sa, qa, nb, sb, qb)
   }
 
   /** Welch's two-sample t statistic (unequal variances) between the
@@ -1217,71 +1223,16 @@ object Stats {
     * (pooled-SD effect size) so significance and magnitude travel
     * together.
     *
-    * Scale shape: [[anovaF]]'s — ONE partial-agged conditional-moment
-    * pass yields each sample's count, Σv and Σv² in exact decimals
-    * (order-independent; the 6-dp integrality sentinel rides the same
-    * pass and fails LOUD on finer values — the [[gini]] hazard class),
-    * and the driver finishes the double algebra in a pinned order:
-    * t = (m_A − m_B)/√(s²_A/n_A + s²_B/n_B), Welch–Satterthwaite df.
-    * One row out: `(n_a, n_b, mean_a, mean_b, t, df, cohen_d)` — raw
+    * Scale shape: ONE [[Moments.pass]] grouped by the sample
+    * indicator yields each sample's count, Σv and Σv² in exact
+    * decimals, and the driver finishes the double algebra in a pinned
+    * order: t = (m_A − m_B)/√(s²_A/n_A + s²_B/n_B), Welch–Satterthwaite
+    * df. One row out: `(n_a, n_b, mean_a, mean_b, t, df, cohen_d)` — raw
     * doubles (callers round; both engines replay the identical decimal
     * totals, so the algebra matches to the last ulp). NULL and
-    * non-finite (NaN/±Inf) values excluded (the [[finite]] gate — the
-    * family convention); each sample needs ≥2 rows (a variance), fail
-    * loud.
+    * non-finite values excluded; each sample needs ≥2 rows (a
+    * variance), fail loud.
     */
-  /** Finite-metric row gate shared by the experimentation family:
-    * NULL, NaN and ±Infinity are ALL excluded. Non-finite doubles
-    * cast to decimal(18,6) as NULL (even under ANSI — verified on
-    * Spark 4.1; range overflow still fails loud), so a bare
-    * `isNotNull` filter would keep such rows in the COUNT aggregates
-    * while the decimal moment sums silently skipped them — a biased
-    * mean with no sentinel firing. One explicit gate keeps n and the
-    * sums over the SAME row set and matches the streaming monitor's
-    * skip ([[graft.streaming.TwsMsprt]] — stream ≡ batch).
-    */
-  private def finite(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    c.isNotNull && !isnan(c.cast("double")) &&
-      abs(c.cast("double")) =!= lit(Double.PositiveInfinity)
-
-  /** The two-sample exact-decimal conditional moment pass shared by
-    * the welchT family ([[welchT]], [[powerMde]], [[msprt]],
-    * [[msprtCI]]) — ONE partial-agged scan: per arm (n, Σv, Σv²) in
-    * exact decimals with the 6-dp integrality sentinel riding the same
-    * pass; the [[finite]] gate excludes NULL and non-finite rows from
-    * counts AND sums alike. Fails loud (prefixed with `op`) on
-    * off-grid values and on an arm under 2 rows. */
-  private def twoSampleMoments(df: DataFrame, valueCol: String,
-      sampleACond: org.apache.spark.sql.Column, op: String)
-      : (Long, BigDecimal, BigDecimal, Long, BigDecimal, BigDecimal) = {
-    def d6(c: org.apache.spark.sql.Column) = c.cast("decimal(18,6)")
-    val v = col(valueCol)
-    // a NULL condition row counts as sample B in EVERY aggregate (the
-    // pairCounts convention) — deriving an explicit 0/1 indicator first
-    // keeps the count and the moment sums consistent on such rows
-    val ia = when(sampleACond, 1L).otherwise(0L)
-    val r0 = df.filter(finite(v))
-      .agg(
-        sum(ia).as("na"),
-        sum(when(ia === 1L, d6(v))).as("sa"),
-        sum(when(ia === 1L, d6(v) * d6(v))).as("qa"),
-        sum(lit(1L) - ia).as("nb"),
-        sum(when(ia === 0L, d6(v))).as("sb"),
-        sum(when(ia === 0L, d6(v) * d6(v))).as("qb"),
-        sum(when(v.cast("double") =!= round(v.cast("double"), 6), 1L)
-          .otherwise(0L)).as("nf"))
-      .head()
-    require(!r0.isNullAt(0) && r0.getLong(6) == 0L,
-      s"$op: ${if (r0.isNullAt(0)) "no" else r0.getLong(6)} values need " +
-        "more than 6 decimal places — the decimal(18,6) moments would " +
-        "round them silently; rescale to the 6-dp grid first")
-    val (na, nb) = (r0.getLong(0), r0.getLong(3))
-    require(na >= 2 && nb >= 2,
-      s"$op: both samples need >= 2 rows for a variance (n_a=$na, n_b=$nb)")
-    (na, BigDecimal(r0.getDecimal(1)), BigDecimal(r0.getDecimal(2)),
-      nb, BigDecimal(r0.getDecimal(4)), BigDecimal(r0.getDecimal(5)))
-  }
-
   def welchT(df: DataFrame, valueCol: String,
              sampleACond: org.apache.spark.sql.Column): DataFrame = {
     val session = df.sparkSession
@@ -1347,18 +1298,17 @@ object Stats {
     * planning-sized comparison set — one rule, restated on the driver
     * where m ≤ maxArms−1 makes a distributed CDF a job for nothing).
     *
-    * Scale shape: ONE (arm)-grouped partial-agged exact-decimal moment
-    * pass — per arm (n, Σv, Σv², 6-dp sentinel), ≤ maxArms cells, loud
-    * guard on the arm count (the [[postStratifiedDiff]] bounded-collect
-    * discipline) — then pinned driver algebra: per treatment arm the
+    * Scale shape: ONE [[Moments.pass]] grouped by arm — per arm
+    * (n, Σv, Σv²), ≤ maxArms cells behind a loud bound — then pinned
+    * driver algebra: per treatment arm the
     * [[welchChain]] (ONE implementation — the k = 2 case is bit-equal
     * to [[welchT]], OperatorsSpec pins it), two-sided p via
     * [[zPvalue2]] (normal approximation, documented there), BH at
     * level q. One row per treatment arm, ordered by arm label:
     * `(arm, n_c, n_t, mean_c, mean_t, diff, t, df, p, significant)` —
     * diff = mean_t − mean_c; `significant` = BH-rejected at q. NULL
-    * and non-finite values excluded ([[finite]]); NULL arms excluded;
-    * every arm (control included) needs ≥ `minN` rows, fail loud.
+    * and non-finite values excluded ([[Moments.finite]]); NULL arms
+    * excluded; every arm (control included) needs ≥ `minN` rows, fail loud.
     *
     * NORMAL-APPROXIMATION VALIDITY (ADVICE r16): [[zPvalue2]] reads
     * the Welch t against the NORMAL CDF — exact only as df → ∞. At
@@ -1380,31 +1330,12 @@ object Stats {
       s"two rows), got $minN")
     val session = df.sparkSession
     import session.implicits._
-    def d6(c: org.apache.spark.sql.Column) = c.cast("decimal(18,6)")
-    val v = col(valueCol)
-    val rows = df.filter(finite(v) && col(armCol).isNotNull)
-      .groupBy(col(armCol).cast("string").as("arm"))
-      .agg(count(lit(1)).as("n"),
-        sum(d6(v)).as("s"),
-        sum(d6(v) * d6(v)).as("qq"),
-        sum(when(v.cast("double") =!= round(v.cast("double"), 6), 1L)
-          .otherwise(0L)).as("nf"))
-      .limit(maxArms + 1)
-      .collect()
-    require(rows.length <= maxArms,
-      s"multiArm: more than $maxArms arms — an unbounded arm column " +
-        "would materialize on the driver; raise maxArms only if the " +
-        "cardinality is a design constant")
-    require(rows.nonEmpty, "multiArm: no rows with a non-NULL finite " +
+    val byArm = Moments.pass(df, Seq(col(armCol).cast("string")),
+        Seq(col(valueCol)), Seq((0, 0)), "multiArm",
+        Moments.Cap(maxArms, s"$maxArms arms"))(_.getString(0))
+      .map { case (arm, m) => arm -> m.nsq }
+    require(byArm.nonEmpty, "multiArm: no rows with a non-NULL finite " +
       "value and a non-NULL arm")
-    val nfTotal = rows.map(_.getLong(4)).sum
-    require(nfTotal == 0L,
-      s"multiArm: $nfTotal value(s) need more than 6 decimal places — " +
-        "the decimal(18,6) moments would round them silently; rescale " +
-        "to the 6-dp grid first")
-    val byArm = rows.map(r => r.getString(0) ->
-      ((r.getLong(1), BigDecimal(r.getDecimal(2)), BigDecimal(r.getDecimal(3)))))
-      .toMap
     multiArmChain(byArm, controlArm, q, minN) match {
       case Left(msg) =>
         throw new IllegalArgumentException(s"requirement failed: multiArm: $msg")
@@ -1482,9 +1413,8 @@ object Stats {
     * vary and the metric is one test, here the condition is fixed and
     * every segment is one test.
     *
-    * Scale shape: ONE (segment, arm)-grouped exact-decimal moment pass
-    * (≤ 2·maxGroups cells behind a loud bound — the
-    * [[postStratifiedDiff]] bounded-collect discipline), then pinned
+    * Scale shape: ONE [[Moments.pass]] grouped by (segment, arm)
+    * (≤ 2·maxGroups cells behind a loud bound), then pinned
     * driver algebra per segment: [[welchChain]] (ONE implementation —
     * each segment's row is bit-equal to [[welchT]] on that slice,
     * spec-pinned), two-sided normal-approximation p ([[zPvalue2]]),
@@ -1492,7 +1422,7 @@ object Stats {
     * by segment label:
     * `(grp, n_a, n_b, mean_a, mean_b, diff, t, df, p, significant)` —
     * diff = mean_a − mean_b (the [[welchT]] A-minus-B convention).
-    * NULL/non-finite values and NULL segments excluded ([[finite]]);
+    * NULL/non-finite values and NULL segments excluded ([[Moments.finite]]);
     * a segment with an arm under `minN` rows fails LOUD naming it (a
     * thin slice is a design problem — coarsen the segmentation, don't
     * let it vanish silently).
@@ -1514,33 +1444,15 @@ object Stats {
       s"needs two rows), got $minN")
     val session = df.sparkSession
     import session.implicits._
-    def d6(c: org.apache.spark.sql.Column) = c.cast("decimal(18,6)")
-    val v = col(valueCol)
-    val ia = when(sampleACond, 1L).otherwise(0L)
-    val cellCap = math.min(maxGroups.toLong * 2L + 1L, Int.MaxValue.toLong).toInt
-    val cells = df.filter(finite(v) && col(groupCol).isNotNull)
-      .groupBy(col(groupCol).cast("string").as("g"), ia.as("ia"))
-      .agg(count(lit(1)).as("n"),
-        sum(d6(v)).as("s"),
-        sum(d6(v) * d6(v)).as("qq"),
-        sum(when(v.cast("double") =!= round(v.cast("double"), 6), 1L)
-          .otherwise(0L)).as("nf"))
-      .limit(cellCap)
-      .collect()
-    require(cells.length <= maxGroups * 2,
-      s"welchTByGroup: more than $maxGroups segments — the driver fold " +
-        "would not be planning-sized; coarsen the segment key or raise " +
-        "maxGroups deliberately")
-    require(cells.nonEmpty,
+    val byCell = Moments.pass(df,
+        Seq(col(groupCol).cast("string"), when(sampleACond, 1L).otherwise(0L)),
+        Seq(col(valueCol)), Seq((0, 0)), "welchTByGroup",
+        Moments.Cap(maxGroups * 2L, s"$maxGroups segments"))(
+        r => (r.getString(0), r.getLong(1)))
+      .map { case (cell, m) => cell -> m.nsq }
+    require(byCell.nonEmpty,
       "welchTByGroup: no rows with a non-NULL finite value and a " +
         "non-NULL segment")
-    require(cells.map(_.getLong(5)).sum == 0L,
-      s"welchTByGroup: ${cells.map(_.getLong(5)).sum} value(s) need " +
-        "more than 6 decimal places — the decimal(18,6) moments would " +
-        "round them silently; rescale to the 6-dp grid first")
-    val byCell = cells.map(r => (r.getString(0), r.getLong(1)) ->
-      ((r.getLong(2), BigDecimal(r.getDecimal(3)), BigDecimal(r.getDecimal(4)))))
-      .toMap
     welchSegmentsChain(byCell, q, minN) match {
       case Left(msg) =>
         throw new IllegalArgumentException(
@@ -1633,8 +1545,8 @@ object Stats {
     * (which also catches non-ascending cutoffs, otherwise masked by
     * the first-match bucketing).
     *
-    * Scale shape: ONE partial-agged exact-decimal moment pass, grouped
-    * by (first-look-containing-the-row, arm) — ≤ 2K cells — then
+    * Scale shape: ONE [[Moments.pass]], grouped by
+    * (first-look-containing-the-row, arm) — ≤ 2K cells — then
     * pinned driver algebra: cumulative decimal moments per look (exact
     * — decimal addition is associative), [[welchChain]] per look (ONE
     * implementation with [[welchT]]), boundary, crossing, first-stop.
@@ -1643,7 +1555,7 @@ object Stats {
     * `(look, n_a, n_b, info_frac, z, boundary, crossed, stop_look)` —
     * `stop_look` (the first crossed look, NULL while none) repeats on
     * every row so a single-row read answers "has it stopped?". NULL
-    * and non-finite values excluded ([[finite]]); every look needs ≥ 2
+    * and non-finite values excluded ([[Moments.finite]]); every look needs ≥ 2
     * cumulative rows per arm, fail loud (a schedule that looks before
     * the test exists is a design error, not a quiet NULL row).
     */
@@ -1665,33 +1577,23 @@ object Stats {
       "groupSequential: plannedTotal must cover >= 2 rows per arm")
     val session = df.sparkSession
     import session.implicits._
-    def d6(c: org.apache.spark.sql.Column) = c.cast("decimal(18,6)")
-    val v = col(valueCol)
     val ts = col(timeCol)
-    val ia = when(sampleACond, 1L).otherwise(0L)
     // first look whose cutoff covers the row (cutoffs ascending — a
     // caller contract; a later-look row can never rejoin an earlier
-    // look, so the chained first-match when() IS the bucketing)
+    // look, so the chained first-match when() IS the bucketing); a NULL
+    // time or a row after the last cutoff gets a NULL look and is dropped
     val bucket = cutoffs.zipWithIndex
       .foldLeft(when(lit(false), lit(0))) { case (w, (c, i)) =>
         w.when(ts <= c, lit(i + 1))
       }
-    val cells = df.filter(finite(v) && ts.isNotNull && bucket.isNotNull)
-      .groupBy(bucket.as("k"), ia.as("ia"))
-      .agg(count(lit(1)).as("n"),
-        sum(d6(v)).as("s"),
-        sum(d6(v) * d6(v)).as("qq"),
-        sum(when(v.cast("double") =!= round(v.cast("double"), 6), 1L)
-          .otherwise(0L)).as("nf"))
-      .collect() // ≤ 2K cells by construction (K ≤ 32)
-    require(cells.nonEmpty, "groupSequential: no rows at or before the " +
+    val byCell = Moments.pass(df,
+        Seq(bucket, when(sampleACond, 1L).otherwise(0L)),
+        Seq(col(valueCol)), Seq((0, 0)), "groupSequential",
+        Moments.Cap(2L * cutoffs.size, s"${cutoffs.size} looks"))(
+        r => (r.getInt(0), r.getLong(1)))
+      .map { case (cell, m) => cell -> m.nsq }
+    require(byCell.nonEmpty, "groupSequential: no rows at or before the " +
       "last cutoff with a non-NULL finite value")
-    require(cells.map(_.getLong(5)).sum == 0L,
-      s"groupSequential: ${cells.map(_.getLong(5)).sum} value(s) need " +
-        "more than 6 decimal places — rescale to the 6-dp grid first")
-    val byCell = cells.map(r => (r.getInt(0), r.getLong(1)) ->
-      ((r.getLong(2), BigDecimal(r.getDecimal(3)), BigDecimal(r.getDecimal(4)))))
-      .toMap
     groupSeqChain(byCell, cutoffs.size, zAlpha2, shape, plannedTotal) match {
       case Left(msg) =>
         throw new IllegalArgumentException(
@@ -1793,9 +1695,8 @@ object Stats {
     *     per-arm size the TARGET relative effect needs (m_B = the
     *     control mean, sample B = the [[welchT]] NULL-condition arm).
     *
-    * Scale shape: [[welchT]]'s exactly — ONE partial-agged conditional
-    * decimal-moment pass (6-dp sentinel in the same pass), pinned
-    * double algebra on the driver. A zero control mean fails loud
+    * Scale shape: [[welchT]]'s — one [[Moments.pass]], pinned double
+    * algebra on the driver. A zero control mean fails loud
     * (the relative target is undefined), as do <2-row arms and zero
     * pooled variance. One row out:
     * `(n_a, n_b, mean_b, mde_abs, mde_rel, n_per_arm)` — raw doubles
@@ -1848,11 +1749,9 @@ object Stats {
     * p-value valid at EVERY n simultaneously — stop whenever
     * p = min(1, 1/Λ) < α and the type-I error is still controlled.
     *
-    * Scale shape: [[welchT]]'s exactly — ONE partial-agged
-    * conditional-moment pass (per sample n, Σv, Σv² in exact decimals,
-    * 6-dp sentinel in the same pass), pinned double algebra on the
-    * driver: θ̂ = m_A − m_B, V = s²_A/n_A + s²_B/n_B (the Welch
-    * variance), then the Λ chain. τ² is the analyst's prior scale on
+    * Scale shape: [[welchT]]'s — one [[Moments.pass]] (per sample n,
+    * Σv, Σv²), pinned double algebra on the driver: θ̂ = m_A − m_B,
+    * V = s²_A/n_A + s²_B/n_B (the Welch variance), then the Λ chain. τ² is the analyst's prior scale on
     * the effect (their platform constant); it tunes power, not
     * validity. One row out:
     * `(n_a, n_b, diff, v, lambda, p, significant)` — raw doubles,
@@ -2022,10 +1921,8 @@ object Stats {
     * lever an experimentation platform applies before [[welchT]] calls
     * a metric flat.
     *
-    * Scale shape: the [[welchT]] contract extended — ONE partial-agged
-    * conditional-moment pass over (Y, X): per sample n, ΣY, ΣX, ΣY²,
-    * ΣX², ΣXY in exact decimals (order-independent; the 6-dp
-    * integrality sentinel covers BOTH columns in the same pass),
+    * Scale shape: one [[Moments.pass]] over (Y, X) grouped by the
+    * sample indicator — per sample n, ΣY, ΣX, ΣY², ΣX², ΣXY — then
     * pinned double algebra on the driver. One row out:
     * `(n_a, n_b, theta, rho2, diff_raw, diff_adj, t_adj)` — raw
     * doubles, callers round; rho2 is the fraction of metric variance
@@ -2040,41 +1937,17 @@ object Stats {
             sampleACond: org.apache.spark.sql.Column): DataFrame = {
     val session = df.sparkSession
     import session.implicits._
-    def d6(c: org.apache.spark.sql.Column) = c.cast("decimal(18,6)")
-    val y = col(metricCol)
-    val x = col(covariateCol)
-    val ia = when(sampleACond, 1L).otherwise(0L)
-    // ONE pass, grouped by the 0/1 indicator (2 groups) rather than 12
-    // conditional aggregates: each decimal product is evaluated ONCE
-    // per row instead of once per sample arm (the conditional form ran
-    // ~2x slower at sf0.1), and decimal sums are order-independent so
-    // the per-sample totals are bit-identical either way
-    val rows = df.filter(finite(y) && finite(x))
-      .groupBy(ia.as("ia"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(d6(y)).as("sy"),
-        sum(d6(x)).as("sx"),
-        sum(d6(y) * d6(y)).as("qy"),
-        sum(d6(x) * d6(x)).as("qx"),
-        sum(d6(x) * d6(y)).as("pxy"),
-        sum(when(y.cast("double") =!= round(y.cast("double"), 6), 1L)
-          .when(x.cast("double") =!= round(x.cast("double"), 6), 1L)
-          .otherwise(0L)).as("nf"))
-      .collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), BigDecimal(r.getDecimal(2)),
-        BigDecimal(r.getDecimal(3)), BigDecimal(r.getDecimal(4)),
-        BigDecimal(r.getDecimal(5)), BigDecimal(r.getDecimal(6)),
-        r.getLong(7)))).toMap
-    val nfTotal = rows.valuesIterator.map(_._7).sum
-    require(rows.nonEmpty && nfTotal == 0L,
-      s"cuped: ${if (rows.isEmpty) "no" else nfTotal} values need " +
-        "more than 6 decimal places — the decimal(18,6) moments would " +
-        "round them silently; rescale to the 6-dp grid first")
-    val zero = (0L, BigDecimal(0), BigDecimal(0), BigDecimal(0),
-      BigDecimal(0), BigDecimal(0), 0L)
-    val (na, sya, sxa, qya, qxa, pa, _) = rows.getOrElse(1L, zero)
-    val (nb, syb, sxb, qyb, qxb, pb, _) = rows.getOrElse(0L, zero)
+    // one pass grouped by the 0/1 indicator over (Y, X): each decimal
+    // product is evaluated ONCE per row (12 conditional aggregates ran
+    // ~2x slower at sf0.1); decimal sums are order-independent
+    val arms = Moments.pass(df, Seq(when(sampleACond, 1L).otherwise(0L)),
+      Seq(col(metricCol), col(covariateCol)), Seq((0, 0), (1, 1), (1, 0)),
+      "cuped", Moments.Cap(2, "2 arms"))(_.getLong(0))
+    val zero = BigDecimal(0)
+    def side(ia: Long) = arms.get(ia).fold((0L, zero, zero, zero, zero, zero))(
+      m => (m.n, m.s(0), m.s(1), m.q(0, 0), m.q(1, 1), m.q(1, 0)))
+    val (na, sya, sxa, qya, qxa, pa) = side(1L)
+    val (nb, syb, sxb, qyb, qxb, pb) = side(0L)
     val (theta, rho2, diffRaw, diffAdj, tAdj) =
       cupedChain(na, sya, sxa, qya, qxa, pa,
         nb, syb, sxb, qyb, qxb, pb) match {
@@ -2153,12 +2026,10 @@ object Stats {
     * arm. Same expectation as the raw difference under randomization;
     * variance shrunk by the stratum-explained share.
     *
-    * Scale shape: ONE hash-agg pass over (stratum, arm) cells — n, Σv,
-    * Σv² in exact decimals (the [[welchT]] 6-dp contract, sentinel in
-    * the same pass) — then a planning-sized driver fold over the
-    * ≤ 2·`maxStrata` cells, guarded LOUD before the collect (the
-    * [[bootstrapMeanCIByGroup]] convention). The fold runs in SORTED
-    * stratum order (deterministic); the ≤|strata| double sums are the
+    * Scale shape: one [[Moments.pass]] over (stratum, arm) cells — n,
+    * Σv, Σv² — then a planning-sized driver fold over the ≤ 2·`maxStrata`
+    * cells, guarded LOUD at the collect. The fold runs in SORTED stratum
+    * order (deterministic); the ≤|strata| double sums are the
     * only float folds (the [[anovaF]] precedent — callers' round(6)
     * absorbs their ordering noise vs an oracle's unordered SUM). Every
     * stratum needs ≥ 2 rows in EACH arm (fails loud naming the
@@ -2175,32 +2046,13 @@ object Stats {
                          maxStrata: Long = 10_000L): DataFrame = {
     val session = df.sparkSession
     import session.implicits._
-    def d6(c: org.apache.spark.sql.Column) = c.cast("decimal(18,6)")
-    val v = col(metricCol)
-    val ia = when(sampleACond, 1L).otherwise(0L)
-    val cells = df.filter(finite(v) && col(stratumCol).isNotNull)
-      .groupBy(col(stratumCol).cast("string").as("s"), ia.as("ia"))
-      .agg(count(lit(1)).as("n"),
-        sum(d6(v)).as("sv"),
-        sum(d6(v) * d6(v)).as("qv"),
-        sum(when(v.cast("double") =!= round(v.cast("double"), 6), 1L)
-          .otherwise(0L)).as("nf"))
-    val cellCap = math.min(maxStrata * 2L + 1L, Int.MaxValue.toLong).toInt
-    val cellRows = cells.limit(cellCap).collect()
-    require(cellRows.length <= maxStrata * 2L,
-      s"postStratifiedDiff: more than $maxStrata strata — the driver " +
-        "fold would not be planning-sized; coarsen the stratum key or " +
-        "raise maxStrata deliberately")
-    require(cellRows.nonEmpty, "postStratifiedDiff: no rows after the NULL filter")
-    val nfTotal = cellRows.map(_.getAs[Long]("nf")).sum
-    require(nfTotal == 0L,
-      s"postStratifiedDiff: $nfTotal values need more than 6 decimal " +
-        "places — the decimal(18,6) moments would round them silently; " +
-        "rescale to the 6-dp grid first")
-    val byCell = cellRows.map(r => (r.getAs[String]("s"), r.getAs[Long]("ia")) ->
-      ((r.getAs[Long]("n"),
-        BigDecimal(r.getAs[java.math.BigDecimal]("sv")),
-        BigDecimal(r.getAs[java.math.BigDecimal]("qv"))))).toMap
+    val byCell = Moments.pass(df,
+        Seq(col(stratumCol).cast("string"), when(sampleACond, 1L).otherwise(0L)),
+        Seq(col(metricCol)), Seq((0, 0)), "postStratifiedDiff",
+        Moments.Cap(maxStrata * 2L, s"$maxStrata strata"))(
+        r => (r.getString(0), r.getLong(1)))
+      .map { case (cell, m) => cell -> m.nsq }
+    require(byCell.nonEmpty, "postStratifiedDiff: no rows after the NULL filter")
     val (naTot, nbTot, nStrata, diffRaw, diffStrat, se, tStrat) =
       postStratChain(byCell) match {
         case Left(msg) => throw new IllegalArgumentException(
@@ -2281,13 +2133,12 @@ object Stats {
     * linear adjustment; ρ² = θᵀCov(X,Y)/Var(Y) is the variance
     * fraction the vector removes.
     *
-    * Scale shape: [[cuped]]'s exactly — ONE pass grouped by the 0/1
-    * sample indicator carrying ALL cross moments in exact decimals
-    * (n, ΣY, ΣY², and per covariate ΣXᵢ, ΣXᵢY, plus the upper
-    * triangle ΣXᵢXⱼ — 3 + 2k + k(k+1)/2 aggregate columns; the 6-dp
-    * integrality sentinel covers Y and every Xᵢ in the same pass),
-    * then pinned double algebra on the driver. The solve is Gaussian
-    * elimination WITHOUT pivoting in covariate-declaration order — a
+    * Scale shape: [[cuped]]'s — one [[Moments.pass]] grouped by the 0/1
+    * sample indicator carrying ALL cross moments (n, ΣY, ΣY², and per
+    * covariate ΣXᵢ, ΣXᵢY, plus the upper triangle ΣXᵢXⱼ — 3 + 2k +
+    * k(k+1)/2 aggregate columns), then pinned double algebra on the
+    * driver. The solve is Gaussian elimination WITHOUT pivoting in
+    * covariate-declaration order — a
     * fixed deterministic operation sequence an oracle can replay
     * term-for-term (k ≤ 8 keeps it planning-sized AND numerically
     * honest; partial pivoting would be data-dependent and
@@ -2313,23 +2164,8 @@ object Stats {
         "repeated column makes the normal equations exactly singular")
     val session = df.sparkSession
     import session.implicits._
-    def d6(c: org.apache.spark.sql.Column) = c.cast("decimal(18,6)")
     val y = col(metricCol)
     val xs = covariateCols.map(col)
-    val ia = when(sampleACond, 1L).otherwise(0L)
-    val fracChecks = (y +: xs).map(c =>
-      c.cast("double") =!= round(c.cast("double"), 6))
-    val nfCol = fracChecks.tail
-      .foldLeft(when(fracChecks.head, 1L))((acc, c) => acc.when(c, 1L))
-      .otherwise(0L)
-    val aggs: Seq[org.apache.spark.sql.Column] =
-      Seq(count(lit(1)).as("n"), sum(d6(y)).as("sy"),
-        sum(d6(y) * d6(y)).as("qy")) ++
-      (0 until k).map(i => sum(d6(xs(i))).as(s"sx$i")) ++
-      (for (i <- 0 until k; j <- i until k)
-        yield sum(d6(xs(i)) * d6(xs(j))).as(s"q${i}_$j")) ++
-      (0 until k).map(i => sum(d6(xs(i)) * d6(y)).as(s"p$i")) ++
-      Seq(sum(nfCol).as("nf"))
     // spread the moment pass: the k(k+3)/2-column decimal partial agg
     // is the query's whole cost and otherwise runs at the scan's split
     // count (measured 3 tasks × ~860 ms CPU at sf0.1 — guide §2.5);
@@ -2339,52 +2175,34 @@ object Stats {
     val pre = graft.core.Tables.spread(df
       .filter(xs.foldLeft(finite(y))((acc, x) => acc && finite(x)))
       .select((metricCol +: covariateCols).distinct.map(col) :+
-        ia.as("__ia"): _*))
-    val rows = pre
-      .groupBy(col("__ia").as("ia"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map(r => r.getAs[Long]("ia") -> r)
-      .toMap
-    val nfTotal = rows.valuesIterator.map(_.getAs[Long]("nf")).sum
-    require(rows.nonEmpty && nfTotal == 0L,
-      s"cupedMulti: ${if (rows.isEmpty) "no" else nfTotal} values need " +
-        "more than 6 decimal places — the decimal(18,6) moments would " +
-        "round them silently; rescale to the 6-dp grid first")
+        when(sampleACond, 1L).otherwise(0L).as("__ia"): _*))
+    // value 0 is Y and value i + 1 is Xᵢ: Σ Y², the upper triangle of
+    // Σ XᵢXⱼ and Σ XᵢY — 3 + 2k + k(k+1)/2 aggregates in one pass
+    val pairs = (0, 0) +: ((for (i <- 1 to k; j <- i to k) yield (i, j)) ++
+      (1 to k).map(i => (i, 0)))
+    val rows = Moments.pass(pre, Seq(col("__ia")), y +: xs, pairs,
+      "cupedMulti", Moments.Cap(2, "2 arms"))(_.getLong(0))
     require(rows.contains(1L) && rows.contains(0L),
       "cupedMulti: both samples need rows after the NULL filter")
-    case class Moments(n: Long, sy: BigDecimal, qy: BigDecimal,
-                       sx: Array[BigDecimal], q: Array[Array[BigDecimal]],
-                       p: Array[BigDecimal])
-    def momentsOf(r: org.apache.spark.sql.Row): Moments = {
-      def dec(name: String) = BigDecimal(r.getAs[java.math.BigDecimal](name))
-      val q = Array.ofDim[BigDecimal](k, k)
-      for (i <- 0 until k; j <- i until k) {
-        q(i)(j) = dec(s"q${i}_$j"); q(j)(i) = q(i)(j)
-      }
-      Moments(r.getAs[Long]("n"), dec("sy"), dec("qy"),
-        Array.tabulate(k)(i => dec(s"sx$i")), q,
-        Array.tabulate(k)(i => dec(s"p$i")))
-    }
-    val ma = momentsOf(rows(1L))
-    val mb = momentsOf(rows(0L))
+    val ma = rows(1L)
+    val mb = rows(0L)
     require(ma.n >= 2 && mb.n >= 2,
       s"cupedMulti: both samples need >= 2 rows (n_a=${ma.n}, n_b=${mb.n})")
     // pooled exact totals, then the cuped double chains entry-by-entry
     val n = ma.n + mb.n
     val nD = n.toDouble
     val nm1 = (n - 1).toDouble
-    val sy = (ma.sy + mb.sy).toDouble
-    val qy = (ma.qy + mb.qy).toDouble
-    val sx = Array.tabulate(k)(i => (ma.sx(i) + mb.sx(i)).toDouble)
+    val sy = (ma.s(0) + mb.s(0)).toDouble
+    val qy = (ma.q(0, 0) + mb.q(0, 0)).toDouble
+    val sx = Array.tabulate(k)(i => (ma.s(i + 1) + mb.s(i + 1)).toDouble)
     val varYP = (qy - sy * sy / nD) / nm1
     require(varYP > 0.0,
       "cupedMulti: metric has zero pooled variance — rho2 is undefined")
     val sxy = Array.tabulate(k) { i =>
-      ((ma.p(i) + mb.p(i)).toDouble - sx(i) * sy / nD) / nm1
+      ((ma.q(i + 1, 0) + mb.q(i + 1, 0)).toDouble - sx(i) * sy / nD) / nm1
     }
     val sxx = Array.tabulate(k, k) { (i, j) =>
-      ((ma.q(i)(j) + mb.q(i)(j)).toDouble - sx(i) * sx(j) / nD) / nm1
+      ((ma.q(i + 1, j + 1) + mb.q(i + 1, j + 1)).toDouble - sx(i) * sx(j) / nD) / nm1
     }
     // Gaussian elimination, natural order, no pivoting (see scaladoc)
     val a = Array.tabulate(k, k)((i, j) => sxx(i)(j))
@@ -2409,26 +2227,26 @@ object Stats {
     var dot = 0.0
     for (i <- 0 until k) dot += theta(i) * sxy(i)
     val rho2 = dot / varYP
-    val mYA = ma.sy.toDouble / ma.n.toDouble
-    val mYB = mb.sy.toDouble / mb.n.toDouble
+    val mYA = ma.s(0).toDouble / ma.n.toDouble
+    val mYB = mb.s(0).toDouble / mb.n.toDouble
     val diffRaw = mYA - mYB
     var adj = 0.0
     for (i <- 0 until k)
-      adj += theta(i) * (ma.sx(i).toDouble / ma.n.toDouble
-        - mb.sx(i).toDouble / mb.n.toDouble)
+      adj += theta(i) * (ma.s(i + 1).toDouble / ma.n.toDouble
+        - mb.s(i + 1).toDouble / mb.n.toDouble)
     val diffAdj = diffRaw - adj
     // per-sample var(Y − θᵀX) = varY − 2θᵀcov + θᵀVar(X)θ, each
     // entry in [[cuped]].adjVar's exact chain
-    def adjVarOf(s: Moments): Double = {
+    def adjVarOf(s: Moments.Cell): Double = {
       val nd = s.n.toDouble
       val nm = (s.n - 1).toDouble
       val covS = Array.tabulate(k) { i =>
-        (s.p(i).toDouble - s.sx(i).toDouble * s.sy.toDouble / nd) / nm
+        (s.q(i + 1, 0).toDouble - s.s(i + 1).toDouble * s.s(0).toDouble / nd) / nm
       }
       val vxS = Array.tabulate(k, k) { (i, j) =>
-        (s.q(i)(j).toDouble - s.sx(i).toDouble * s.sx(j).toDouble / nd) / nm
+        (s.q(i + 1, j + 1).toDouble - s.s(i + 1).toDouble * s.s(j + 1).toDouble / nd) / nm
       }
-      val vyS = (s.qy.toDouble - s.sy.toDouble * s.sy.toDouble / nd) / nm
+      val vyS = (s.q(0, 0).toDouble - s.s(0).toDouble * s.s(0).toDouble / nd) / nm
       var dc = 0.0
       for (i <- 0 until k) dc += theta(i) * covS(i)
       var quad = 0.0
@@ -2456,12 +2274,10 @@ object Stats {
     *
     *   Var(R) ≈ (var(y) − 2R·cov(x,y) + R²·var(x)) / (n·x̄²).
     *
-    * Scale shape: [[cuped]]'s exactly — ONE pass grouped by the 0/1
-    * sample indicator, per sample n / Σy / Σx / Σy² / Σx² / Σxy in
-    * exact decimals (order-independent; 6-dp integrality sentinel on
-    * BOTH columns in the same pass), pinned double algebra on the
-    * driver. `z` is the normal quantile for the CI half-width,
-    * SUPPLIED by the caller (default the two-sided-95% 1.959963984…)
+    * Scale shape: [[cuped]]'s — one [[Moments.pass]] grouped by the 0/1
+    * sample indicator, per sample n / Σy / Σx / Σy² / Σx² / Σxy,
+    * pinned double algebra on the driver. `z` is the normal quantile
+    * for the CI half-width, SUPPLIED by the caller (default the two-sided-95% 1.959963984…)
     * — the engine pins arithmetic, not a normal-CDF implementation.
     * NULL condition rows are sample B (the [[welchT]] convention); a
     * zero denominator total fails loud (the ratio is undefined). One
@@ -2474,37 +2290,17 @@ object Stats {
     require(z > 0.0, s"deltaRatioCI: z must be positive, got $z")
     val session = df.sparkSession
     import session.implicits._
-    def d6(c: org.apache.spark.sql.Column) = c.cast("decimal(18,6)")
-    val y = col(numCol); val x = col(denCol)
-    val ia = when(sampleACond, 1L).otherwise(0L)
-    val rows = df.filter(finite(y) && finite(x))
-      .groupBy(ia.as("ia"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(d6(y)).as("sy"),
-        sum(d6(x)).as("sx"),
-        sum(d6(y) * d6(y)).as("qy"),
-        sum(d6(x) * d6(x)).as("qx"),
-        sum(d6(x) * d6(y)).as("pxy"),
-        sum(when(y.cast("double") =!= round(y.cast("double"), 6), 1L)
-          .when(x.cast("double") =!= round(x.cast("double"), 6), 1L)
-          .otherwise(0L)).as("nf"))
-      .collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), BigDecimal(r.getDecimal(2)),
-        BigDecimal(r.getDecimal(3)), BigDecimal(r.getDecimal(4)),
-        BigDecimal(r.getDecimal(5)), BigDecimal(r.getDecimal(6)),
-        r.getLong(7)))).toMap
-    val nfTotal = rows.valuesIterator.map(_._7).sum
-    require(rows.nonEmpty && nfTotal == 0L,
-      s"deltaRatioCI: ${if (rows.isEmpty) "no" else nfTotal} values need " +
-        "more than 6 decimal places — the decimal(18,6) moments would " +
-        "round them silently; rescale to the 6-dp grid first")
+    val rows = Moments.pass(df, Seq(when(sampleACond, 1L).otherwise(0L)),
+      Seq(col(numCol), col(denCol)), Seq((0, 0), (1, 1), (1, 0)),
+      "deltaRatioCI", Moments.Cap(2, "2 arms"))(_.getLong(0))
     require(rows.contains(1L) && rows.contains(0L),
       "deltaRatioCI: both samples need rows " +
         s"(present: ${rows.keys.toSeq.sorted.mkString(", ")})")
     // per-sample delta-method variance of R = Σy/Σx, pinned chain
     def side(s: Long): (Long, Double, Double) = {
-      val (n, sy, sx, qy, qx, pxy, _) = rows(s)
+      val m = rows(s)
+      val (n, sy, sx, qy, qx, pxy) =
+        (m.n, m.s(0), m.s(1), m.q(0, 0), m.q(1, 1), m.q(1, 0))
       require(n >= 2, s"deltaRatioCI: sample ${if (s == 1L) "A" else "B"} " +
         s"needs >= 2 units, got $n")
       require(sx.signum != 0, s"deltaRatioCI: sample " +
@@ -2543,10 +2339,9 @@ object Stats {
     * — the [[deltaRatioCI]] variance with the covariate term removed.
     * Because L and C are affine in the four raw columns, EVERY
     * covariance above expands in raw cross moments — so the whole
-    * statistic is ONE pass grouped by the 0/1 indicator carrying the
-    * 14 pairwise products of (y, x, yc, xc) plus the four sums and n
-    * in exact decimals (6-dp sentinel over all four columns in the
-    * same pass), then pinned double algebra on the driver.
+    * statistic is one [[Moments.pass]] grouped by the 0/1 indicator
+    * carrying the 10 pairwise products of (y, x, yc, xc) plus the four
+    * sums and n, then pinned double algebra on the driver.
     *
     * `z` is the caller-supplied normal quantile ([[deltaRatioCI]]'s
     * convention). NULL in ANY of the four columns excludes the row
@@ -2565,78 +2360,46 @@ object Stats {
     require(z > 0.0, s"cupedRatio: z must be positive, got $z")
     val session = df.sparkSession
     import session.implicits._
-    def d6(c: org.apache.spark.sql.Column) = c.cast("decimal(18,6)")
-    val cols = Seq(numCol, denCol, covNumCol, covDenCol).map(col)
-    val names = Seq("y", "x", "yc", "xc")
-    val ia = when(sampleACond, 1L).otherwise(0L)
-    val fracChecks = cols.map(c =>
-      c.cast("double") =!= round(c.cast("double"), 6))
-    val nfCol = fracChecks.tail
-      .foldLeft(when(fracChecks.head, 1L))((acc, c) => acc.when(c, 1L))
-      .otherwise(0L)
-    val aggs: Seq[org.apache.spark.sql.Column] =
-      Seq(count(lit(1)).as("n")) ++
-      names.zip(cols).map { case (nm, c) => sum(d6(c)).as(s"s_$nm") } ++
-      (for (i <- 0 until 4; j <- i until 4)
-        yield sum(d6(cols(i)) * d6(cols(j)))
-          .as(s"p_${names(i)}_${names(j)}")) ++
-      Seq(sum(nfCol).as("nf"))
-    val rows = df
-      .filter(cols.map(finite).reduce(_ && _))
-      .groupBy(ia.as("ia"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map(r => r.getAs[Long]("ia") -> r)
-      .toMap
-    val nfTotal = rows.valuesIterator.map(_.getAs[Long]("nf")).sum
-    require(rows.nonEmpty && nfTotal == 0L,
-      s"cupedRatio: ${if (rows.isEmpty) "no" else nfTotal} values need " +
-        "more than 6 decimal places — the decimal(18,6) moments would " +
-        "round them silently; rescale to the 6-dp grid first")
+    // the four columns' indices in the pass: all 10 pairwise products
+    val (y, x, yc, xc) = (0, 1, 2, 3)
+    val rows = Moments.pass(df, Seq(when(sampleACond, 1L).otherwise(0L)),
+      Seq(numCol, denCol, covNumCol, covDenCol).map(col),
+      for (i <- 0 until 4; j <- i until 4) yield (i, j),
+      "cupedRatio", Moments.Cap(2, "2 arms"))(_.getLong(0))
     require(rows.contains(1L) && rows.contains(0L),
       "cupedRatio: both samples need rows after the NULL filter")
-    case class M(n: Long, s: Map[String, BigDecimal],
-                 p: Map[(String, String), BigDecimal])
-    def momentsOf(r: org.apache.spark.sql.Row): M = {
-      def dec(nm: String) = BigDecimal(r.getAs[java.math.BigDecimal](nm))
-      val p = (for (i <- 0 until 4; j <- i until 4) yield {
-        val v = dec(s"p_${names(i)}_${names(j)}")
-        Seq((names(i), names(j)) -> v, (names(j), names(i)) -> v)
-      }).flatten.toMap
-      M(r.getAs[Long]("n"), names.map(nm => nm -> dec(s"s_$nm")).toMap, p)
-    }
-    val ma = momentsOf(rows(1L))
-    val mb = momentsOf(rows(0L))
+    val ma = rows(1L)
+    val mb = rows(0L)
     require(ma.n >= 2 && mb.n >= 2,
       s"cupedRatio: both samples need >= 2 rows (n_a=${ma.n}, n_b=${mb.n})")
     // pooled exact totals → pooled constants
     val n = ma.n + mb.n
     val nD = n.toDouble
     val nm1 = (n - 1).toDouble
-    def sPool(nm: String) = (ma.s(nm) + mb.s(nm)).toDouble
-    def pPool(i: String, j: String) = (ma.p((i, j)) + mb.p((i, j))).toDouble
-    val sxP = sPool("x"); val sxcP = sPool("xc")
+    def sPool(i: Int) = (ma.s(i) + mb.s(i)).toDouble
+    def pPool(i: Int, j: Int) = (ma.q(i, j) + mb.q(i, j)).toDouble
+    val sxP = sPool(x); val sxcP = sPool(xc)
     require(sxP != 0.0 && sxcP != 0.0,
       "cupedRatio: zero pooled denominator total — the ratio (or its " +
         "covariate) is undefined")
-    val rP = sPool("y") / sxP
-    val rcP = sPool("yc") / sxcP
+    val rP = sPool(y) / sxP
+    val rcP = sPool(yc) / sxcP
     val mxP = sxP / nD
     val mxcP = sxcP / nD
     // pooled covariance of any two of the four columns (n−1 form)
-    def covP(i: String, j: String): Double =
+    def covP(i: Int, j: Int): Double =
       (pPool(i, j) - sPool(i) * sPool(j) / nD) / nm1
     // linearization coefficients: L = aL·y + bL·x, C = aC·yc + bC·xc
     val aL = 1.0 / mxP
     val bL = -(rP / mxP)
     val aC = 1.0 / mxcP
     val bC = -(rcP / mxcP)
-    val covLC = aL * aC * covP("y", "yc") + aL * bC * covP("y", "xc") +
-      bL * aC * covP("x", "yc") + bL * bC * covP("x", "xc")
-    val varC = aC * aC * covP("yc", "yc") + 2.0 * aC * bC * covP("yc", "xc") +
-      bC * bC * covP("xc", "xc")
-    val varL = aL * aL * covP("y", "y") + 2.0 * aL * bL * covP("y", "x") +
-      bL * bL * covP("x", "x")
+    val covLC = aL * aC * covP(y, yc) + aL * bC * covP(y, xc) +
+      bL * aC * covP(x, yc) + bL * bC * covP(x, xc)
+    val varC = aC * aC * covP(yc, yc) + 2.0 * aC * bC * covP(yc, xc) +
+      bC * bC * covP(xc, xc)
+    val varL = aL * aL * covP(y, y) + 2.0 * aL * bL * covP(y, x) +
+      bL * bL * covP(x, x)
     require(varC > 0.0,
       "cupedRatio: covariate linearization has zero pooled variance — " +
         "theta is undefined (a constant covariate cannot reduce anything)")
@@ -2646,28 +2409,28 @@ object Stats {
     val theta = covLC / varC
     val rho2 = theta * covLC / varL
     // per-arm readouts
-    def arm(m: M): (Double, Double, Double) = {
+    def arm(m: Moments.Cell): (Double, Double, Double) = {
       val nd = m.n.toDouble
       val nm = (m.n - 1).toDouble
-      val sxS = m.s("x").toDouble
+      val sxS = m.s(x).toDouble
       require(sxS != 0.0,
         "cupedRatio: zero denominator total in one arm — the arm ratio " +
           "is undefined")
-      val rS = m.s("y").toDouble / sxS
+      val rS = m.s(y).toDouble / sxS
       val mxS = sxS / nd
-      def covS(i: String, j: String): Double =
-        (m.p((i, j)).toDouble - m.s(i).toDouble * m.s(j).toDouble / nd) / nm
+      def covS(i: Int, j: Int): Double =
+        (m.q(i, j).toDouble - m.s(i).toDouble * m.s(j).toDouble / nd) / nm
       val aS = 1.0 / mxS
       val bS = -(rS / mxS)
-      val varLS = aS * aS * covS("y", "y") + 2.0 * aS * bS * covS("y", "x") +
-        bS * bS * covS("x", "x")
-      val covLCS = aS * aC * covS("y", "yc") + aS * bC * covS("y", "xc") +
-        bS * aC * covS("x", "yc") + bS * bC * covS("x", "xc")
-      val varCS = aC * aC * covS("yc", "yc") + 2.0 * aC * bC * covS("yc", "xc") +
-        bC * bC * covS("xc", "xc")
+      val varLS = aS * aS * covS(y, y) + 2.0 * aS * bS * covS(y, x) +
+        bS * bS * covS(x, x)
+      val covLCS = aS * aC * covS(y, yc) + aS * bC * covS(y, xc) +
+        bS * aC * covS(x, yc) + bS * bC * covS(x, xc)
+      val varCS = aC * aC * covS(yc, yc) + 2.0 * aC * bC * covS(yc, xc) +
+        bC * bC * covS(xc, xc)
       val vS = (varLS - 2.0 * theta * covLCS + theta * theta * varCS) / nd
       // the arm's covariate-linearization mean, with pooled constants
-      val cBar = aC * (m.s("yc").toDouble / nd) + bC * (m.s("xc").toDouble / nd)
+      val cBar = aC * (m.s(yc).toDouble / nd) + bC * (m.s(xc).toDouble / nd)
       (rS, vS, cBar)
     }
     val (ra, va, cA) = arm(ma)
@@ -2816,7 +2579,7 @@ object Stats {
     * O(partitions·B) tiny rows no matter the corpus size; index 0 is
     * the identity resample, so the full-sample mean rides the same
     * shuffle (no second scan). Exact-decimal weighted sums (the
-    * [[welchT]] 6-dp contract, sentinel in the same pass); the only
+    * [[Moments]] 6-dp contract, sentinel in the same pass); the only
     * doubles are the B+1 mean divisions and the rank picks.
     *
     * Resamples whose total weight is 0 (probability e⁻ⁿ per resample —
@@ -2840,12 +2603,9 @@ object Stats {
       s"bootstrapMeanCI: alpha must be in (0, 1), got $alpha")
     val session = df.sparkSession
     import session.implicits._
-    def d6(c: org.apache.spark.sql.Column) = c.cast("decimal(18,6)")
     val v = col(valueCol)
     val base = df.filter(finite(v) && col(keyCol).isNotNull)
-      .select(d6(v).as("v"),
-        when(v.cast("double") =!= round(v.cast("double"), 6), 1L)
-          .otherwise(0L).as("nf"),
+      .select(exact(v).as("v"), when(offGrid(v), 1L).otherwise(0L).as("nf"),
         col(keyCol).cast("long").as("__k"))
     // the explode multiplies rows (b+1)x AFTER the sentinel's key
     // shuffle ([[uniqueKeyedFanout]]): the expansion runs across all
@@ -2866,9 +2626,7 @@ object Stats {
       .toMap
     require(rows.contains(0), "bootstrapMeanCI: no rows after the NULL filter")
     val (s0, n0, nf0) = rows(0)
-    require(nf0 == 0L,
-      s"bootstrapMeanCI: $nf0 values need more than 6 decimal places — " +
-        "the decimal(18,6) sums would round them silently; rescale first")
+    Moments.requireOnGrid(nf0, "bootstrapMeanCI")
     require(n0 >= 2, s"bootstrapMeanCI: need >= 2 rows, got $n0")
     val mean = s0.toDouble / n0.toDouble
     val means = rows.toSeq.collect {
@@ -2983,13 +2741,11 @@ object Stats {
       s"bootstrapMeanCIByGroup: alpha must be in (0, 1), got $alpha")
     val session = df.sparkSession
     import session.implicits._
-    def d6(c: org.apache.spark.sql.Column) = c.cast("decimal(18,6)")
     val v = col(valueCol)
     val base = df.filter(finite(v) && col(keyCol).isNotNull &&
         col(groupCol).isNotNull)
-      .select(col(groupCol).cast("string").as("g"), d6(v).as("v"),
-        when(v.cast("double") =!= round(v.cast("double"), 6), 1L)
-          .otherwise(0L).as("nf"),
+      .select(col(groupCol).cast("string").as("g"), exact(v).as("v"),
+        when(offGrid(v), 1L).otherwise(0L).as("nf"),
         col(keyCol).cast("long").as("__k"))
     val src = uniqueKeyedFanout(base, "bootstrapMeanCIByGroup")
     val wArr = graft.functions.BootstrapWeights.weights(session, col("__k"), b)
@@ -3011,15 +2767,14 @@ object Stats {
         "deliberately or pre-aggregate the group key")
     val byCell = cellRows.map(r => (r.getString(0), r.getInt(1)) ->
       ((BigDecimal(r.getDecimal(2)), r.getLong(3), r.getLong(4)))).toMap
+    require(byCell.nonEmpty, "bootstrapMeanCIByGroup: no rows with a " +
+      "non-NULL finite value, key and group")
     // each source row's nf flag lands in ALL b+1 of its (group, resample)
     // cells — divide the cell total back down so the message reports the
     // offending ROW count, not (b+1)x it (the trigger is unchanged:
     // the sum is zero iff no row is fractional)
-    val nfTotal = byCell.valuesIterator.map(_._3).sum / (b + 1L)
-    require(byCell.nonEmpty && nfTotal == 0L,
-      s"bootstrapMeanCIByGroup: ${if (byCell.isEmpty) "no" else nfTotal} " +
-        "values need more than 6 decimal places — the decimal(18,6) sums " +
-        "would round them silently; rescale first")
+    Moments.requireOnGrid(byCell.valuesIterator.map(_._3).sum / (b + 1L),
+      "bootstrapMeanCIByGroup")
     val groups = byCell.keysIterator.map(_._1).toSeq.distinct.sorted
     val aLo = alpha / 2.0
     val aHi = 1.0 - aLo
@@ -3065,13 +2820,11 @@ object Stats {
       s"bootstrapDiffCI: alpha must be in (0, 1), got $alpha")
     val session = df.sparkSession
     import session.implicits._
-    def d6(c: org.apache.spark.sql.Column) = c.cast("decimal(18,6)")
     val v = col(valueCol)
     val base = df.filter(finite(v) && col(keyCol).isNotNull)
-      .select(d6(v).as("v"),
+      .select(exact(v).as("v"),
         when(sampleACond, 1L).otherwise(0L).as("ia"),
-        when(v.cast("double") =!= round(v.cast("double"), 6), 1L)
-          .otherwise(0L).as("nf"),
+        when(offGrid(v), 1L).otherwise(0L).as("nf"),
         col(keyCol).cast("long").as("__k"))
     val src = uniqueKeyedFanout(base, "bootstrapDiffCI")
     val wArr = graft.functions.BootstrapWeights.weights(session, col("__k"), b)
@@ -3090,9 +2843,7 @@ object Stats {
       cells.getOrElse((j, ia), (BigDecimal(0), 0L, 0L))
     val (sa0, na0, nfa0) = cell(0, 1L)
     val (sb0, nb0, nfb0) = cell(0, 0L)
-    require(nfa0 + nfb0 == 0L,
-      s"bootstrapDiffCI: ${nfa0 + nfb0} values need more than 6 decimal " +
-        "places — the decimal(18,6) sums would round them silently")
+    Moments.requireOnGrid(nfa0 + nfb0, "bootstrapDiffCI")
     require(na0 >= 2 && nb0 >= 2,
       s"bootstrapDiffCI: both samples need >= 2 rows (n_a=$na0, n_b=$nb0)")
     val diff = sa0.toDouble / na0.toDouble - sb0.toDouble / nb0.toDouble
@@ -3671,9 +3422,8 @@ object Stats {
     *
     * Scale shape: ONE corpus scan into the per-(group, distinct value)
     * counts frame ([[groupedCounts]]); per-group totals are exact
-    * (counts as longs, value sums in decimal — a value needing more
-    * than 6 dp fails the integrality sentinel LOUDLY, the [[gini]]
-    * hazard class), the per-group ln-moment Σ c·v·ln(v) is the one
+    * (counts as longs, value sums in decimal under the [[Moments]]
+    * 6-dp contract), the per-group ln-moment Σ c·v·ln(v) is the one
     * distributed double sum, and the |groups|-row driver fold finishes
     * in pinned group-sorted order. Values must be STRICTLY POSITIVE
     * (ln domain), fail loud. One row out:
@@ -3684,22 +3434,20 @@ object Stats {
     val session = df.sparkSession
     import session.implicits._
     val counts = groupedCounts(df, groupCol, valueCol)
-    def d6(c: org.apache.spark.sql.Column) = c.cast("decimal(18,6)")
     val rows = counts.groupBy(col("g"))
       .agg(min(col("v")).as("mn"),
         sum(col("c")).as("n"),
         // (18,6)·(14,0) = decimal(33,6): exact product, exact sum
         // (ANSI: a per-value multiplicity past 1e14 overflows LOUD)
-        sum(d6(col("v")) * col("c").cast("decimal(14,0)")).as("x"),
+        sum(exact(col("v")) * col("c").cast("decimal(14,0)")).as("x"),
         // ln guarded on the positive branch so a domain violation
         // reaches the loud `require` below (ANSI log(≤0) would throw a
         // bare SparkRuntimeException mid-aggregation instead)
         sum(when(col("v") > 0,
           col("c").cast("double") * col("v") * log(col("v")))
           .otherwise(lit(0.0))).as("m"),
-        // 6-dp sentinel: the decimal(18,6) cast above ROUNDS deeper
-        // fractions — loud, never silent (gini's contract)
-        sum(when(col("v") =!= round(col("v"), 6), 1L).otherwise(0L)).as("nf"))
+        // the 6-dp sentinel: loud, never silently rounded
+        sum(when(offGrid(col("v")), 1L).otherwise(0L)).as("nf"))
       .collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getLong(2),
         BigDecimal(r.getDecimal(3)), r.getDouble(4), r.getLong(5)))
@@ -3711,9 +3459,7 @@ object Stats {
     rows.foreach { case (g, mn, _, _, _, nf) =>
       require(mn > 0.0,
         s"theilDecomposition: values must be strictly positive (group '$g', min=$mn)")
-      require(nf == 0L,
-        s"theilDecomposition: $nf values in group '$g' need more than 6 " +
-          "decimal places — rescale to the 6-dp grid first")
+      Moments.requireOnGrid(nf, s"theilDecomposition (group '$g')")
     }
     val nTot = rows.map(_._3).sum
     val xTot = rows.map(_._4).sum // exact decimal grand total
@@ -3771,8 +3517,8 @@ object Stats {
     * min/max probe, then ONE partial-agged hash aggregation to ≤ bins
     * rows (eagerly collected — no cache outlives the call). Mean
     * scores sum in decimal(28,6), exact in any order for ≤6-dp
-    * scores (deeper fractions trip the same-pass sentinel, the
-    * [[gini]] hazard class); positive counts are exact longs; the
+    * scores (deeper fractions trip the same-pass [[Moments.offGrid]]
+    * sentinel); positive counts are exact longs; the
     * only doubles are the two final per-bin divisions. NULL scores
     * are excluded (observed-values policy).
     */
@@ -3797,7 +3543,7 @@ object Stats {
       .agg(count(lit(1)).as("n"),
         sum(col("v").cast("decimal(28,6)")).as("s"),
         sum(col("pos")).as("np"),
-        sum(when(col("v") =!= round(col("v"), 6), 1L).otherwise(0L)).as("nf"))
+        sum(when(offGrid(col("v")), 1L).otherwise(0L)).as("nf"))
       .collect()
     pts.unpersist()
     val nFrac = rows.map(_.getLong(4)).sum

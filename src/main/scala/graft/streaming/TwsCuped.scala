@@ -82,16 +82,10 @@ object TwsCuped {
         // the batch gate is finite(y) && finite(x): a non-finite value
         // in EITHER column drops the pair
         if (java.lang.Double.isFinite(o.y) && java.lang.Double.isFinite(o.x)) {
-          def grid(v: Double, colName: String): BigDecimal = {
-            val d = BigDecimal(java.math.BigDecimal.valueOf(v)
-              .setScale(6, java.math.RoundingMode.HALF_UP))
-            require(d.toDouble == v,
-              s"TwsCuped: $colName value $v for metric '$key' needs " +
-                "more than 6 decimal places — rescale to the 6-dp grid " +
-                "first (the batch sentinel's streaming face)")
-            d
-          }
-          val dy = grid(o.y, "metric"); val dx = grid(o.x, "covariate")
+          val dy = graft.operators.Moments.onGrid(o.y, "TwsCuped",
+            s"metric value ${o.y} for metric '$key'")
+          val dx = graft.operators.Moments.onGrid(o.x, "TwsCuped",
+            s"covariate value ${o.x} for metric '$key'")
           if (o.armA) {
             na += 1L; sya += dy; sxa += dx
             qya += dy * dy; qxa += dx * dx; pa += dx * dy

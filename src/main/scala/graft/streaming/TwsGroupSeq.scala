@@ -82,12 +82,8 @@ object TwsGroupSeq {
         // NaN and ±Infinity skip: the batch finite() gate's streaming
         // face (BigDecimal.valueOf(±Inf) would crash the stream)
         if (java.lang.Double.isFinite(o.value)) {
-          val d = BigDecimal(java.math.BigDecimal.valueOf(o.value)
-            .setScale(6, java.math.RoundingMode.HALF_UP))
-          require(d.toDouble == o.value,
-            s"TwsGroupSeq: value ${o.value} for metric '$key' needs " +
-              "more than 6 decimal places — rescale to the 6-dp grid " +
-              "first (the batch sentinel's streaming face)")
+          val d = graft.operators.Moments.onGrid(o.value, "TwsGroupSeq",
+            s"value ${o.value} for metric '$key'")
           val st =
             if (looks.containsKey(o.look)) looks.getValue(o.look)
             else LookMoments(0L, "0", "0", 0L, "0", "0")

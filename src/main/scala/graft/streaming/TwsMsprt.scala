@@ -76,15 +76,8 @@ object TwsMsprt {
         // (BigDecimal.valueOf(±Inf) would throw, crashing the stream —
         // a hole in the stream-equals-batch contract if only NaN gated.)
         if (java.lang.Double.isFinite(o.value)) {
-          // the batch cast-to-decimal(18,6) on the 6-dp grid, exactly;
-          // off-grid values fail LOUD like the batch sentinel — a
-          // silent round here would diverge from the batch answer
-          val d = BigDecimal(java.math.BigDecimal.valueOf(o.value)
-            .setScale(6, java.math.RoundingMode.HALF_UP))
-          require(d.toDouble == o.value,
-            s"TwsMsprt: value ${o.value} for metric '$key' needs more " +
-              "than 6 decimal places — rescale to the 6-dp grid first " +
-              "(the batch msprt sentinel's streaming face)")
+          val d = graft.operators.Moments.onGrid(o.value, "TwsMsprt",
+            s"value ${o.value} for metric '$key'")
           if (o.armA) { na += 1L; sa += d; qa += d * d }
           else { nb += 1L; sb += d; qb += d * d }
           absorbed = true

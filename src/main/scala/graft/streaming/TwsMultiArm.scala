@@ -79,12 +79,8 @@ object TwsMultiArm {
         // NaN and ±Infinity skip: the batch finite() gate's streaming
         // face (BigDecimal.valueOf(±Inf) would crash the stream)
         if (java.lang.Double.isFinite(o.value)) {
-          val d = BigDecimal(java.math.BigDecimal.valueOf(o.value)
-            .setScale(6, java.math.RoundingMode.HALF_UP))
-          require(d.toDouble == o.value,
-            s"TwsMultiArm: value ${o.value} for metric '$key' needs " +
-              "more than 6 decimal places — rescale to the 6-dp grid " +
-              "first (the batch sentinel's streaming face)")
+          val d = graft.operators.Moments.onGrid(o.value, "TwsMultiArm",
+            s"value ${o.value} for metric '$key'")
           val st =
             if (arms.containsKey(o.arm)) arms.getValue(o.arm)
             else ArmMoments(0L, "0", "0")

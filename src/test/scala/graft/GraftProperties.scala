@@ -346,3 +346,79 @@ object StatsChainProperties extends Properties("graft.statschains") {
         }
     }
 }
+
+/** Properties of the exact-moment kernel (`graft.operators.Moments`).
+  * Unlike the objects above these run Spark jobs on the shared test
+  * session, so each property checks fewer (but multi-row) samples. */
+object MomentsProperties extends Properties("graft.moments") {
+  import graft.operators.Moments
+  import org.apache.spark.sql.functions.col
+
+  override def overrideParameters(p: org.scalacheck.Test.Parameters) =
+    p.withMinSuccessfulTests(20)
+
+  private lazy val spark = TestSpark.spark
+
+  /** A 6-dp grid value, |v| < 1e6: l·10⁻⁶ with |l| < 1e12 has at most 15
+    * significant digits, so the double round-trips to that decimal. */
+  private val genGrid: Gen[BigDecimal] =
+    Gen.choose(-999999999999L, 999999999999L).map(l => BigDecimal(l, 6))
+
+  property("pass == a driver-side BigDecimal fold, on any partitioning") = {
+    // (key or NULL, v or a non-finite marker, x)
+    val genRow = for {
+      k <- Gen.frequency(8 -> Gen.choose(0, 4).map(i => Option(s"k$i")), 1 -> Gen.const(None))
+      v <- Gen.frequency(8 -> genGrid.map(d => Option(d.toDouble)),
+        1 -> Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+          .map(Option(_)), 1 -> Gen.const(None))
+      x <- genGrid.map(_.toDouble)
+    } yield (k, v, x)
+    forAll(Gen.listOf(genRow).map(_.take(60)), Gen.choose(1, 6)) { (rows, parts) =>
+      val session = spark
+      import session.implicits._
+      val df = rows.toDF("k", "v", "x").repartition(parts)
+      val got = Moments.pass(df, Seq(col("k")), Seq(col("v"), col("x")),
+        Seq((0, 0), (1, 1), (1, 0)), "prop", Moments.Cap(10, "10 keys"))(_.getString(0))
+      val kept = rows.collect { case (Some(k), Some(v), x) if !v.isNaN && !v.isInfinite =>
+        (k, BigDecimal(v), BigDecimal(x)) }
+      val want = kept.groupBy(_._1).map { case (k, rs) =>
+        k -> ((rs.size.toLong, rs.map(_._2).sum, rs.map(_._3).sum,
+          rs.map(r => r._2 * r._2).sum, rs.map(r => r._3 * r._3).sum,
+          rs.map(r => r._3 * r._2).sum))
+      }
+      got.map { case (k, m) =>
+        k -> ((m.n, m.s(0), m.s(1), m.q(0, 0), m.q(1, 1), m.q(0, 1)))
+      } == want
+    }
+  }
+
+  property("onGrid accepts exactly the values the batch offGrid accepts, as the same decimal") = {
+    // 6-dp values, 7-dp values, and doubles one ulp either side of a
+    // 6-dp half step (where HALF_UP decides)
+    val genValue: Gen[Double] = Gen.oneOf(
+      genGrid.map(_.toDouble),
+      Gen.choose(-99999999999L, 99999999999L).map(l => BigDecimal(l, 7).toDouble),
+      for {
+        d <- genGrid
+        step <- Gen.oneOf(-1, 0, 1)
+      } yield {
+        val half = (d + BigDecimal(5, 7)).toDouble
+        if (step < 0) math.nextDown(half) else if (step > 0) math.nextUp(half) else half
+      })
+    forAll(Gen.listOfN(40, genValue)) { vs =>
+      val session = spark
+      import session.implicits._
+      val batch = vs.toDF("v")
+        .select(col("v"), Moments.offGrid(col("v")), Moments.exact(col("v")))
+        .collect().map(r => r.getDouble(0) -> ((r.getBoolean(1), BigDecimal(r.getDecimal(2)))))
+        .toMap
+      vs.forall { v =>
+        val (off, exact) = batch(v)
+        scala.util.Try(Moments.onGrid(v, "prop", "v")).toOption match {
+          case Some(d) => !off && d == exact
+          case None => off
+        }
+      }
+    }
+  }
+}
