@@ -1,21 +1,23 @@
 #!/usr/bin/env python3
-"""Noise-aware comparison of two graft.Bench artifacts (dev tool).
+"""Compare two graft.Bench artifacts entry by entry (dev tool).
 
-Usage: python3 scripts/bench_diff.py OLD.json NEW.json [--threshold 1.5]
+Usage: python3 scripts/bench_diff.py OLD.json NEW.json [--threshold=1.5]
 
-Classifies each query's delta using the evidence the artifact carries:
-  - REGRESSION: new min > threshold x old min AND the new run's samples
-    are consistent (spread < 3x), so it is not one interference spike;
-  - SUSPECT: slower past threshold but with a wide sample spread or a
-    noisy sentinel window -> re-measure before believing it;
-  - IMPROVED: new min < old min / threshold;
-  - new/removed queries listed separately.
-
-The noise floor (sentinel timings between re-measures) is summarized
-for both runs; a noisy floor downgrades regressions to SUSPECT.
+Each entry is judged from its own samples (`samples`: wall seconds per
+round) and its process CPU seconds (`cpu_s`, same shape):
+  - REGRESSION: new min wall > threshold x old min wall, and either the
+    min CPU grew past the threshold too or the new wall samples agree
+    (max/min <= 2), so it is not one interference spike;
+  - SUSPECT: slower past threshold, but the new wall samples spread wide
+    and CPU did not grow -> re-measure before believing it;
+  - improved: new min wall < old min wall / threshold.
+An entry without a `samples` array (artifacts from before the
+three-round protocol) counts as one sample, its number of record.
 """
 import json
 import sys
+
+SPREAD = 2.0
 
 
 def load(path):
@@ -23,55 +25,59 @@ def load(path):
         return json.load(f)
 
 
+def entries(art):
+    """name -> (wall samples, cpu samples or None) for every good entry."""
+    out = {}
+    for name, v in art["queries"].items():
+        if v < 0:
+            continue
+        wall = [s for s in art.get("samples", {}).get(name, [v]) if s >= 0]
+        cpu = [s for s in art.get("cpu_s", {}).get(name, []) if s >= 0]
+        out[name] = (wall or [v], cpu or None)
+    return out
+
+
+def describe(label, art, es):
+    cpus = [min(c) for _, c in es.values() if c]
+    cpu = f", cpu {sum(cpus):.1f}s" if len(cpus) == len(es) else ""
+    print(f"{label}: {art['value']:.1f}s over {len(art['queries'])} entries{cpu}")
+
+
 def main(old_path, new_path, threshold=1.5):
     old, new = load(old_path), load(new_path)
-    oq, nq = old["queries"], new["queries"]
-    osamp, nsamp = old.get("samples", {}), new.get("samples", {})
-    ofloor = old.get("noise_floor", [])
-    nfloor = new.get("noise_floor", [])
+    oe, ne = entries(old), entries(new)
+    describe("old", old, oe)
+    describe("new", new, ne)
 
-    def floor_noisy(floor):
-        return bool(floor) and max(floor) > 5 * (min(floor) or 0.1)
-
-    new_noisy = floor_noisy(nfloor)
-    print(f"old: {old['value']:.1f}s over {len(oq)} queries "
-          f"(floor max {max(ofloor):.2f}s)" if ofloor else f"old: {old['value']:.1f}s")
-    print(f"new: {new['value']:.1f}s over {len(nq)} queries "
-          f"(floor max {max(nfloor):.2f}s{', NOISY' if new_noisy else ''})"
-          if nfloor else f"new: {new['value']:.1f}s")
-
-    added = sorted(set(nq) - set(oq))
-    removed = sorted(set(oq) - set(nq))
+    added = sorted(set(new["queries"]) - set(old["queries"]))
+    removed = sorted(set(old["queries"]) - set(new["queries"]))
     if added:
         print(f"added ({len(added)}): {', '.join(added)}")
     if removed:
         print(f"removed ({len(removed)}): {', '.join(removed)}")
+    for name in sorted(set(new.get("failed", [])) & set(old["queries"])):
+        print(f"FAILED in new run: {name}")
 
     regressions, suspects, improved = [], [], []
-    for name in sorted(set(oq) & set(nq)):
-        o, n = oq[name], nq[name]
-        if o < 0 or n < 0:
-            if n < 0:
-                print(f"FAILED in new run: {name}")
-            continue
+    for name in sorted(set(oe) & set(ne)):
+        (ow, oc), (nw, nc) = oe[name], ne[name]
+        o, n = min(ow), min(nw)
         if o <= 0.05:  # too fast to trend
             continue
         ratio = n / o
+        row = (ratio, name, o, n, nw, nc)
         if ratio > threshold:
-            ss = nsamp.get(name, [n])
-            spread = max(ss) / max(min(ss), 1e-3)
-            if new_noisy or spread > 3:
-                suspects.append((ratio, name, o, n, ss))
-            else:
-                regressions.append((ratio, name, o, n, ss))
+            cpu_grew = bool(oc and nc) and min(nc) > threshold * max(min(oc), 1e-3)
+            consistent = max(nw) <= SPREAD * max(n, 1e-3)
+            (regressions if cpu_grew or consistent else suspects).append(row)
         elif ratio < 1 / threshold:
-            improved.append((ratio, name, o, n))
+            improved.append(row)
 
-    for tag, rows in (("REGRESSION", regressions), ("SUSPECT", suspects)):
-        for ratio, name, o, n, ss in sorted(rows, reverse=True):
-            print(f"{tag} {name}: {o:.2f}s -> {n:.2f}s ({ratio:.1f}x) samples={ss}")
-    for ratio, name, o, n in sorted(improved):
-        print(f"improved {name}: {o:.2f}s -> {n:.2f}s ({ratio:.2f}x)")
+    for tag, rows in (("REGRESSION", regressions), ("SUSPECT", suspects),
+                      ("improved", improved)):
+        for ratio, name, o, n, nw, nc in sorted(rows, reverse=tag != "improved"):
+            cpu = f" cpu={nc}" if nc else ""
+            print(f"{tag} {name}: {o:.2f}s -> {n:.2f}s ({ratio:.2f}x) samples={nw}{cpu}")
     print(f"\n{len(regressions)} regressions, {len(suspects)} suspects, "
           f"{len(improved)} improved")
     return 1 if regressions else 0
@@ -81,6 +87,6 @@ if __name__ == "__main__":
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     thr = 1.5
     for a in sys.argv[1:]:
-        if a.startswith("--threshold"):
-            thr = float(a.split("=", 1)[1]) if "=" in a else thr
+        if a.startswith("--threshold="):
+            thr = float(a.split("=", 1)[1])
     sys.exit(main(args[0], args[1], thr))

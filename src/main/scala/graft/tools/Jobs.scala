@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -52,11 +53,15 @@ object Jobs {
 
     names.foreach { n =>
       (1 to 2).foreach { pass =>
+        // drain before clearing and after the pass: otherwise a pass's
+        // last job can land in the next pass's count
+        GraftListenerBus.drain(spark.sparkContext)
         lines.clear(); stageTasks.clear()
         val t0 = System.nanoTime()
         SparkEntry.queries.getOrElse(n, SparkEntry.benchOnly(n))(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         val total = (System.nanoTime() - t0) / 1e9
+        GraftListenerBus.drain(spark.sparkContext)
         println(f"== $n pass $pass: $total%.2f s, ${lines.size} jobs")
         lines.forEach(println(_))
         val byStage = stageTasks.values().toArray.toSeq

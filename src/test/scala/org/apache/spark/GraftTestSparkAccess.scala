@@ -10,8 +10,8 @@ object GraftTestSparkAccess {
   def clearCheckpointDir(sc: SparkContext): Unit = sc.checkpointDir = None
 
   /** Drain the async listener bus so a test's SparkListener counters
-    * are complete before assertion (`listenerBus` is private[spark]). */
-  def waitListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+    * are complete before assertion. */
+  def waitListenerBus(sc: SparkContext): Unit = GraftListenerBus.drain(sc)
 
   /** Count of EXPLICITLY persisted RDDs — localCheckpoint marks are
     * excluded (`isLocallyCheckpointed` is private[spark]), so the
