@@ -73,7 +73,8 @@ object Bench {
 
   /** Render `results` as the artifact line, the `heaviest_s` line (the
     * 20 heaviest entries in at most 600 chars, the lightest dropped
-    * first if names run long) and the compact summary line. */
+    * first if names run long) and the compact summary line, whose
+    * `cpu_s` sums each good entry's min CPU sample. */
   def render(results: Seq[Result], sfDir: String, outPath: String): Report = {
     val good = results.filterNot(_.failed)
     val total = good.map(_.value).sum
