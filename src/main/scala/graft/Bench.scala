@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.{Sessions, Tables}
 
-/** Benchmark main (driver contract): times every declared query against
+/** Benchmark main: times every declared query against
   * SPARK_GRAFT_SF_DIR (default sf0.1) and writes the per-query map to
   * SPARK_GRAFT_BENCH_OUT (default bench_out.json).
   *
@@ -97,11 +97,11 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val timed = SparkEntry.queries ++ SparkEntry.benchOnly
     val unknown = args.filterNot(timed.contains)
     require(unknown.isEmpty, s"unknown bench entries: ${unknown.mkString(", ")}")
     val entries = if (args.isEmpty) timed.toSeq else args.toSeq.distinct.map(n => n -> timed(n))
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors())
@@ -110,8 +110,8 @@ object Bench {
       shufflePartitions = cpus, appName = "graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val report = render(sweep(spark, sfDir, entries), sfDir, outPath)
-    // the file is authoritative: the driver keeps only a 2000-char tail
-    // of stdout, too short for the per-query map
+    // the file is authoritative: a reader that keeps only a 2000-char
+    // tail of stdout cannot see the per-query map
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (report.artifact + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable =>
