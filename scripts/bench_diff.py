@@ -5,19 +5,17 @@ Usage: python3 scripts/bench_diff.py OLD.json NEW.json [--threshold=1.5]
 
 Each entry is judged from its own samples (`samples`: wall seconds per
 round) and its process CPU seconds (`cpu_s`, same shape):
-  - REGRESSION: new min wall > threshold x old min wall, and either the
-    min CPU grew past the threshold too or the new wall samples agree
-    (max/min <= 2), so it is not one interference spike;
-  - SUSPECT: slower past threshold, but the new wall samples spread wide
-    and CPU did not grow -> re-measure before believing it;
+  - REGRESSION: new min wall > threshold x old min wall, and either
+    both sides carry `cpu_s` and the min CPU grew past the threshold
+    too, or every new wall sample is above every old wall sample;
+  - SUSPECT: slower past threshold, but the CPU did not grow and the
+    old and new wall samples overlap -> re-measure before believing it;
   - improved: new min wall < old min wall / threshold.
 An entry without a `samples` array (artifacts from before the
 three-round protocol) counts as one sample, its number of record.
 """
 import json
 import sys
-
-SPREAD = 2.0
 
 
 def load(path):
@@ -68,8 +66,8 @@ def main(old_path, new_path, threshold=1.5):
         row = (ratio, name, o, n, nw, nc)
         if ratio > threshold:
             cpu_grew = bool(oc and nc) and min(nc) > threshold * max(min(oc), 1e-3)
-            consistent = max(nw) <= SPREAD * max(n, 1e-3)
-            (regressions if cpu_grew or consistent else suspects).append(row)
+            apart = n > max(ow)
+            (regressions if cpu_grew or apart else suspects).append(row)
         elif ratio < 1 / threshold:
             improved.append(row)
 

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Column (and SQL `graft_bloom_might_contain`) front end for Spark's
@@ -22,6 +22,6 @@ import org.apache.spark.sql.GraftColumns.{column, expression}
 object BloomMightContain {
 
   /** `bloomBytes` must be a BINARY literal (constant), `value` a LONG. */
-  def mightContain(spark: SparkSession, bloomBytes: Column, value: Column): Column =
+  def mightContain(bloomBytes: Column, value: Column): Column =
     column(BloomFilterMightContain(expression(bloomBytes), expression(value)))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Deterministic Poisson-bootstrap resample weights of a row — the
@@ -100,6 +100,6 @@ object BootstrapWeights {
   }
 
   /** Column form: array of b+1 multiplicities (index 0 = identity). */
-  def weights(spark: SparkSession, key: Column, b: Int): Column =
+  def weights(key: Column, b: Int): Column =
     column(BootstrapWeights(expression(key), b))
 }

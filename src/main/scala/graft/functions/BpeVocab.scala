@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -182,7 +182,6 @@ final class BpeMergeTable(xs: Array[String], ys: Array[String])
 object BpeEncodeVocab {
   /** Column form: pre-token array → merged token array under the
     * literal `merges` table (rank = position). */
-  def encode(spark: SparkSession, preTokens: Column,
-             merges: Seq[(String, String)]): Column =
+  def encode(preTokens: Column, merges: Seq[(String, String)]): Column =
     column(BpeEncodeVocab(expression(preTokens), merges.map(_._1), merges.map(_._2)))
 }

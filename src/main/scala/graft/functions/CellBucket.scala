@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Coarse-bucket id of a fine cell: `count of boundaries <= cell` for
@@ -72,6 +72,6 @@ object CellBucket {
   /** Column form: bucket id (int) of the long `cell` under ascending
     * `bounds`. The boundary array is expression state, never
     * per-element expression children. */
-  def bucket(spark: SparkSession, cell: Column, bounds: Array[Long]): Column =
+  def bucket(cell: Column, bounds: Array[Long]): Column =
     column(CellBucket(expression(cell), bounds.toSeq))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -79,7 +79,7 @@ object ChunkStrings {
   private def isSpace(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f' || c == 0x0b
 
-  def chunkStrings(spark: SparkSession, text: Column, width: Int): Column =
+  def chunkStrings(text: Column, width: Int): Column =
     column(ChunkStrings(expression(text), width))
 }
 
@@ -161,7 +161,7 @@ object ChunkHashes {
   private def isSpace(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f' || b == 0x0b
 
-  def chunkHashes(spark: SparkSession, text: Column, width: Int): Column =
+  def chunkHashes(text: Column, width: Int): Column =
     column(ChunkHashes(expression(text), width))
 }
 
@@ -233,7 +233,7 @@ object OverlapChunkStrings {
   private def isSpace(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f' || c == 0x0b
 
-  def overlapChunks(spark: SparkSession, text: Column, width: Int, stride: Int): Column =
+  def overlapChunks(text: Column, width: Int, stride: Int): Column =
     column(OverlapChunkStrings(expression(text), width, stride))
 }
 
@@ -269,6 +269,6 @@ object RollingHashes {
   def compute(text: UTF8String, width: Int): ArrayData =
     ChunkHashes.compute(text, width, 1)
 
-  def rollingHashes(spark: SparkSession, text: Column, width: Int): Column =
+  def rollingHashes(text: Column, width: Int): Column =
     column(RollingHashes(expression(text), width))
 }

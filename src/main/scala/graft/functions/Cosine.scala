@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Cosine similarity over ARRAY(FLOAT)/ARRAY(DOUBLE) as a native
@@ -64,6 +64,6 @@ object CosineSimilarity {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  def cosine(spark: SparkSession, a: Column, b: Column): Column =
+  def cosine(a: Column, b: Column): Column =
     column(CosineSimilarity(expression(a), expression(b)))
 }

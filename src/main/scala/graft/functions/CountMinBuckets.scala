@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** The d count-min-sketch bucket indices of a 64-bit key, as a native
@@ -58,6 +58,6 @@ object CountMinBuckets {
     new GenericArrayData(out)
   }
 
-  def buckets(spark: SparkSession, key: Column, d: Int, w: Int): Column =
+  def buckets(key: Column, d: Int, w: Int): Column =
     column(CountMinBuckets(expression(key), d, w))
 }

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -51,6 +51,6 @@ object Fnv1a64 {
     h
   }
 
-  def fnv64(spark: SparkSession, c: Column): Column =
+  def fnv64(c: Column): Column =
     column(Fnv1a64(expression(c)))
 }

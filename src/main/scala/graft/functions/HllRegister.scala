@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** HyperLogLog register coordinates `[bucket, rho]` of a 64-bit key,
@@ -66,6 +66,6 @@ object HllRegister {
     new GenericArrayData(Array(bucket, rho))
   }
 
-  def registerCoords(spark: SparkSession, key: Column, p: Int): Column =
+  def registerCoords(key: Column, p: Int): Column =
     column(HllRegister(expression(key), p))
 }

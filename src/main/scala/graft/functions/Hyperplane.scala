@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Random-hyperplane LSH signature as a native Catalyst expression:
@@ -136,7 +136,7 @@ object HyperplaneSignature {
     sig
   }
 
-  def signature(spark: SparkSession, vec: Column, planes: Int, seed: Long): Column =
+  def signature(vec: Column, planes: Int, seed: Long): Column =
     column(HyperplaneSignature(expression(vec), planes, seed))
 
   /** Raw projections (not just their signs) against the same weight
@@ -211,6 +211,6 @@ case class RandomProjection(child: Expression, planes: Int, seed: Long)
 }
 
 object RandomProjection {
-  def project(spark: SparkSession, vec: Column, planes: Int, seed: Long): Column =
+  def project(vec: Column, planes: Int, seed: Long): Column =
     column(RandomProjection(expression(vec), planes, seed))
 }

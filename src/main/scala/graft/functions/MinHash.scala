@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** MinHash signature as a native Catalyst expression: for an
@@ -67,6 +67,6 @@ object MinHashSignature {
     new GenericArrayData(mins)
   }
 
-  def signature(spark: SparkSession, hashes: Column, k: Int): Column =
+  def signature(hashes: Column, k: Int): Column =
     column(MinHashSignature(expression(hashes), k))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Nearest-centroid assignment as a native expression: the argmax of
@@ -117,6 +117,6 @@ object NearestCentroid {
     bestIdx
   }
 
-  def nearest(spark: SparkSession, vec: Column, cents: Column): Column =
+  def nearest(vec: Column, cents: Column): Column =
     column(NearestCentroid(expression(vec), expression(cents)))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Int8 scalar-quantization statistics for one embedding in a single
@@ -97,6 +97,6 @@ object QuantStats {
     new GenericInternalRow(Array[Any](scale, qsum, qmin, qmax))
   }
 
-  def stats(spark: SparkSession, vec: Column): Column =
+  def stats(vec: Column): Column =
     column(QuantStats(expression(vec)))
 }

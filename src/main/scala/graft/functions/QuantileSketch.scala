@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Mergeable KLL-style quantile-sketch buffer: a ladder of value
@@ -669,48 +669,39 @@ object KllValues {
 
 object KllQuantiles {
 
-  /** Installs the SQL surface (`graft_kll_quantiles`, `graft_kll_*`, …)
-    * on a plain session — see [[SqlFunctions.register]]. */
-  def register(spark: SparkSession): Unit = SqlFunctions.register(spark)
-
-  def registerWeighted(spark: SparkSession): Unit = SqlFunctions.register(spark)
-
   /** Column form: `array<double>` of the `ps` quantiles of `value`. */
-  def kllQuantiles(spark: SparkSession, value: Column,
-                   ps: Seq[Double], k: Int): Column =
+  def kllQuantiles(value: Column, ps: Seq[Double], k: Int): Column =
     column(KllQuantiles(expression(value.cast("double")), ps, k))
 
   /** Column form: `array<double>` of the `ps` quantiles of the
     * expanded multiset (`value` with integer multiplicity `weight`). */
-  def kllQuantilesWeighted(spark: SparkSession, value: Column,
-                           weight: Column, ps: Seq[Double], k: Int): Column =
+  def kllQuantilesWeighted(value: Column, weight: Column, ps: Seq[Double],
+                           k: Int): Column =
     column(KllQuantilesWeighted(expression(value.cast("double")),
       expression(weight.cast("long")), ps, k))
 
   // ---- the roll-up trio: build sketch STATE, merge it, read it ------
 
   /** Aggregate to a persistable serialized sketch (`binary`). */
-  def kllSketch(spark: SparkSession, value: Column, k: Int): Column =
+  def kllSketch(value: Column, k: Int): Column =
     column(KllSketchAgg(expression(value.cast("double")), k))
 
   /** Fold a column of serialized sketches into one (`binary`). */
-  def kllMerge(spark: SparkSession, sketch: Column): Column =
+  def kllMerge(sketch: Column): Column =
     column(KllMerge(expression(sketch)))
 
   /** Quantiles of a serialized sketch (`array<double>`). */
-  def kllValues(spark: SparkSession, sketch: Column, ps: Seq[Double]): Column =
+  def kllValues(sketch: Column, ps: Seq[Double]): Column =
     column(KllValues(expression(sketch), ps))
 
   /** Weighted (pre-counted) aggregate to a persistable sketch. */
-  def kllSketchWeighted(spark: SparkSession, value: Column, weight: Column,
-                        k: Int): Column =
+  def kllSketchWeighted(value: Column, weight: Column, k: Int): Column =
     column(KllSketchAggWeighted(expression(value.cast("double")),
       expression(weight.cast("long")), k))
 
   /** INTERPOLATED quantiles of a serialized sketch (`array<double>`) —
     * `percentile`/`quantile_cont` lerp semantics; exact parity with
     * them in the no-compaction regime. */
-  def kllValuesInterp(spark: SparkSession, sketch: Column,
-                      ps: Seq[Double]): Column =
+  def kllValuesInterp(sketch: Column, ps: Seq[Double]): Column =
     column(KllValues(expression(sketch), ps, interp = true))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Integer quantization of a vector in one codegen'd pass:
@@ -62,6 +62,6 @@ object QuantizeVec {
     new GenericArrayData(out)
   }
 
-  def quantize(spark: SparkSession, vec: Column, scale: Int): Column =
+  def quantize(vec: Column, scale: Int): Column =
     column(QuantizeVec(expression(vec), scale))
 }

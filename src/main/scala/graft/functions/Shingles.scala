@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -88,7 +88,7 @@ object ShingleHashes {
   private def isSpace(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f' || b == 0x0b
 
-  def shingleHashes(spark: SparkSession, text: Column, n: Int = 3): Column =
+  def shingleHashes(text: Column, n: Int = 3): Column =
     column(ShingleHashes(expression(text), n))
 }
 
@@ -157,7 +157,7 @@ object ShingleStrings {
   private def isSpace(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f' || c == 0x0b
 
-  def shingleStrings(spark: SparkSession, text: Column, n: Int = 3): Column =
+  def shingleStrings(text: Column, n: Int = 3): Column =
     column(ShingleStrings(expression(text), n))
 }
 
@@ -203,6 +203,6 @@ object SimHash64 {
     sig
   }
 
-  def simhash64(spark: SparkSession, hashes: Column): Column =
+  def simhash64(hashes: Column): Column =
     column(SimHash64(expression(hashes)))
 }

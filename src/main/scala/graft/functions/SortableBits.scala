@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Order-preserving integer rendering of a double: the IEEE-754 bit
@@ -54,6 +54,6 @@ object SortableDoubleBits {
     b ^ ((b >> 63) & 0x7fffffffffffffffL)
   }
 
-  def sortable(spark: SparkSession, v: Column): Column =
+  def sortable(v: Column): Column =
     column(SortableDoubleBits(expression(v)))
 }

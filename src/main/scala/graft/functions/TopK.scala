@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, 
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
 import org.apache.spark.sql.types.{ArrayType, DataType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Bounded-buffer per-group top-k aggregate: keeps the `k` LARGEST
@@ -130,6 +130,6 @@ case class TopK(child: Expression, k: Int,
 object TopK {
 
   /** Column form: array of the k largest `value`s, sorted descending. */
-  def topK(spark: SparkSession, value: Column, k: Int): Column =
+  def topK(value: Column, k: Int): Column =
     column(TopK(expression(value), k))
 }

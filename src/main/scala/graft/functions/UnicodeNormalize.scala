@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -59,10 +59,10 @@ object UnicodeNormalize {
   }
 
   /** Column form of NFC, the form DuckDB can replay (SQL: `graft_nfc`). */
-  def nfc(spark: SparkSession, c: Column): Column = normalized(spark, c, "NFC")
+  def nfc(c: Column): Column = normalized(c, "NFC")
 
   /** Column form for any normalization form; an unknown `form` (the
     * names are case-sensitive) throws here, at the call. */
-  def normalized(spark: SparkSession, c: Column, form: String): Column =
+  def normalized(c: Column, form: String): Column =
     column(UnicodeNormalize(expression(c), form))
 }

@@ -37,7 +37,6 @@ object VectorFunctions {
     * broke whole-stage codegen past dim ≈ 500 and carried a weight-
     * scaling bug ([-1, 3) instead of [-1, 1)) that collapsed buckets.
     */
-  def hyperplaneSignature(spark: org.apache.spark.sql.SparkSession,
-                          vec: Column, planes: Int, seed: Long): Column =
-    HyperplaneSignature.signature(spark, vec, planes, seed)
+  def hyperplaneSignature(vec: Column, planes: Int, seed: Long): Column =
+    HyperplaneSignature.signature(vec, planes, seed)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Z-order (Morton) interleave of two dimension keys — the multi-column
@@ -62,6 +62,6 @@ object ZOrder2 {
     v
   }
 
-  def zorder(spark: SparkSession, a: Column, b: Column): Column =
+  def zorder(a: Column, b: Column): Column =
     column(ZOrder2(expression(a), expression(b)))
 }

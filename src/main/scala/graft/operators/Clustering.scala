@@ -71,7 +71,7 @@ object Clustering {
     val qbase = df
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col(idCol).as("__id"),
-        QuantizeVec.quantize(spark, col(vecCol), scale).as("__qv"))
+        QuantizeVec.quantize(col(vecCol), scale).as("__qv"))
     val qdf = if (eager) qbase.persist(StorageLevel.MEMORY_AND_DISK) else qbase
 
     // init: the k smallest ids' quantized vectors, cid dense by id
@@ -88,7 +88,7 @@ object Clustering {
       val centArr = cents.agg(packed.as("__cents"))
       assigned = qdf.crossJoin(broadcast(centArr))
         .select(col("__id"), col("__qv"),
-          NearestCentroid.nearest(spark, col("__qv"), col("__cents")).as("cid"))
+          NearestCentroid.nearest(col("__qv"), col("__cents")).as("cid"))
       if (i < iters - 1) {
         // mean per (cluster, dim): partial-aggregated exact integer
         // sums (k·d rows after map-side combine), then one division

@@ -63,7 +63,7 @@ object Dedup {
     // has no subplan sharing across self-joins).
     val sh = graft.core.Tables.spread(docs)
       .select(col(idCol).as("id"),
-        explode(ShingleHashes.shingleHashes(docs.sparkSession, col(textCol), n)).as("sh"))
+        explode(ShingleHashes.shingleHashes(col(textCol), n)).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // populate the cache BEFORE the pair plan below runs: the two
     // doc-count branches and the hot-shingle filter ride in as
@@ -118,8 +118,8 @@ object Dedup {
     * (not unigrams) keep the signature discriminating even on a tiny
     * vocabulary, where every document's token SET is near-identical.
     */
-  def simhash(spark: SparkSession, text: Column): Column =
-    SimHash64.simhash64(spark, ShingleHashes.shingleHashes(spark, text))
+  def simhash(text: Column): Column =
+    SimHash64.simhash64(ShingleHashes.shingleHashes(text))
 
   /** SimHash near-duplicate candidate pairs: band the 64-bit signature
     * into four 16-bit bands and join on (band index, band value) — two
@@ -132,7 +132,7 @@ object Dedup {
     // has few input splits.
     val sigs = docs
       .repartition(spark.sparkContext.defaultParallelism)
-      .select(col(idCol).as("id"), simhash(spark, col(textCol)).as("sig"))
+      .select(col(idCol).as("id"), simhash(col(textCol)).as("sig"))
     val banded = sigs.select(col("id"), col("sig"),
       explode(array((0 until 4).map { b =>
         struct(lit(b).as("band"),
@@ -213,13 +213,12 @@ object Dedup {
   def lshCalibration(docs: DataFrame, idCol: String, textCol: String,
                      minEst: Double, numHashes: Int = 16,
                      bands: Int = 8): DataFrame = {
-    val spark = docs.sparkSession
     val cands = minhashPairs(docs, idCol, textCol, minEst, numHashes, bands)
     val ids = cands.select(col("ida").as("id"))
       .unionByName(cands.select(col("idb").as("id"))).distinct()
     val sh = docs
       .select(col(idCol).as("id"),
-        explode(ShingleHashes.shingleHashes(spark, col(textCol))).as("sh"))
+        explode(ShingleHashes.shingleHashes(col(textCol))).as("sh"))
       .join(ids, Seq("id"), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val counts = sh.groupBy(col("id")).agg(count(lit(1)).as("nsh"))
@@ -253,10 +252,10 @@ object Dedup {
     val spark = docs.sparkSession
     docs.repartition(spark.sparkContext.defaultParallelism)
       .select(col(idCol).as("id"),
-        ShingleHashes.shingleHashes(spark, col(textCol)).as("hs"))
+        ShingleHashes.shingleHashes(col(textCol)).as("hs"))
       .filter(size(col("hs")) > 0)
       .select(col("id"),
-        graft.functions.MinHashSignature.signature(spark, col("hs"), numHashes).as("mh"))
+        graft.functions.MinHashSignature.signature(col("hs"), numHashes).as("mh"))
   }
 
   private def bandKeys(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
@@ -478,7 +477,7 @@ object Dedup {
     val sh = docs
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col(idCol), splitCol.as("__split"),
-        explode(ShingleHashes.shingleHashes(spark, col(textCol), n)).as("__sh"))
+        explode(ShingleHashes.shingleHashes(col(textCol), n)).as("__sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val trainSh = sh.filter(col("__split") === "train").select("__sh").distinct()
     val out = sh.filter(col("__split") === "test")
@@ -534,7 +533,7 @@ object Dedup {
     // NULL key → might_contain is NULL → coalesce keeps the row on the
     // clean branch, matching the plain anti-join (NULL never matches)
     val mc = coalesce(graft.functions.BloomMightContain.mightContain(
-      df.sparkSession, lit(bos.toByteArray), col(keyCol).cast("long")), lit(false))
+      lit(bos.toByteArray), col(keyCol).cast("long")), lit(false))
     val clean = df.filter(!mc)
     val candidates = df.filter(mc)
       .join(blocklist, df(keyCol) === blocklist(blockKeyCol), "left_anti")
@@ -558,7 +557,7 @@ object Dedup {
     docs.repartition(spark.sparkContext.defaultParallelism)
       .select(col(idCol).as("id"),
         posexplode(graft.functions.ChunkStrings.chunkStrings(
-          spark, col(textCol), width)).as(Seq("ck", "chunk")))
+          col(textCol), width)).as(Seq("ck", "chunk")))
   }
 
   /** Hash-only sibling of [[docChunks]]: (id, ck, __h) where __h is the
@@ -574,7 +573,7 @@ object Dedup {
     docs.repartition(spark.sparkContext.defaultParallelism)
       .select(col(idCol).as("id"),
         posexplode(graft.functions.ChunkHashes.chunkHashes(
-          spark, col(textCol), width)).as(Seq("ck", "__h")))
+          col(textCol), width)).as(Seq("ck", "__h")))
   }
 
   /** Cross-document duplicate chunks (boilerplate report): chunk texts
@@ -599,7 +598,6 @@ object Dedup {
   def duplicateChunks(docs: DataFrame, idCol: String, textCol: String,
                       width: Int = 8, minDocs: Int = 2,
                       broadcastDupSet: Boolean = true): DataFrame = {
-    val spark = docs.sparkSession
     val stats = docChunkHashes(docs, idCol, textCol, width)
       .groupBy(col("__h"), col("id"))
       .agg(count(lit(1)).as("__occ"))
@@ -607,7 +605,7 @@ object Dedup {
       .agg(count(lit(1)).as("ndocs"), sum(col("__occ")).as("nocc"))
       .filter(col("ndocs") >= minDocs)
     val ch = docChunks(docs, idCol, textCol, width)
-      .withColumn("__h", graft.functions.Fnv1a64.fnv64(spark, col("chunk")))
+      .withColumn("__h", graft.functions.Fnv1a64.fnv64(col("chunk")))
     if (broadcastDupSet) {
       // counts ride along through the exemplar agg (they are constant
       // per hash), so the corpus is read exactly twice: once to count
@@ -653,14 +651,13 @@ object Dedup {
   def scrubDuplicateChunks(docs: DataFrame, idCol: String, textCol: String,
                            width: Int = 8, minDocs: Int = 2,
                            broadcastDupSet: Boolean = true): DataFrame = {
-    val spark = docs.sparkSession
     val dup = docChunkHashes(docs, idCol, textCol, width)
       .select(col("__h"), col("id")).distinct()
       .groupBy(col("__h")).agg(count(lit(1)).as("__nd"))
       .filter(col("__nd") >= minDocs)
       .select(col("__h"), lit(true).as("__dup"))
     val ch = docChunks(docs, idCol, textCol, width)
-      .withColumn("__h", graft.functions.Fnv1a64.fnv64(spark, col("chunk")))
+      .withColumn("__h", graft.functions.Fnv1a64.fnv64(col("chunk")))
     if (broadcastDupSet) {
       ch.join(broadcast(dup), Seq("__h"), "left")
         .groupBy(col("id"))
@@ -728,7 +725,7 @@ object Dedup {
     val win = docs.repartition(par)
       .select(col(idCol).as("id"),
         posexplode(graft.functions.RollingHashes.rollingHashes(
-          spark, col(textCol), width)).as(Seq("pos", "__h")))
+          col(textCol), width)).as(Seq("pos", "__h")))
     val dup = win.select(col("__h"), col("id")).distinct()
       .groupBy(col("__h")).agg(count(lit(1)).as("__nd"))
       .filter(col("__nd") >= minDocs)
@@ -760,7 +757,7 @@ object Dedup {
     val toks = docs.repartition(par)
       .select(col(idCol).as("id"),
         posexplode(graft.functions.ChunkStrings.chunkStrings(
-          spark, col(textCol), 1)).as(Seq("pos", "tok")))
+          col(textCol), 1)).as(Seq("pos", "tok")))
     toks.join(spans,
         toks("id") === col("__sid") &&
           toks("pos") >= col("__s") && toks("pos") < col("__e"),
@@ -809,7 +806,6 @@ object Dedup {
     */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
                     k: Int, iters: Int, minCosine: Double): DataFrame = {
-    val spark = df.sparkSession
     val asn = Clustering.kmeansAssign(df, idCol, vecCol, k, iters)
       .filter(col("cluster").isNotNull)
     // one keyed join re-attaches the vector; persisted because it feeds
@@ -820,7 +816,7 @@ object Dedup {
     val b = withVec.select(col("cluster"), col(idCol).as("__idb"), col(vecCol).as("__vb"))
     val dropped = a.join(b, Seq("cluster"))
       .filter(col("__ida") < col("__idb"))
-      .filter(graft.functions.CosineSimilarity.cosine(spark, col("__va"), col("__vb"))
+      .filter(graft.functions.CosineSimilarity.cosine(col("__va"), col("__vb"))
         >= minCosine)
       .select(col("__idb").as(idCol)).distinct()
     val out = withVec.join(dropped, Seq(idCol), "left_anti")

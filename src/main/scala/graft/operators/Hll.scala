@@ -37,7 +37,7 @@ object Hll {
     * keys landing in that bucket. ≤ 2^p rows per group. */
   def registers(df: DataFrame, groupCols: Seq[String], key: Column,
                 p: Int): DataFrame = {
-    val coords = HllRegister.registerCoords(df.sparkSession, key, p)
+    val coords = HllRegister.registerCoords(key, p)
     val g = groupCols.map(col)
     df.select(g :+ coords.as("__c"): _*)
       .select(g :+ element_at(col("__c"), 1).as("bucket")

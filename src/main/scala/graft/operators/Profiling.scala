@@ -169,20 +169,19 @@ object Profiling {
     */
   def madOutliersSketch(df: DataFrame, groupCol: String, valCol: String,
                         cut: Double = 3.0, k: Int = 4096): DataFrame = {
-    val session = df.sparkSession
     val base = df.filter(col(valCol).isNotNull && col(groupCol).isNotNull)
       .select(col(groupCol).cast("string").as("g"),
         col(valCol).cast("double").as("v"))
     def p50(sk: org.apache.spark.sql.Column) = element_at(
-      graft.functions.KllQuantiles.kllValuesInterp(session, sk, Seq(0.5)), 1)
+      graft.functions.KllQuantiles.kllValuesInterp(sk, Seq(0.5)), 1)
     val med = base.groupBy(col("g"))
-      .agg(graft.functions.KllQuantiles.kllSketch(session, col("v"), k).as("__sk"))
+      .agg(graft.functions.KllQuantiles.kllSketch(col("v"), k).as("__sk"))
       .select(col("g"), p50(col("__sk")).as("med"))
     val mad = base.join(med, Seq("g"))
       .groupBy(col("g"))
       .agg(first(col("med")).as("med"),
         graft.functions.KllQuantiles
-          .kllSketch(session, abs(col("v") - col("med")), k).as("__dk"))
+          .kllSketch(abs(col("v") - col("med")), k).as("__dk"))
       .select(col("g"), col("med"), p50(col("__dk")).as("mad"))
     base.join(mad, Seq("g"))
       .groupBy(col("g").as(groupCol))

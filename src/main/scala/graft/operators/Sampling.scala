@@ -130,7 +130,7 @@ object Sampling {
       .select(col(groupCol).as("__g"),
         struct((-rank).as("r"), (-col(idCol).cast("long")).as("i")).as("__key"))
       .groupBy(col("__g"))
-      .agg(graft.functions.TopK.topK(df.sparkSession, col("__key"), n).as("__top"))
+      .agg(graft.functions.TopK.topK(col("__key"), n).as("__top"))
       .select(explode(col("__top")).as("__k"))
       .select((-col("__k.i")).as("__kept_id"))
     df.join(kept, col(idCol).cast("long") === col("__kept_id"), "left_semi")
@@ -309,7 +309,7 @@ object Sampling {
     // cost totals — boundaries AND exact better-bucket cost offsets
     // from a single collect, where the sampled-boundary pass plus the
     // bucket-totals fold used to cost two
-    val cc = Stats.cellOf(session, col("__s"))
+    val cc = Stats.cellOf(col("__s"))
     val hist = obs.groupBy(cc.as("cell"))
       .agg(count(lit(1)).as("nr"), sum(col("__c")).as("tc"))
       .collect()
@@ -373,7 +373,6 @@ object Sampling {
       s"dsirWeights: buckets must be a power of two (unsigned/signed mod " +
         s"agreement for the hash replay), got $buckets")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val spark = docs.sparkSession
     // perDocB below reads `bigrams` exactly once and is itself
     // persisted — neither substrate frame needs a cache here
     val (toks, bigrams) =
@@ -383,7 +382,7 @@ object Sampling {
     // persisted because both the model build and the scoring read it
     val perDocB = bigrams
       .select(col("__id"),
-        pmod(graft.functions.Fnv1a64.fnv64(spark,
+        pmod(graft.functions.Fnv1a64.fnv64(
           concat(col("__prev"), lit(" "), col("__w"))), lit(buckets.toLong))
           .as("__b"))
       .groupBy(col("__id"), col("__b")).agg(count(lit(1)).as("__n"))

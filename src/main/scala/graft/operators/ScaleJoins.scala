@@ -112,16 +112,8 @@ object ScaleJoins {
   def partitionedByMonth(spark: SparkSession, sourceDir: String, table: String,
                          dateCol: String, monthCol: String): DataFrame = {
     val path = partitionedCache.computeIfAbsent(s"$sourceDir/$table/$monthCol", { _ =>
-      // pid in the path: two concurrent JVMs (parallel verify + bench)
-      // would otherwise race mode("overwrite") on one fixed directory
-      // and one of them could read a half-rewritten layout (advice r3)
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_part_${table}_${monthCol}_${dirTag(sourceDir)}_p${ProcessHandle.current().pid()}")
-      // pid-scoped dirs would otherwise accumulate one fact-table copy
-      // per JVM run (review) — delete this JVM's copy on exit
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(dir): Unit))
-      val out = dir.getAbsolutePath
+      val out = graft.core.Scratch.dir(
+        s"part_${table}_${monthCol}_${dirTag(sourceDir)}").getAbsolutePath
       graft.core.Tables.load(spark, sourceDir, table)
         .withColumn(monthCol, date_format(col(dateCol), "yyyy-MM"))
         .write.mode("overwrite").partitionBy(monthCol).parquet(out)

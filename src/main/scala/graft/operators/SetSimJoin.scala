@@ -65,8 +65,7 @@ object SetSimJoin {
     // by every set, so candidates stay complete and the exact verify
     // yields byte-identical pairs/counts.
     val s = df.select(col(idCol).as("id"),
-        graft.functions.Fnv1a64.fnv64(df.sparkSession,
-          col(itemCol).cast("string")).as("item"))
+        graft.functions.Fnv1a64.fnv64(col(itemCol).cast("string")).as("item"))
       .distinct()
     // global item frequency — the total order (f asc, item asc) every
     // set is sorted by; rarest-first puts the most selective items in
@@ -195,8 +194,7 @@ object SetSimJoin {
     // token strings; collisions ~n²·2⁻⁶⁴, candidates stay complete
     // under any one fixed global order)
     def hashed(side: DataFrame) = side.select(col(idCol).as("id"),
-        graft.functions.Fnv1a64.fnv64(side.sparkSession,
-          col(itemCol).cast("string")).as("item"))
+        graft.functions.Fnv1a64.fnv64(col(itemCol).cast("string")).as("item"))
       .distinct()
     val pr = hashed(probe)
     // persisted: the index token frame feeds the frequency aggregation

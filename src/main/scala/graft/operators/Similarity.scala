@@ -30,7 +30,7 @@ object Similarity {
       .select(col(idCol),
         // decimal(10,4) rounds deterministically cross-engine; the final
         // DOUBLE cast avoids the driver's trailing-zero decimal-hash trap.
-        CosineSimilarity.cosine(corpus.sparkSession, col(vecCol), col("__qv"))
+        CosineSimilarity.cosine(col(vecCol), col("__qv"))
           .cast("decimal(10,4)").cast("double").as("cos"))
       .orderBy(col("cos").desc, col(idCol))
       .limit(k)
@@ -100,16 +100,15 @@ object Similarity {
   private def knnJoinUnchecked(corpus: DataFrame, idCol: String, vecCol: String,
                                queries: DataFrame, qIdCol: String, qVecCol: String,
                                k: Int): DataFrame = {
-    val spark = corpus.sparkSession
     val q = broadcast(queries.select(col(qIdCol).as("__qid"), col(qVecCol).as("__qvec")))
     corpus.join(q)
       .select(col("__qid"),
         struct(
-          CosineSimilarity.cosine(spark, col(vecCol), col("__qvec"))
+          CosineSimilarity.cosine(col(vecCol), col("__qvec"))
             .cast("decimal(10,4)").cast("double").as("cos"),
           col(idCol).as("nid")).as("__cand"))
       .groupBy(col("__qid"))
-      .agg(graft.functions.TopK.topK(spark, col("__cand"), k).as("__top"))
+      .agg(graft.functions.TopK.topK(col("__cand"), k).as("__top"))
       .select(col("__qid"), posexplode(col("__top")).as(Seq("__r", "__c")))
       .select(col("__qid").as(qIdCol), (col("__r") + 1).as("rank"),
         col("__c.nid").as(idCol), col("__c.cos").as("cos"))
@@ -129,13 +128,13 @@ object Similarity {
     // the small verified-pairs output is materialized so the cache is
     // released before returning (the dedup-family pattern)
     val sig = corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
-      hyperplaneSignature(corpus.sparkSession, col(vecCol), planes, seed).as("bucket"))
+      hyperplaneSignature(col(vecCol), planes, seed).as("bucket"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val out = sig.select(col("bucket"), col("id").as("ida"), col("v").as("va"))
       .join(sig.select(col("bucket"), col("id").as("idb"), col("v").as("vb")), Seq("bucket"))
       .filter(col("ida") < col("idb"))
       .select(col("ida"), col("idb"),
-        CosineSimilarity.cosine(corpus.sparkSession, col("va"), col("vb"))
+        CosineSimilarity.cosine(col("va"), col("vb"))
           .cast("decimal(10,4)").cast("double").as("cos"))
       .filter(col("cos") >= minCosine)
     val materialized = out.localCheckpoint(true)
@@ -170,17 +169,17 @@ object Similarity {
     // nearest centroid per corpus vector: zero-exchange codegen argmax
     val assigned = corpus.crossJoin(centArr)
       .withColumn("__cid",
-        graft.functions.NearestCentroid.nearest(corpus.sparkSession, col(vecCol), col("__cents")))
+        graft.functions.NearestCentroid.nearest(col(vecCol), col("__cents")))
       .drop("__cents")
     // centroids to probe for this query
     val probed = query.select(col(vecCol).as("__qv")).crossJoin(cb)
       .select(col("__qv"), col("__cid"),
-        CosineSimilarity.cosine(corpus.sparkSession, col("__qv"), col("__cv")).as("__ccos"))
+        CosineSimilarity.cosine(col("__qv"), col("__cv")).as("__ccos"))
       .orderBy(col("__ccos").desc).limit(nprobe)
       .select(col("__qv"), col("__cid"))
     assigned.join(broadcast(probed), Seq("__cid"))
       .select(col(idCol),
-        CosineSimilarity.cosine(corpus.sparkSession, col(vecCol), col("__qv"))
+        CosineSimilarity.cosine(col(vecCol), col("__qv"))
           .cast("decimal(10,4)").cast("double").as("cos"))
       .orderBy(col("cos").desc, col(idCol))
       .limit(k)
@@ -389,17 +388,17 @@ object Similarity {
     // arrives as a single input split — one core would then score every
     // pair. The shuffle moves only the ≤ maxBroadcast corpus rows, and
     // on a many-split source the repartition is measured ~free
-    // (tools/FanoutBench, BASELINE.md §14).
+    // (BASELINE.md §14).
     corpus.repartition(spark.sparkContext.defaultParallelism)
       .join(q,
         col(idCol) =!= col("__qid") && col(labelCol) =!= col("__qlab"))
       .select(col("__qid"),
         struct(
-          CosineSimilarity.cosine(spark, col(vecCol), col("__qvec"))
+          CosineSimilarity.cosine(col(vecCol), col("__qvec"))
             .cast("decimal(10,4)").cast("double").as("cos"),
           col(idCol).as("nid")).as("__cand"))
       .groupBy(col("__qid"))
-      .agg(graft.functions.TopK.topK(spark, col("__cand"), k).as("__top"))
+      .agg(graft.functions.TopK.topK(col("__cand"), k).as("__top"))
       .select(col("__qid"), posexplode(col("__top")).as(Seq("__r", "__c")))
       .select(col("__qid").as(idCol), (col("__r") + 1).as("rank"),
         col("__c.nid").as("neg_id"), col("__c.cos").as("cos"))
@@ -532,15 +531,14 @@ object Similarity {
     * query, posexplode to (id, rank, neg_id, cos) rows. */
   private def hardNegTopK(joined: DataFrame, idCol: String, vecCol: String,
                           k: Int): DataFrame = {
-    val spark = joined.sparkSession
     joined
       .select(col("__qid"),
         struct(
-          CosineSimilarity.cosine(spark, col(vecCol), col("__qvec"))
+          CosineSimilarity.cosine(col(vecCol), col("__qvec"))
             .cast("decimal(10,4)").cast("double").as("cos"),
           col(idCol).as("nid")).as("__cand"))
       .groupBy(col("__qid"))
-      .agg(graft.functions.TopK.topK(spark, col("__cand"), k).as("__top"))
+      .agg(graft.functions.TopK.topK(col("__cand"), k).as("__top"))
       .select(col("__qid"), posexplode(col("__top")).as(Seq("__r", "__c")))
       .select(col("__qid").as(idCol), (col("__r") + 1).as("rank"),
         col("__c.nid").as("neg_id"), col("__c.cos").as("cos"))
@@ -571,11 +569,7 @@ object Similarity {
     require(coarse.nonEmpty, "cellPartitionedCorpus: empty coarse table")
     val tag = sourceDir.replaceAll("[^A-Za-z0-9]", "_")
     val path = cellPartCache.computeIfAbsent(s"$sourceDir/${coarse.length}", { _ =>
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_cellpart_${coarse.length}_${tag}_p${ProcessHandle.current().pid()}")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(dir): Unit))
-      val out = dir.getAbsolutePath
+      val out = graft.core.Scratch.dir(s"cellpart_${coarse.length}_$tag").getAbsolutePath
       val cell = pqCodeCols(vecCol, Array(coarse)).head
       corpus.select(col(idCol), col(vecCol), col(labelCol),
           cell.cast("long").as("cell"))

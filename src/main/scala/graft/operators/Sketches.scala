@@ -23,10 +23,9 @@ object Sketches {
   /** Counter table (j, bucket, cnt) of a (word, count) histogram. */
   def countMinCounters(wordCounts: DataFrame, wordCol: String,
                        countCol: String, d: Int, w: Int): DataFrame = {
-    val s = wordCounts.sparkSession
     wordCounts
       .select(col(countCol).as("__c"),
-        posexplode(CountMinBuckets.buckets(s, Fnv1a64.fnv64(s, col(wordCol)), d, w))
+        posexplode(CountMinBuckets.buckets(Fnv1a64.fnv64(col(wordCol)), d, w))
           .as(Seq("j", "bucket")))
       .groupBy("j", "bucket").agg(sum(col("__c")).as("cnt"))
   }
@@ -38,13 +37,12 @@ object Sketches {
     * distribution. */
   def countMinHeavyHitters(df: DataFrame, textCol: String,
                            d: Int = 4, w: Int = 512, k: Int = 20): DataFrame = {
-    val s = df.sparkSession
     val wc = df
       .select(explode(split(col(textCol), "\\s+")).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("true_c"))
     val hb = wc.select(col("word"), col("true_c"),
-      posexplode(CountMinBuckets.buckets(s, Fnv1a64.fnv64(s, col("word")), d, w))
+      posexplode(CountMinBuckets.buckets(Fnv1a64.fnv64(col("word")), d, w))
         .as(Seq("j", "bucket")))
     val counters = hb.groupBy("j", "bucket").agg(sum(col("true_c")).as("cnt"))
     hb.join(counters, Seq("j", "bucket"))

@@ -106,9 +106,9 @@ object Stats {
   /** Fine-cell id of a double column: top [[CellBits]] of the
     * order-preserving bit rendering — monotone in v, so a tie block
     * never straddles cells. Narrow codegen, no shuffle. */
-  private[operators] def cellOf(spark: org.apache.spark.sql.SparkSession,
+  private[operators] def cellOf(
       v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    shiftright(graft.functions.SortableDoubleBits.sortable(spark, v), 64 - CellBits)
+    shiftright(graft.functions.SortableDoubleBits.sortable(v), 64 - CellBits)
 
   /** Greedy coarse-bucket boundaries over the (cell, weight) histogram
     * (sorted by cell): close a bucket once it holds ≥ total/buckets of
@@ -148,8 +148,7 @@ object Stats {
   private[operators] def bucketOfCell(bounds: Array[Long],
       cellC: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     if (bounds.isEmpty) lit(0)
-    else graft.functions.CellBucket.bucket(
-      org.apache.spark.sql.SparkSession.active, cellC, bounds)
+    else graft.functions.CellBucket.bucket(cellC, bounds)
 
   /** Task count for the in-bucket window's explicit-N pin, derived
     * from the histogram's own distinct-value total (scale-adaptive —
@@ -187,7 +186,7 @@ object Stats {
       : (DataFrame, Long, Long) = {
     val session = counts.sparkSession
     import session.implicits._
-    val cc = cellOf(session, col("v"))
+    val cc = cellOf(col("v"))
     val hist = counts.groupBy(cc.as("cell"))
       .agg(count(lit(1)).as("nd"), sum(col("na")).as("ta"), sum(col("nb")).as("tb"))
       .collect()
@@ -324,7 +323,7 @@ object Stats {
     val counts = df.filter(col(valueCol).isNotNull)
       .groupBy(v.as("v")).agg(count(lit(1)).as("c"))
       .persist(lvl)
-    val cc = cellOf(session, col("v"))
+    val cc = cellOf(col("v"))
     // THE one planning job: per-cell distinct-value and row totals
     val hist = counts.groupBy(cc.as("cell"))
       .agg(count(lit(1)).as("nd"), sum(col("c")).as("tc"))
@@ -453,7 +452,7 @@ object Stats {
       : (DataFrame, Map[String, Long]) = {
     val session = counts.sparkSession
     import session.implicits._
-    val cc = cellOf(session, col("v"))
+    val cc = cellOf(col("v"))
     val hist = counts.groupBy(col("g"), cc.as("cell"))
       .agg(count(lit(1)).as("nd"), sum(col("c")).as("tc"))
       .collect()
@@ -675,9 +674,7 @@ object Stats {
     require(ps.nonEmpty, "groupedQuantilesSketch: need at least one quantile")
     require(ps.forall(p => p > 0.0 && p <= 1.0),
       s"groupedQuantilesSketch: quantiles must be in (0, 1], got $ps")
-    val session = df.sparkSession
-    val sketch = graft.functions.KllQuantiles.kllQuantiles(
-      session, col(valueCol), ps, k)
+    val sketch = graft.functions.KllQuantiles.kllQuantiles(col(valueCol), ps, k)
     df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
       .groupBy(col(groupCol).cast("string").as(groupCol))
       .agg(count(col(valueCol)).as("n"), sketch.as("__qs"))
@@ -722,10 +719,9 @@ object Stats {
       "groupedQuantilesSketchWeighted: need at least one quantile")
     require(ps.forall(p => p > 0.0 && p <= 1.0),
       s"groupedQuantilesSketchWeighted: quantiles must be in (0, 1], got $ps")
-    val session = weighted.sparkSession
     val w = integralWeight(weightCol, "groupedQuantilesSketchWeighted")
     val sketch = graft.functions.KllQuantiles.kllQuantilesWeighted(
-      session, col(valueCol), w, ps, k)
+      col(valueCol), w, ps, k)
     weighted
       .filter(col(valueCol).isNotNull && col(groupCol).isNotNull &&
         w.isNotNull)
@@ -990,12 +986,11 @@ object Stats {
   def groupedGiniSketch(df: DataFrame, groupCol: String, valueCol: String,
                         k: Int = 4096, grid: Int = 1024): DataFrame = {
     require(grid >= 16, s"groupedGiniSketch: grid must be >= 16, got $grid")
-    val session = df.sparkSession
     val base = df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
       .select(col(groupCol).cast("string").as("g"),
         col(valueCol).cast("double").as("v"))
     val agg = base.groupBy(col("g"))
-      .agg(graft.functions.KllQuantiles.kllSketch(session, col("v"), k).as("__sk"),
+      .agg(graft.functions.KllQuantiles.kllSketch(col("v"), k).as("__sk"),
         count(lit(1)).as("n"),
         min(col("v")).as("__mn"),
         sum(col("v").cast("decimal(38,6)")).as("__t"))
@@ -1003,7 +998,7 @@ object Stats {
     agg
       .select(col("g"), col("n"), col("__mn"), col("__t"),
         posexplode(graft.functions.KllQuantiles
-          .kllValuesInterp(session, col("__sk"), ps)).as(Seq("__i", "__q")))
+          .kllValuesInterp(col("__sk"), ps)).as(Seq("__i", "__q")))
       .withColumn("__p", (col("__i").cast("double") + 0.5) / grid)
       .groupBy(col("g").as(groupCol))
       .agg(first(col("n")).as("n"),
@@ -1132,7 +1127,7 @@ object Stats {
     val obs = df.filter(col(valueCol).isNotNull)
     val counts = obs.groupBy(col(valueCol).cast("double").as("__v"))
       .agg(count(lit(1)).as("__c"))
-    val cc = cellOf(session, col("__v"))
+    val cc = cellOf(col("__v"))
     // THE one planning job: per-cell distinct-value and row totals
     val hist = counts.groupBy(cc.as("cell"))
       .agg(count(lit(1)).as("nd"), sum(col("__c")).as("tc"))
@@ -2613,7 +2608,7 @@ object Stats {
     // the fan-out the old round-robin repartition bought, plus the
     // duplicate-key guard, in the same single shuffle
     val src = uniqueKeyedFanout(base, "bootstrapMeanCI")
-    val wArr = graft.functions.BootstrapWeights.weights(session, col("__k"), b)
+    val wArr = graft.functions.BootstrapWeights.weights(col("__k"), b)
     val rows = src
       .select(col("v"), col("nf"), posexplode(wArr).as(Seq("j", "w")))
       .groupBy(col("j"))
@@ -2686,9 +2681,9 @@ object Stats {
     val base = df.filter(finite(v) && col(keyCol).isNotNull)
       .select(v.cast("double").as("v"), col(keyCol).cast("long").as("__k"))
     val src = uniqueKeyedFanout(base, "bootstrapQuantileCI")
-    val wArr = graft.functions.BootstrapWeights.weights(session, col("__k"), b)
+    val wArr = graft.functions.BootstrapWeights.weights(col("__k"), b)
     val sketch = graft.functions.KllQuantiles.kllQuantilesWeighted(
-      session, col("v"), col("w"), ps, k)
+      col("v"), col("w"), ps, k)
     val rows = src
       .select(col("v"), posexplode(wArr).as(Seq("j", "w")))
       .filter(col("w") > 0)
@@ -2748,7 +2743,7 @@ object Stats {
         when(offGrid(v), 1L).otherwise(0L).as("nf"),
         col(keyCol).cast("long").as("__k"))
     val src = uniqueKeyedFanout(base, "bootstrapMeanCIByGroup")
-    val wArr = graft.functions.BootstrapWeights.weights(session, col("__k"), b)
+    val wArr = graft.functions.BootstrapWeights.weights(col("__k"), b)
     val cells = src
       .select(col("g"), col("v"), col("nf"), posexplode(wArr).as(Seq("j", "w")))
       .groupBy(col("g"), col("j"))
@@ -2827,7 +2822,7 @@ object Stats {
         when(offGrid(v), 1L).otherwise(0L).as("nf"),
         col(keyCol).cast("long").as("__k"))
     val src = uniqueKeyedFanout(base, "bootstrapDiffCI")
-    val wArr = graft.functions.BootstrapWeights.weights(session, col("__k"), b)
+    val wArr = graft.functions.BootstrapWeights.weights(col("__k"), b)
     val cells = src
       .select(col("v"), col("ia"), col("nf"),
         posexplode(wArr).as(Seq("j", "w")))
@@ -2908,9 +2903,9 @@ object Stats {
         when(sampleACond, 1L).otherwise(0L).as("ia"),
         col(keyCol).cast("long").as("__k"))
     val src = uniqueKeyedFanout(base, "bootstrapQuantileDiffCI")
-    val wArr = graft.functions.BootstrapWeights.weights(session, col("__k"), b)
+    val wArr = graft.functions.BootstrapWeights.weights(col("__k"), b)
     val sketch = graft.functions.KllQuantiles.kllQuantilesWeighted(
-      session, col("v"), col("w"), ps, k)
+      col("v"), col("w"), ps, k)
     val rows = src
       .select(col("v"), col("ia"), posexplode(wArr).as(Seq("j", "w")))
       .filter(col("w") > 0)
@@ -3011,9 +3006,9 @@ object Stats {
         when(sampleACond, 1L).otherwise(0L).as("ia"),
         col(keyCol).cast("long").as("__k"))
     val src = uniqueKeyedFanout(base, "bootstrapQuantileDiffBySegment")
-    val wArr = graft.functions.BootstrapWeights.weights(session, col("__k"), b)
+    val wArr = graft.functions.BootstrapWeights.weights(col("__k"), b)
     val sketch = graft.functions.KllQuantiles.kllQuantilesWeighted(
-      session, col("v"), col("w"), ps, k)
+      col("v"), col("w"), ps, k)
     // the pigeonhole bound: a segment key with more than maxGroups
     // distinct values would overflow the planning-sized driver fold;
     // |cells| ≤ |segments|·2·(B+1), so cap the collect one past it and
@@ -3594,7 +3589,7 @@ object Stats {
       // for decimals); key breaks ties deterministically
       .withColumn("ord", expr("-rev"))
       .persist(lvl)
-    val cc = cellOf(session, col("ord").cast("double"))
+    val cc = cellOf(col("ord").cast("double"))
     // THE one planning job: per-cell key counts and exact decimal
     // revenue totals — boundaries, offsets, n AND the grand total come
     // out of its single collect
@@ -3792,7 +3787,6 @@ object Stats {
                             k: Int = 4096): DataFrame = {
     require(lo >= 0 && hi <= 1 && lo < hi,
       s"winsorizedStatsSketch: bad bounds [$lo, $hi]")
-    val session = df.sparkSession
     // spread the two per-row passes (sketch updates, then the clipped
     // decimal sums): both otherwise run at the scan's task count, and a
     // single-row-group source serializes them through one core;
@@ -3802,10 +3796,10 @@ object Stats {
         .select(col(groupCol).cast("string").as("g"),
           col(valCol).cast("double").as("v")))
     val bounds = base.groupBy(col("g"))
-      .agg(graft.functions.KllQuantiles.kllSketch(session, col("v"), k).as("__sk"))
+      .agg(graft.functions.KllQuantiles.kllSketch(col("v"), k).as("__sk"))
       .select(col("g"),
         graft.functions.KllQuantiles
-          .kllValuesInterp(session, col("__sk"), Seq(lo, hi)).as("__b"))
+          .kllValuesInterp(col("__sk"), Seq(lo, hi)).as("__b"))
       // 6-dp bound rounding: the decimal cast of a clipped-to-bound
       // value is then exact (the exact operator's convention)
       .select(col("g"), round(element_at(col("__b"), 1), 6).as("p_lo"),
@@ -3874,7 +3868,7 @@ object Stats {
     // type) breaks those collisions, keeping (ntile, next_value) on
     // exact SQL NTILE/LEAD semantics even past double precision
     val vKey = if (descending) -col(valueCol) else col(valueCol)
-    val cc = cellOf(session, col("__ord"))
+    val cc = cellOf(col("__ord"))
     // THE one planning job: per-cell row count + first row's value
     // (min struct over the unique (ord, vKey, tie) order carries the
     // value as payload) — boundaries, exact rank offsets, n, and the
@@ -3968,7 +3962,7 @@ object Stats {
     val keyed = df.filter(col(valueCol).isNotNull)
       .select(col(valueCol).cast("double").as("v"), col(tieCol).as("t"))
       .persist(lvl)
-    val cc = cellOf(session, col("v"))
+    val cc = cellOf(col("v"))
     val hist = keyed.groupBy(cc.as("cell")).agg(count(lit(1)).as("tc"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)))

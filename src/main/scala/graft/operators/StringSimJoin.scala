@@ -36,7 +36,7 @@ object StringSimJoin {
     // a key-like corpus often arrives as one input split, which would
     // serialize every candidate verification through one core. Shuffles
     // only (id, s) rows; measured ~free on a many-split source
-    // (tools/FanoutBench, BASELINE.md §14 — the Dedup discipline).
+    // (BASELINE.md §14 — the Dedup discipline).
     val base = df.select(col(idCol).as("id"), col(strCol).as("s"))
       .filter(length(col("s")) >= 1)
       .repartition(df.sparkSession.sparkContext.defaultParallelism)

@@ -136,9 +136,8 @@ object TextAnalysis {
     * the same text). For a BPE-LEARNED table (every multi-character
     * constituent produced at a strictly earlier rank) this equals
     * [[bpeEncode]] token-for-token (spec-pinned). */
-  def bpeEncodeVocab(spark: SparkSession, text: Column,
-                     merges: Seq[(String, String)]): Column =
-    graft.functions.BpeEncodeVocab.encode(spark,
+  def bpeEncodeVocab(text: Column, merges: Seq[(String, String)]): Column =
+    graft.functions.BpeEncodeVocab.encode(
       bpeTokens(translate(text, MergeL + MergeR, "")), merges)
 
   /** BPE TRAINER — the step every tokenizer workflow starts with and
@@ -304,14 +303,13 @@ object TextAnalysis {
     * no shuffle, whole-stage codegen (a 50 k-entry vocab is ~1 MB of
     * expression state, the [[graft.functions.BpeEncodeVocab]]
     * precedent). */
-  def bpeEncodeIds(spark: SparkSession, text: Column,
-                   merges: Seq[(String, String)],
+  def bpeEncodeIds(text: Column, merges: Seq[(String, String)],
                    vocab: Seq[(String, Int)]): Column = {
     require(vocab.nonEmpty, "bpeEncodeIds: empty vocab")
     require(vocab.map(_._1).distinct.size == vocab.size,
       "bpeEncodeIds: duplicate tokens in vocab — pass bpeVocabIds output")
     val lut = typedLit(vocab.toMap)
-    transform(bpeEncodeVocab(spark, text, merges),
+    transform(bpeEncodeVocab(text, merges),
       t => coalesce(element_at(lut, t), lit(-1)))
   }
 
@@ -395,8 +393,8 @@ object TextAnalysis {
     * arithmetic wraps, which is the hashing semantic — Spark-level
     * arithmetic would throw under ANSI mode).
     */
-  def fingerprint(spark: SparkSession, text: Column): Column =
-    Fnv1a64.fnv64(spark, regexp_replace(lower(trim(text)), "\\s+", " "))
+  def fingerprint(text: Column): Column =
+    Fnv1a64.fnv64(regexp_replace(lower(trim(text)), "\\s+", " "))
 
   /** PII-redaction patterns (training-data scrubbing): lookaround-free
     * so Java regex and RE2 agree character-for-character. Email first —
@@ -442,7 +440,7 @@ object TextAnalysis {
     docs.repartition(spark.sparkContext.defaultParallelism)
       .select(col(idCol),
         posexplode(graft.functions.OverlapChunkStrings.overlapChunks(
-          spark, col(textCol), width, stride)).as(Seq("ck", "chunk")))
+          col(textCol), width, stride)).as(Seq("ck", "chunk")))
       .withColumn("n_toks",
         size(split(col("chunk"), " ")).cast("long"))
   }

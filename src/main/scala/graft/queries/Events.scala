@@ -207,7 +207,7 @@ object Events {
         .agg(count(lit(1)).as("cnt"))
       counts
         .groupBy(col("h"))
-        .agg(graft.functions.TopK.topK(s,
+        .agg(graft.functions.TopK.topK(
           struct(col("cnt"), col("event_type")), 3).as("top"))
         .select(col("h"), posexplode(col("top")))
         .select(col("h"), (col("pos") + 1).cast("int").as("rn"),

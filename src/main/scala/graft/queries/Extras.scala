@@ -314,7 +314,7 @@ object Extras {
       val a = col("c_nationkey").cast("long")
       val b = floor((col("c_acctbal") + 1000.0) / 100.0).cast("long")
       t(s, dir, "customer").select(col("c_custkey"), a.as("a"), b.as("b"),
-          graft.functions.ZOrder2.zorder(s, a, b).as("z"))
+          graft.functions.ZOrder2.zorder(a, b).as("z"))
         .orderBy("c_custkey")
     }),
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 import graft.operators.{EventAnalytics, GraphTraversal, Stats, StringSimJoin}
 
 /** Statistical-modeling and graph-traversal coverage queries (round 7):
@@ -16,20 +16,6 @@ import graft.operators.{EventAnalytics, GraphTraversal, Stats, StringSimJoin}
 object StatsQ {
   private type Q = (SparkSession, String) => DataFrame
   private def t(s: SparkSession, dir: String, n: String) = Tables.load(s, dir, n)
-
-  /** Pid-scoped scratch dir under java.io.tmpdir (the TextDocs
-    * round-trip convention): shutdown hook registered once per path,
-    * however many times the query lambda re-runs. */
-  private val scratchHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def scratchDir(prefix: String, dir: String): java.io.File = {
-    val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_${prefix}_${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}")
-    if (scratchHooked.add(f.getAbsolutePath))
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(f): Unit))
-    f
-  }
 
   /** The x_sketch_* family's EXACT-REGIME guard: those oracles are
     * valid only while no KLL compactor ever fires — the sketch value
@@ -365,13 +351,13 @@ object StatsQ {
       val shards = o
         .groupBy(col("o_orderpriority"), (col("o_orderkey") % 2).as("__shard"))
         .agg(graft.functions.KllQuantiles
-            .kllSketch(s, col("o_totalprice"), 65536).as("__sk"),
+            .kllSketch(col("o_totalprice"), 65536).as("__sk"),
           count(lit(1)).as("__n"))
       shards.groupBy(col("o_orderpriority"))
-        .agg(graft.functions.KllQuantiles.kllMerge(s, col("__sk")).as("__m"),
+        .agg(graft.functions.KllQuantiles.kllMerge(col("__sk")).as("__m"),
           sum(col("__n")).as("n"))
         .select(col("o_orderpriority"), col("n"),
-          posexplode(graft.functions.KllQuantiles.kllValues(s, col("__m"), ps))
+          posexplode(graft.functions.KllQuantiles.kllValues(col("__m"), ps))
             .as(Seq("__i", "value")))
         .withColumn("p",
           element_at(array(ps.map(lit): _*), col("__i").cast("int") + 1))
@@ -418,7 +404,7 @@ object StatsQ {
       // merged group's size at the driver SFs), so the single-pass
       // exact oracle hash-matches.
       val ps = Seq(0.5, 0.9)
-      val store = scratchDir("sketch_rollup", dir)
+      val store = Scratch.dir(s"sketch_rollup_${Integer.toHexString(dir.hashCode)}")
       // the horizon fold merges a priority's 12 month-sketches — the
       // binding regime bound is the merged per-priority count (the
       // unfiltered count bounds any horizon)
@@ -431,7 +417,7 @@ object StatsQ {
         .groupBy(col("o_orderpriority"),
           date_format(col("o_orderdate"), "yyyy-MM").as("mon"))
         .agg(graft.functions.KllQuantiles
-            .kllSketch(s, col("o_totalprice"), 65536).as("sk"),
+            .kllSketch(col("o_totalprice"), 65536).as("sk"),
           count(lit(1)).as("cnt"))
         // co-locate each month's (few) sketch rows in one task before
         // the partitioned write: without this every shuffle partition
@@ -447,10 +433,10 @@ object StatsQ {
       s.read.parquet(store.getAbsolutePath)
         .filter(col("mon") >= "1995-01" && col("mon") <= "1995-12")
         .groupBy(col("o_orderpriority"))
-        .agg(graft.functions.KllQuantiles.kllMerge(s, col("sk")).as("m"),
+        .agg(graft.functions.KllQuantiles.kllMerge(col("sk")).as("m"),
           sum(col("cnt")).as("n"))
         .select(col("o_orderpriority"), col("n"),
-          posexplode(graft.functions.KllQuantiles.kllValues(s, col("m"), ps))
+          posexplode(graft.functions.KllQuantiles.kllValues(col("m"), ps))
             .as(Seq("__i", "value")))
         .withColumn("p",
           element_at(array(ps.map(lit): _*), col("__i").cast("int") + 1))
@@ -899,11 +885,11 @@ object StatsQ {
         .withColumn("w", col("o_orderkey") % 7 + lit(1))
         .groupBy(col("o_orderpriority"))
         .agg(graft.functions.KllQuantiles
-            .kllSketchWeighted(s, col("o_totalprice"), col("w"), 65536).as("sk"),
+            .kllSketchWeighted(col("o_totalprice"), col("w"), 65536).as("sk"),
           sum(col("w").cast("long")).as("n"))
         .select(col("o_orderpriority"), col("n"),
           posexplode(graft.functions.KllQuantiles
-            .kllValuesInterp(s, col("sk"), ps)).as(Seq("__i", "value")))
+            .kllValuesInterp(col("sk"), ps)).as(Seq("__i", "value")))
         .withColumn("p",
           element_at(array(ps.map(lit): _*), col("__i").cast("int") + 1))
         .select(col("o_orderpriority"), col("p"), col("n"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 import graft.operators.{Dedup, Hll, Multimodal, Retrieval, Sampling, Sketches, TextAnalysis}
 
 /** Declared document/text queries Q15–Q17 plus the mandated
@@ -257,20 +257,9 @@ object TextDocs {
     b.toString
   }
 
-  /** Pid-scoped scratch dir under java.io.tmpdir for the round-trip
-    * queries, deleted on JVM exit. The shutdown hook registers ONCE per
-    * unique path regardless of how many times a query lambda re-runs
-    * (Bench re-measures, Verify re-invokes) — unbounded hook
-    * accumulation was a review finding. */
-  private val scratchHooked = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def scratchDir(prefix: String, dir: String): java.io.File = {
-    val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_${prefix}_${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}")
-    if (scratchHooked.add(f.getAbsolutePath))
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(f): Unit))
-    f
-  }
+  /** The round-trip queries' scratch dir, one per prefix and input dir. */
+  private def scratchDir(prefix: String, dir: String): java.io.File =
+    Scratch.dir(s"${prefix}_${Integer.toHexString(dir.hashCode)}")
 
   val defs: Map[String, Q] = Map(
     "q15_dup_lengths" -> ((s, dir) => {
@@ -531,7 +520,7 @@ object TextDocs {
       Tables.spread(docs(s, dir))
         .select(col("doc_id"), TextAnalysis.bpeTokens(tx).as("pre"))
         .select(col("doc_id"), col("pre"),
-          graft.functions.BpeEncodeVocab.encode(s, col("pre"),
+          graft.functions.BpeEncodeVocab.encode(col("pre"),
             bpeVocabTable).as("toks"))
         .select(col("doc_id"),
           size(col("pre")).as("n_pre"),
@@ -571,7 +560,7 @@ object TextDocs {
       Tables.spread(docs(s, dir))
         .select(col("doc_id"), TextAnalysis.bpeTokens(tx).as("pre"))
         .select(col("doc_id"), col("pre"),
-          graft.functions.BpeEncodeVocab.encode(s, col("pre"), table).as("toks"))
+          graft.functions.BpeEncodeVocab.encode(col("pre"), table).as("toks"))
         .select(col("doc_id"),
           size(col("pre")).as("n_pre"),
           length(array_join(col("pre"), "")).as("n_chars"),
@@ -590,7 +579,7 @@ object TextDocs {
       val d = docs(s, dir)
       val table = TextAnalysis.bpeTrain(d, "text", bpeTrainMerges)
       val vocab = TextAnalysis.bpeVocabIds(d, "text", table)
-      val ids = TextAnalysis.bpeEncodeIds(s, col("text"), table, vocab)
+      val ids = TextAnalysis.bpeEncodeIds(col("text"), table, vocab)
       // spread the encode (the x_bpe_merges rationale)
       Tables.spread(d).select(col("doc_id"), ids.as("ids"))
         .select(col("doc_id"),
@@ -758,7 +747,8 @@ object TextDocs {
       docs(s, dir)
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"),
-          explode(graft.functions.ShingleStrings.shingleStrings(s, col("text"))).as("shingle"))
+          explode(graft.functions.ShingleStrings.shingleStrings(
+            col("text"))).as("shingle"))
         .groupBy("shingle").agg(count(lit(1)).as("df"))
         .orderBy(col("df").desc, col("shingle"))
         .limit(20)
@@ -878,7 +868,7 @@ object TextDocs {
       // replays the byte-level fold, and the unsigned replay value maps
       // back to the JVM's signed long for the compare.
       docs(s, dir).select(col("doc_id"),
-        TextAnalysis.fingerprint(s, col("text")).as("fp"))
+        TextAnalysis.fingerprint(col("text")).as("fp"))
         .orderBy("doc_id")
     }),
 
@@ -1107,7 +1097,7 @@ object TextDocs {
         .select(col("source"), explode(split(col("text"), "\\s+")).as("word"))
         .filter(length(col("word")) > 0)
         .select(col("source"),
-          graft.functions.Fnv1a64.fnv64(s, col("word")).as("wh"))
+          graft.functions.Fnv1a64.fnv64(col("word")).as("wh"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val sw = toks.groupBy("source", "wh").agg(count(lit(1)).as("csw"))
       val st = toks.groupBy("source").agg(count(lit(1)).as("cs"))
@@ -1439,7 +1429,7 @@ object TextDocs {
       val raw = concat(substring(col("text"), 1, 24), lit("e\u0301"))
       docs(s, dir).select(col("doc_id"),
           length(raw).cast("int").as("len_raw"),
-          graft.functions.UnicodeNormalize.nfc(s, raw).as("norm"))
+          graft.functions.UnicodeNormalize.nfc(raw).as("norm"))
         .withColumn("len_norm", length(col("norm")).cast("int"))
         .orderBy("doc_id")
     }),
@@ -1494,7 +1484,7 @@ object TextDocs {
         .select(col("doc_id"), col("source"),
           explode(split(col("text"), "\\s+")).as("w"))
         .filter(length(col("w")) > 0)
-      val key = graft.functions.Fnv1a64.fnv64(s, col("w"))
+      val key = graft.functions.Fnv1a64.fnv64(col("w"))
       val day1 = Hll.registers(toks.filter(col("doc_id") % 2 === 0),
         Seq("source"), key, p = 9)
       val day2 = Hll.registers(toks.filter(col("doc_id") % 2 =!= 0),
@@ -1516,7 +1506,7 @@ object TextDocs {
         .select(col("source"), explode(split(col("text"), "\\s+")).as("w"))
         .filter(length(col("w")) > 0)
       val est = Hll.estimateDistinct(toks, Seq("source"),
-        graft.functions.Fnv1a64.fnv64(s, col("w")), p = 9)
+        graft.functions.Fnv1a64.fnv64(col("w")), p = 9)
       val exact = toks.groupBy("source")
         .agg(countDistinct(col("w")).as("exact_distinct"))
       est.join(exact, Seq("source")).orderBy("source")

@@ -29,7 +29,7 @@ object Vectors {
           // round via decimal(10,4) for cross-engine determinism, then
           // hand the driver a DOUBLE — its hasher renders trailing-zero
           // decimals inconsistently (round-1 verdict).
-          graft.functions.CosineSimilarity.cosine(s, col("ea"), col("eb"))
+          graft.functions.CosineSimilarity.cosine(col("ea"), col("eb"))
             .cast("decimal(10,4)").cast("double").as("cos"))
         .orderBy(col("cos").desc, col("vec_id"))
         .limit(20)
@@ -131,7 +131,7 @@ object Vectors {
       // review); the only shuffle is the output sort.
       emb(s, dir)
         .select(col("vec_id"),
-          graft.functions.QuantStats.stats(s, col("embedding")).as("st"))
+          graft.functions.QuantStats.stats(col("embedding")).as("st"))
         .select(col("vec_id"),
           round(col("st.scale"), 4).as("scale_r"),
           col("st.qsum").as("qsum"),
@@ -271,7 +271,7 @@ object Vectors {
       // language / source" report needs. Outputs are exact integers
       // (sums of quantized values), so the oracle is exact.
       val q = emb(s, dir).select(col("label"),
-        graft.functions.QuantizeVec.quantize(s, col("embedding"), 10000).as("qv"))
+        graft.functions.QuantizeVec.quantize(col("embedding"), 10000).as("qv"))
       q.select(col("label"), posexplode(col("qv")).as(Seq("pos", "q")))
         .groupBy(col("label"), col("pos"))
         .agg(sum(col("q")).as("s"), count(lit(1)).as("c"))
@@ -350,7 +350,7 @@ object Vectors {
       val b = e.select(col("label"), col("vec_id").as("idb"), col("embedding").as("vb"))
       a.join(b, Seq("label")).filter(col("ida") < col("idb"))
         .select(col("ida"), col("idb"),
-          graft.functions.CosineSimilarity.cosine(s, col("va"), col("vb")).as("rawcos"))
+          graft.functions.CosineSimilarity.cosine(col("va"), col("vb")).as("rawcos"))
         // 0.35 yields 14/26/391 pairs at sf0.001/0.01/0.1 — non-vacuous
         // at every SF (the synthetic embeddings top out at cosine ~0.47).
         .filter(col("rawcos") >= 0.35)
@@ -402,7 +402,7 @@ object Vectors {
       val e = emb(s, dir)
       val withP = e.select(col("vec_id"), col("embedding"),
         graft.functions.RandomProjection.project(
-          s, col("embedding"), jlPlanes, jlSeed).as("pv"))
+          col("embedding"), jlPlanes, jlSeed).as("pv"))
       val a = withP.select(col("vec_id"), col("embedding").as("ea"),
         col("pv").as("pa"))
       val b = withP.select(col("vec_id").as("vid_b"),
@@ -410,9 +410,9 @@ object Vectors {
       a.filter(col("vec_id") % 2 === 0)
         .join(b, col("vid_b") === col("vec_id") + 1)
         .select(col("vec_id"),
-          graft.functions.CosineSimilarity.cosine(s, col("ea"), col("eb"))
+          graft.functions.CosineSimilarity.cosine(col("ea"), col("eb"))
             .cast("decimal(10,4)").cast("double").as("cos_orig"),
-          graft.functions.CosineSimilarity.cosine(s, col("pa"), col("pb"))
+          graft.functions.CosineSimilarity.cosine(col("pa"), col("pb"))
             .cast("decimal(10,4)").cast("double").as("cos_proj"))
         .orderBy("vec_id")
     })

@@ -31,8 +31,7 @@ object TrendingTopK {
         // function there (where the batch plan is analyzed), publish
         // the view on the ORIGINAL session (where readers look)
         val top = batch
-          .agg(graft.functions.TopK.topK(batch.sparkSession,
-            struct(col("cnt"), col(keyCol)), k).as("top"))
+          .agg(graft.functions.TopK.topK(struct(col("cnt"), col(keyCol)), k).as("top"))
           .select(posexplode(col("top")).as(Seq("__r", "__c")))
           .select((col("__r") + 1).as("rank"),
             col(s"__c.$keyCol").as(keyCol), col("__c.cnt").as("cnt"))
@@ -66,13 +65,11 @@ object TrendingTopK {
     */
   def windowedBoards(events: DataFrame, tsCol: String, keyCol: String, k: Int,
                      windowDuration: String, delayThreshold: String): DataFrame = {
-    val spark = events.sparkSession
     events.withWatermark(tsCol, delayThreshold)
       .groupBy(window(col(tsCol), windowDuration), col(keyCol))
       .agg(count(lit(1)).as("cnt"))
       .groupBy(col("window"))
-      .agg(graft.functions.TopK.topK(spark,
-        struct(col("cnt"), col(keyCol)), k).as("__top"))
+      .agg(graft.functions.TopK.topK(struct(col("cnt"), col(keyCol)), k).as("__top"))
       .select(col("window"), posexplode(col("__top")).as(Seq("__r", "__c")))
       .select(col("window.start").as("win_start"), col("window.end").as("win_end"),
         (col("__r") + 1).as("rank"),

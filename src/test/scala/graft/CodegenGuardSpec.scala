@@ -215,35 +215,35 @@ class CodegenGuardSpec extends AnyFunSuite {
       val df = Seq((1L, "the quick brown fox jumps", Array(0.5f, -0.25f, 0.125f),
           0.75, 3, 7))
         .toDF("id", "text", "vec", "d", "xi", "yi")
-      val sh = ShingleHashes.shingleHashes(spark, col("text"), 3)
+      val sh = ShingleHashes.shingleHashes(col("text"), 3)
       df.select(
-        Fnv1a64.fnv64(spark, col("text")).as("a1"),
+        Fnv1a64.fnv64(col("text")).as("a1"),
         sh.as("a2"),
-        ShingleStrings.shingleStrings(spark, col("text"), 3).as("a3"),
-        SimHash64.simhash64(spark, sh).as("a4"),
-        MinHashSignature.signature(spark, sh, 8).as("a5"),
-        UnicodeNormalize.nfc(spark, col("text")).as("a6")).collect()
+        ShingleStrings.shingleStrings(col("text"), 3).as("a3"),
+        SimHash64.simhash64(sh).as("a4"),
+        MinHashSignature.signature(sh, 8).as("a5"),
+        UnicodeNormalize.nfc(col("text")).as("a6")).collect()
       df.select(
-        CosineSimilarity.cosine(spark, col("vec"), col("vec")).as("b1"),
-        VectorFunctions.hyperplaneSignature(spark, col("vec"), 4, 42L).as("b2"),
-        RandomProjection.project(spark, col("vec"), 4, 7L).as("b3"),
-        QuantStats.stats(spark, col("vec")).as("b4"),
-        QuantizeVec.quantize(spark, col("vec"), 1000).as("b5"),
-        NearestCentroid.nearest(spark, col("vec"), expr(
+        CosineSimilarity.cosine(col("vec"), col("vec")).as("b1"),
+        VectorFunctions.hyperplaneSignature(col("vec"), 4, 42L).as("b2"),
+        RandomProjection.project(col("vec"), 4, 7L).as("b3"),
+        QuantStats.stats(col("vec")).as("b4"),
+        QuantizeVec.quantize(col("vec"), 1000).as("b5"),
+        NearestCentroid.nearest(col("vec"), expr(
           "array(named_struct('cid', CAST(1 AS BIGINT), " +
             "'cv', array(CAST(0.1 AS FLOAT), CAST(0.2 AS FLOAT), CAST(0.3 AS FLOAT))))"))
           .as("b6")).collect()
       df.select(
-        SortableDoubleBits.sortable(spark, col("d")).as("c1"),
-        ZOrder2.zorder(spark, col("xi").cast("long"), col("yi").cast("long")).as("c2"),
-        ChunkStrings.chunkStrings(spark, col("text"), 5).as("c3"),
-        ChunkHashes.chunkHashes(spark, col("text"), 5).as("c4"),
-        OverlapChunkStrings.overlapChunks(spark, col("text"), 5, 3).as("c5"),
-        RollingHashes.rollingHashes(spark, col("text"), 4).as("c6"),
-        HllRegister.registerCoords(spark, col("id"), 9).as("c7"),
-        CountMinBuckets.buckets(spark, col("id"), 3, 64).as("c8")).collect()
+        SortableDoubleBits.sortable(col("d")).as("c1"),
+        ZOrder2.zorder(col("xi").cast("long"), col("yi").cast("long")).as("c2"),
+        ChunkStrings.chunkStrings(col("text"), 5).as("c3"),
+        ChunkHashes.chunkHashes(col("text"), 5).as("c4"),
+        OverlapChunkStrings.overlapChunks(col("text"), 5, 3).as("c5"),
+        RollingHashes.rollingHashes(col("text"), 4).as("c6"),
+        HllRegister.registerCoords(col("id"), 9).as("c7"),
+        CountMinBuckets.buckets(col("id"), 3, 64).as("c8")).collect()
       df.groupBy(col("id"))
-        .agg(TopK.topK(spark, struct(col("d"), col("id")), 2).as("t")).collect()
+        .agg(TopK.topK(struct(col("d"), col("id")), 2).as("t")).collect()
     }
     assert(hits.isEmpty,
       s"a native expression fell back to the interpreted path:\n${hits.mkString("\n")}")
@@ -276,38 +276,38 @@ class CodegenGuardSpec extends AnyFunSuite {
       val df = Seq((1L, "the quick brown fox jumps over the lazy dog",
           Array.tabulate(64)(i => (i - 32) / 32.0f), 0.75))
         .toDF("id", "text", "vec", "d")
-      val sh9 = ShingleHashes.shingleHashes(spark, col("text"), 9)
+      val sh9 = ShingleHashes.shingleHashes(col("text"), 9)
       df.select(
         sh9.as("a1"),
-        ShingleStrings.shingleStrings(spark, col("text"), 2).as("a2"),
-        MinHashSignature.signature(spark, sh9, 128).as("a3"),
-        SimHash64.simhash64(spark, sh9).as("a4"),
-        ChunkStrings.chunkStrings(spark, col("text"), 64).as("a5"),
-        ChunkHashes.chunkHashes(spark, col("text"), 64).as("a6"),
-        OverlapChunkStrings.overlapChunks(spark, col("text"), 64, 16).as("a7"),
-        RollingHashes.rollingHashes(spark, col("text"), 12).as("a8")).collect()
+        ShingleStrings.shingleStrings(col("text"), 2).as("a2"),
+        MinHashSignature.signature(sh9, 128).as("a3"),
+        SimHash64.simhash64(sh9).as("a4"),
+        ChunkStrings.chunkStrings(col("text"), 64).as("a5"),
+        ChunkHashes.chunkHashes(col("text"), 64).as("a6"),
+        OverlapChunkStrings.overlapChunks(col("text"), 64, 16).as("a7"),
+        RollingHashes.rollingHashes(col("text"), 12).as("a8")).collect()
       df.select(
-        VectorFunctions.hyperplaneSignature(spark, col("vec"), 32, 99L).as("b1"),
-        RandomProjection.project(spark, col("vec"), 16, 99L).as("b2"),
-        QuantizeVec.quantize(spark, col("vec"), 65535).as("b3"),
-        HllRegister.registerCoords(spark, col("id"), 14).as("b4"),
-        CountMinBuckets.buckets(spark, col("id"), 5, 4096).as("b5"),
-        BootstrapWeights.weights(spark, col("id"), 2000).as("b6")).collect()
+        VectorFunctions.hyperplaneSignature(col("vec"), 32, 99L).as("b1"),
+        RandomProjection.project(col("vec"), 16, 99L).as("b2"),
+        QuantizeVec.quantize(col("vec"), 65535).as("b3"),
+        HllRegister.registerCoords(col("id"), 14).as("b4"),
+        CountMinBuckets.buckets(col("id"), 5, 4096).as("b5"),
+        BootstrapWeights.weights(col("id"), 2000).as("b6")).collect()
       df.groupBy(col("id"))
-        .agg(TopK.topK(spark, col("d"), 1 << 10).as("t1"),
-          KllQuantiles.kllQuantiles(spark, col("d"),
+        .agg(TopK.topK(col("d"), 1 << 10).as("t1"),
+          KllQuantiles.kllQuantiles(col("d"),
             Seq(0.1, 0.5, 0.9), 1024).as("t2"),
-          KllQuantiles.kllQuantilesWeighted(spark, col("d"), col("id"),
+          KllQuantiles.kllQuantilesWeighted(col("d"), col("id"),
             Seq(0.1, 0.5, 0.9), 1024).as("t3")).collect()
       // (3) the sketch READERS at a 99-point quantile grid: both read
       // modes are one static call over a referenced double[], so the
       // generated code must stay flat no matter how many ps ride along
       val manyPs = (1 to 99).map(_ / 100.0)
       df.groupBy(col("id"))
-        .agg(KllQuantiles.kllSketch(spark, col("d"), 1024).as("sk"))
+        .agg(KllQuantiles.kllSketch(col("d"), 1024).as("sk"))
         .select(
-          KllQuantiles.kllValues(spark, col("sk"), manyPs).as("r1"),
-          KllQuantiles.kllValuesInterp(spark, col("sk"), manyPs).as("r2"))
+          KllQuantiles.kllValues(col("sk"), manyPs).as("r1"),
+          KllQuantiles.kllValuesInterp(col("sk"), manyPs).as("r2"))
         .collect()
     }
     assert(hits.isEmpty,

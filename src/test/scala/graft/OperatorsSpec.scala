@@ -15,7 +15,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(Fnv1a64.hashBytes("a".getBytes("UTF-8")) == 0xaf63dc4c8601ec8cL)
     // and through the engine (codegen path)
     val got = Seq("a").toDF("s")
-      .select(Fnv1a64.fnv64(spark, $"s").as("h")).head().getLong(0)
+      .select(Fnv1a64.fnv64($"s").as("h")).head().getLong(0)
     assert(got == 0xaf63dc4c8601ec8cL)
   }
 
@@ -43,7 +43,7 @@ class OperatorsSpec extends AnyFunSuite {
     val b = e.select($"vec_id".as("vb"), $"embedding".as("eb"))
     val diffs = a.join(b, $"vb" === $"vec_id" + 1)
       .select(
-        graft.functions.CosineSimilarity.cosine(spark, $"ea", $"eb").as("native"),
+        graft.functions.CosineSimilarity.cosine($"ea", $"eb").as("native"),
         VectorFunctions.cosine($"ea", $"eb").as("hof"))
       .filter($"native" =!= $"hof") // exact double comparison
       .count()
@@ -124,7 +124,7 @@ class OperatorsSpec extends AnyFunSuite {
       (2L, "alpha beta gamma delta epsilon zeta eta theta"),
       (3L, "completely different words entirely unrelated stuff here now")
     ).toDF("doc_id", "text")
-    val sigs = docs.select($"doc_id", Dedup.simhash(spark, $"text").as("sig"))
+    val sigs = docs.select($"doc_id", Dedup.simhash($"text").as("sig"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sigs(1L) == sigs(2L))
     assert(sigs(1L) != sigs(3L))
@@ -183,7 +183,7 @@ class OperatorsSpec extends AnyFunSuite {
     val df = Seq(
       (1L, "Hello   World"), (2L, "hello world"), (3L, "hello worlds")
     ).toDF("id", "text")
-    val fp = df.select($"id", TextAnalysis.fingerprint(spark, $"text").as("fp"))
+    val fp = df.select($"id", TextAnalysis.fingerprint($"text").as("fp"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fp(1L) == fp(2L))
     assert(fp(1L) != fp(3L))
@@ -271,7 +271,7 @@ class OperatorsSpec extends AnyFunSuite {
       (3L, Array.fill(8)(-1.0f))
     ).toDF("id", "v")
     val sig = df.select($"id",
-      VectorFunctions.hyperplaneSignature(spark, $"v", planes = 12, seed = 42L).as("s"))
+      VectorFunctions.hyperplaneSignature($"v", planes = 12, seed = 42L).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sig(1L) == sig(2L))
     // -v flips the sign of every projection → every one of the 12 bits
@@ -286,8 +286,8 @@ class OperatorsSpec extends AnyFunSuite {
     val vecs = Seq.tabulate(8)(i => (i.toLong, Array.fill(16)(rnd.nextFloat() * 2f - 1f)))
     val df = vecs.toDF("id", "v")
     val got = df.select($"id",
-      RandomProjection.project(spark, $"v", planes = 12, seed = 42L).as("p"),
-      VectorFunctions.hyperplaneSignature(spark, $"v", planes = 12, seed = 42L).as("s"))
+      RandomProjection.project($"v", planes = 12, seed = 42L).as("p"),
+      VectorFunctions.hyperplaneSignature($"v", planes = 12, seed = 42L).as("s"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1), r.getLong(2))).toList
     got.foreach { case (id, proj, sig) =>
       assert(proj.length == 12)
@@ -314,7 +314,7 @@ class OperatorsSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val vecs = Seq.tabulate(64)(i => (i.toLong, Array.fill(16)(rnd.nextFloat() * 2f - 1f)))
     val sigs = vecs.toDF("id", "v")
-      .select(VectorFunctions.hyperplaneSignature(spark, $"v", planes = 12, seed = 42L))
+      .select(VectorFunctions.hyperplaneSignature($"v", planes = 12, seed = 42L))
       .collect().map(_.getLong(0))
     assert(sigs.distinct.length >= 32, s"only ${sigs.distinct.length} distinct buckets")
   }
@@ -328,7 +328,7 @@ class OperatorsSpec extends AnyFunSuite {
       .toDF("id", "v")
       .repartition(2) // keep the projection out of ConvertToLocalRelation
     val q = wide.select($"id",
-      VectorFunctions.hyperplaneSignature(spark, $"v", planes = 24, seed = 1L).as("s"))
+      VectorFunctions.hyperplaneSignature($"v", planes = 24, seed = 1L).as("s"))
     val out = q.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // inspect the final (post-AQE) plan: the signature must sit inside a
     // whole-stage-codegen span, not an interpreted fallback
@@ -342,7 +342,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(out.size == 8 && out.values.toSet.size > 1)
     // deterministic across plans/runs
     val again = wide.repartition(4).select($"id",
-      VectorFunctions.hyperplaneSignature(spark, $"v", planes = 24, seed = 1L).as("s"))
+      VectorFunctions.hyperplaneSignature($"v", planes = 24, seed = 1L).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(again == out)
   }
@@ -640,7 +640,7 @@ class OperatorsSpec extends AnyFunSuite {
     // the 13-rank table: both engine paths side-by-side in one plan
     val small = graft.queries.TextDocs.bpeMergeTable
     docs.select(
-        TextAnalysis.bpeEncodeVocab(spark, $"text", small).as("a"),
+        TextAnalysis.bpeEncodeVocab($"text", small).as("a"),
         TextAnalysis.bpeEncode($"text", small).as("b"))
       .collect().foreach { r =>
         assert(r.getSeq[String](0) == r.getSeq[String](1),
@@ -663,7 +663,7 @@ class OperatorsSpec extends AnyFunSuite {
     }
     val rows = docs.select(
         TextAnalysis.bpeTokens($"text").as("pre"),
-        TextAnalysis.bpeEncodeVocab(spark, $"text", big).as("a"))
+        TextAnalysis.bpeEncodeVocab($"text", big).as("a"))
       .collect()
     rows.foreach { r =>
       val want = r.getSeq[String](0).flatMap(passRef)
@@ -676,7 +676,7 @@ class OperatorsSpec extends AnyFunSuite {
     // ranks after every merge, the pass schedule never revisits
     val t = Seq(("ab", "c"), ("a", "b"))
     val one = Seq("abc").toDF("text")
-    assert(one.select(TextAnalysis.bpeEncodeVocab(spark, $"text", t))
+    assert(one.select(TextAnalysis.bpeEncodeVocab($"text", t))
       .head().getSeq[String](0) == Seq("abc"))
     assert(one.select(TextAnalysis.bpeEncode($"text", t))
       .head().getSeq[String](0) == Seq("ab", "c"))
@@ -686,7 +686,7 @@ class OperatorsSpec extends AnyFunSuite {
     import graft.functions.BpeEncodeVocab
     def enc(merges: Seq[(String, String)], pres: Seq[String]): Seq[String] = {
       Seq(Tuple1(pres)).toDF("pre")
-        .select(BpeEncodeVocab.encode(spark, $"pre", merges).as("o"))
+        .select(BpeEncodeVocab.encode($"pre", merges).as("o"))
         .head().getSeq[String](0).toSeq
     }
     // classic: ALL occurrences of the lowest-rank pair merge before any
@@ -716,7 +716,7 @@ class OperatorsSpec extends AnyFunSuite {
       org.apache.spark.sql.catalyst.expressions.Literal(null), Seq("a"), Seq.empty))
     // NULL pre-token array -> NULL out (UnaryExpression null contract)
     val n = Seq(Tuple1(null: Seq[String])).toDF("pre")
-      .select(BpeEncodeVocab.encode(spark, $"pre", Seq(("a", "b"))))
+      .select(BpeEncodeVocab.encode($"pre", Seq(("a", "b"))))
       .head()
     assert(n.isNullAt(0))
   }
@@ -741,7 +741,7 @@ class OperatorsSpec extends AnyFunSuite {
     // loop (BpeEncodeVocab) equals the pass schedule (bpeMergeTokens)
     // on it, and the full table tokenizes the corpus to whole words
     val enc = Seq("aa aa ab").toDF("text").select(
-        TextAnalysis.bpeEncodeVocab(spark, $"text", tAll).as("a"),
+        TextAnalysis.bpeEncodeVocab($"text", tAll).as("a"),
         TextAnalysis.bpeEncode($"text", tAll).as("b"))
       .head()
     assert(enc.getSeq[String](0) == enc.getSeq[String](1))
@@ -811,9 +811,9 @@ class OperatorsSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.size(
           TextAnalysis.bpeTokens(org.apache.spark.sql.functions.col("text"))).as("n_pre"),
         org.apache.spark.sql.functions.size(
-          TextAnalysis.bpeEncodeVocab(spark, org.apache.spark.sql.functions.col("text"), table)).as("n_tok"),
+          TextAnalysis.bpeEncodeVocab(org.apache.spark.sql.functions.col("text"), table)).as("n_tok"),
         org.apache.spark.sql.functions.array_min(
-          TextAnalysis.bpeEncodeIds(spark, org.apache.spark.sql.functions.col("text"), table, vocab)).as("min_id"))
+          TextAnalysis.bpeEncodeIds(org.apache.spark.sql.functions.col("text"), table, vocab)).as("min_id"))
       .agg(org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions.col("n_pre")).as("p"),
         org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions.col("n_tok")).as("t"),
         org.apache.spark.sql.functions.min(org.apache.spark.sql.functions.col("min_id")).as("m"))
@@ -832,12 +832,12 @@ class OperatorsSpec extends AnyFunSuite {
     assert(vocab == Seq((" ", 0), ("a", 1), ("b", 2),
       (" a", 3), (" aa", 4), (" ab", 5), ("aa", 6)), vocab)
     val ids = Seq("aa aa ab").toDF("text")
-      .select(TextAnalysis.bpeEncodeIds(spark, $"text", table, vocab).as("i"))
+      .select(TextAnalysis.bpeEncodeIds($"text", table, vocab).as("i"))
       .head().getSeq[Int](0)
     assert(ids == Seq(6, 4, 5), ids)
     // foreign text: "c" is no alphabet/production token -> -1 sentinel
     val unk = Seq("ac").toDF("text")
-      .select(TextAnalysis.bpeEncodeIds(spark, $"text", table, vocab).as("i"))
+      .select(TextAnalysis.bpeEncodeIds($"text", table, vocab).as("i"))
       .head().getSeq[Int](0)
     assert(unk == Seq(1, -1), unk)
     // hand-written collision: rank-4 (a,bc) reproduces rank-3 (ab,c)'s
@@ -847,7 +847,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(v2 == Seq(("a", 0), ("b", 1), ("c", 2),
       ("ab", 3), ("bc", 4), ("abc", 5)), v2)
     val ex = intercept[IllegalArgumentException] {
-      TextAnalysis.bpeEncodeIds(spark, $"text", table,
+      TextAnalysis.bpeEncodeIds($"text", table,
         Seq(("a", 0), ("a", 1)))
     }
     assert(ex.getMessage.contains("duplicate tokens"))
@@ -870,7 +870,7 @@ class OperatorsSpec extends AnyFunSuite {
     val out = Seq("the batch the", "unseen words stay chars")
       .toDF("text")
       .select(org.apache.spark.sql.functions.size(
-        TextAnalysis.bpeEncodeVocab(spark, $"text", merges)).as("n"))
+        TextAnalysis.bpeEncodeVocab($"text", merges)).as("n"))
       .orderBy($"n").collect().map(_.getInt(0)).toSeq
     // "the batch the": [the, " batch" unmerged(6), " the"] = 8 tokens;
     // second doc: 23 non-space chars + 3 space-prefixed = every char a
@@ -1045,14 +1045,14 @@ class OperatorsSpec extends AnyFunSuite {
     val df = spark.range(0, 1000).toDF("v")
       .withColumn("g", col("v") % 3)
       .repartition(64)
-    val got = df.groupBy("g").agg(TopK.topK(spark, col("v"), 5).as("top"))
+    val got = df.groupBy("g").agg(TopK.topK(col("v"), 5).as("top"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
     assert(got(0L) == Seq(999L, 996L, 993L, 990L, 987L))
     assert(got(1L) == Seq(997L, 994L, 991L, 988L, 985L))
     assert(got(2L) == Seq(998L, 995L, 992L, 989L, 986L))
     // groups smaller than k return everything; nulls are skipped
     val small = Seq(Some(1L), None, Some(3L)).toDF("v").withColumn("g", lit(0))
-    val s = small.groupBy("g").agg(TopK.topK(spark, col("v"), 5).as("top"))
+    val s = small.groupBy("g").agg(TopK.topK(col("v"), 5).as("top"))
       .head().getSeq[Long](1).toSeq
     assert(s == Seq(3L, 1L))
   }
@@ -1066,7 +1066,7 @@ class OperatorsSpec extends AnyFunSuite {
     // unbounded baseline: window rank over ALL candidates
     val cand = corpus.crossJoin(broadcast(queries.select($"qid", $"embedding".as("__qv"))))
       .select($"qid", $"nid",
-        graft.functions.CosineSimilarity.cosine(spark, $"embedding", $"__qv")
+        graft.functions.CosineSimilarity.cosine($"embedding", $"__qv")
           .cast("decimal(10,4)").cast("double").as("cos"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy($"cos".desc, $"nid".desc)
@@ -1474,7 +1474,7 @@ class OperatorsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { ZOrder2.interleave(0L, -1L) }
     // through the engine (codegen path)
     val z = Seq((3L, 1L)).toDF("a", "b")
-      .select(ZOrder2.zorder(spark, $"a", $"b").as("z")).head().getLong(0)
+      .select(ZOrder2.zorder($"a", $"b").as("z")).head().getLong(0)
     assert(z == 7L)
   }
 
@@ -1484,7 +1484,7 @@ class OperatorsSpec extends AnyFunSuite {
       .select($"c_custkey",
         $"c_nationkey".cast("long").as("a"),
         floor(($"c_acctbal" + lit(1000.0)) / 100.0).cast("long").as("b"))
-    val zed = cust.withColumn("z", ZOrder2.zorder(spark, $"a", $"b"))
+    val zed = cust.withColumn("z", ZOrder2.zorder($"a", $"b"))
     val base = java.nio.file.Files.createTempDirectory("graft_zorder").toString
     zed.repartitionByRange(4, $"z").sortWithinPartitions($"z")
       .write.parquet(s"$base/zsort")
@@ -1652,13 +1652,13 @@ class OperatorsSpec extends AnyFunSuite {
     }
     // engine path (codegen) agrees with compute()
     val viaEngine = Seq(42L).toDF("h")
-      .select(HllRegister.registerCoords(spark, $"h", 9).as("c"))
+      .select(HllRegister.registerCoords($"h", 9).as("c"))
       .head().getSeq[Int](0)
     val direct = HllRegister.compute(42L, 9)
     assert(viaEngine == Seq(direct.getInt(0), direct.getInt(1)))
     intercept[org.apache.spark.sql.AnalysisException] {
       Seq("x").toDF("s")
-        .select(HllRegister.registerCoords(spark, $"s", 9)).collect()
+        .select(HllRegister.registerCoords($"s", 9)).collect()
     }
   }
 
@@ -1668,7 +1668,7 @@ class OperatorsSpec extends AnyFunSuite {
       .select($"doc_id", explode(split($"text", "\\s+")).as("w"))
       .filter(length($"w") > 0)
       .withColumn("g", lit("all"))
-    val key = Fnv1a64.fnv64(spark, $"w")
+    val key = Fnv1a64.fnv64($"w")
     // sharding is arbitrary: registers of two halves merge to exactly
     // the whole-corpus register table (max is associative/commutative)
     val ra = Hll.registers(toks.filter($"doc_id" % 2 === 0), Seq("g"), key, 9)
@@ -1697,7 +1697,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("CountMinBuckets: range, determinism, power-of-two width enforced") {
     import graft.functions.CountMinBuckets
     val rows = Seq(1L, -7L, Long.MinValue, 42L).toDF("h")
-      .select(CountMinBuckets.buckets(spark, $"h", 4, 512).as("b"))
+      .select(CountMinBuckets.buckets($"h", 4, 512).as("b"))
       .collect().map(_.getSeq[Int](0))
     rows.foreach { b =>
       assert(b.length == 4)
@@ -1705,7 +1705,7 @@ class OperatorsSpec extends AnyFunSuite {
     }
     // same input twice -> same buckets (no RNG state)
     assert(rows(3) == Seq(1L, -7L, Long.MinValue, 42L).toDF("h")
-      .select(CountMinBuckets.buckets(spark, $"h", 4, 512).as("b"))
+      .select(CountMinBuckets.buckets($"h", 4, 512).as("b"))
       .collect().map(_.getSeq[Int](0)).apply(3))
     intercept[IllegalArgumentException] {
       graft.functions.CountMinBuckets(
@@ -1760,19 +1760,19 @@ class OperatorsSpec extends AnyFunSuite {
     import graft.functions.UnicodeNormalize
     // decomposed e + combining acute -> single composed code point
     val nfc = Seq("e\u0301").toDF("s")
-      .select(UnicodeNormalize.nfc(spark, $"s").as("n")).head().getString(0)
+      .select(UnicodeNormalize.nfc($"s").as("n")).head().getString(0)
     assert(nfc == "\u00e9" && nfc.length == 1)
     // NFKC folds the fi ligature and fullwidth digits; NFC must not
     val src = Seq("\ufb01 \uff11\uff12").toDF("s")
-    val nfkc = src.select(UnicodeNormalize.normalized(spark, $"s", "NFKC").as("n"))
+    val nfkc = src.select(UnicodeNormalize.normalized($"s", "NFKC").as("n"))
       .head().getString(0)
     assert(nfkc == "fi 12")
-    val nfcOnly = src.select(UnicodeNormalize.nfc(spark, $"s").as("n"))
+    val nfcOnly = src.select(UnicodeNormalize.nfc($"s").as("n"))
       .head().getString(0)
     assert(nfcOnly == "\ufb01 \uff11\uff12")
     // null passthrough + already-normalized ASCII unchanged
     val rows = Seq(Some("plain"), None).toDF("s")
-      .select(UnicodeNormalize.nfc(spark, $"s").as("n")).collect()
+      .select(UnicodeNormalize.nfc($"s").as("n")).collect()
     assert(rows.map(r => if (r.isNullAt(0)) null else r.getString(0)).toSeq
       == Seq("plain", null))
   }
@@ -1780,7 +1780,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("UnicodeNormalize: non-string input fails analysis, bad form fails fast") {
     import graft.functions.UnicodeNormalize
     val err = intercept[org.apache.spark.sql.AnalysisException] {
-      Seq(1).toDF("i").select(UnicodeNormalize.nfc(spark, $"i")).collect()
+      Seq(1).toDF("i").select(UnicodeNormalize.nfc($"i")).collect()
     }
     assert(err.getMessage.toLowerCase.contains("string"))
     intercept[IllegalArgumentException] {
@@ -3099,14 +3099,14 @@ class OperatorsSpec extends AnyFunSuite {
     import graft.functions.KllQuantiles
     val shards = Seq(("a", 1.0), ("a", 2.0), ("b", 9.0)).toDF("g", "v")
       .groupBy(col("g"))
-      .agg(KllQuantiles.kllSketch(spark, col("v"), 64).as("sk"))
+      .agg(KllQuantiles.kllSketch(col("v"), 64).as("sk"))
     // a group filtered to zero sketch rows never reaches eval — it
     // simply has no output row (hash-agg semantics), no wrapper trace
     val kept = shards.filter(col("g") === "a")
       .groupBy(col("g"))
-      .agg(KllQuantiles.kllMerge(spark, col("sk")).as("m"))
+      .agg(KllQuantiles.kllMerge(col("sk")).as("m"))
       .select(col("g"),
-        KllQuantiles.kllValues(spark, col("m"), Seq(1.0)).as("q"))
+        KllQuantiles.kllValues(col("m"), Seq(1.0)).as("q"))
       .collect()
     assert(kept.map(_.getString(0)).toSeq == Seq("a"))
     assert(kept(0).getSeq[Double](1) == Seq(2.0))
@@ -3114,7 +3114,7 @@ class OperatorsSpec extends AnyFunSuite {
     // must surface the aggregate's own message, not an opaque trace
     val ex = intercept[Exception] {
       shards.filter(lit(false))
-        .agg(KllQuantiles.kllMerge(spark, col("sk"))).collect()
+        .agg(KllQuantiles.kllMerge(col("sk"))).collect()
     }
     val msg = Option(ex.getMessage).getOrElse("") +
       Option(ex.getCause).flatMap(c => Option(c.getMessage)).getOrElse("")

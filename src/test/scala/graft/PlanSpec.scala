@@ -247,13 +247,13 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val e = graft.core.Tables.load(spark, sfDir, "embeddings")
     val q = e.select(col("vec_id").as("__id"),
-      QuantizeVec.quantize(spark, col("embedding"), 10000).as("__qv"))
+      QuantizeVec.quantize(col("embedding"), 10000).as("__qv"))
     val centArr = q.orderBy("__id").limit(4)
       .agg(array_sort(collect_list(struct(
         col("__id").as("cid"), col("__qv").as("cv")))).as("__cents"))
     val asn = q.crossJoin(broadcast(centArr))
       .select(col("__id"), col("__qv"),
-        NearestCentroid.nearest(spark, col("__qv"), col("__cents")).as("cid"))
+        NearestCentroid.nearest(col("__qv"), col("__cents")).as("cid"))
     val upd = asn.select(col("cid"), posexplode(col("__qv")).as(Seq("__pos", "__q")))
       .groupBy(col("cid"), col("__pos"))
       .agg(sum(col("__q")).as("s"), count(lit(1)).as("c"))

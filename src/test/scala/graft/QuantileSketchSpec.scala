@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{KllBuffer, KllQuantiles}
+import graft.functions.{KllBuffer, KllQuantiles, SqlFunctions}
 import graft.operators.Stats
 
 /** The mergeable-sketch scale path of the grouped-quantile family:
@@ -130,32 +130,32 @@ class QuantileSketchSpec extends AnyFunSuite {
     // exactly the single-pass result
     val rows = (1 to 2000).map(i => (i % 2, i.toDouble)).toDF("shard", "v")
     val shards = rows.groupBy(col("shard"))
-      .agg(KllQuantiles.kllSketch(spark, col("v"), 4096).as("sk"),
+      .agg(KllQuantiles.kllSketch(col("v"), 4096).as("sk"),
         count(lit(1)).as("n"))
-    val merged = shards.agg(KllQuantiles.kllMerge(spark, col("sk")).as("m"))
-      .select(KllQuantiles.kllValues(spark, col("m"), Seq(0.25, 0.5, 1.0)).as("qs"))
+    val merged = shards.agg(KllQuantiles.kllMerge(col("sk")).as("m"))
+      .select(KllQuantiles.kllValues(col("m"), Seq(0.25, 0.5, 1.0)).as("qs"))
       .head().getSeq[Double](0)
     assert(merged == Seq(500.0, 1000.0, 2000.0), merged.toString)
     // compacted sketches still merge within the rank-error contract:
     // k=64 forces compaction on both sides; p50 of 1..20000 ≈ 10000
     val big = (1 to 20000).map(i => (i % 2, i.toDouble)).toDF("shard", "v")
     val mBig = big.groupBy(col("shard"))
-      .agg(KllQuantiles.kllSketch(spark, col("v"), 64).as("sk"))
-      .agg(KllQuantiles.kllMerge(spark, col("sk")).as("m"))
-      .select(KllQuantiles.kllValues(spark, col("m"), Seq(0.5)).as("qs"))
+      .agg(KllQuantiles.kllSketch(col("v"), 64).as("sk"))
+      .agg(KllQuantiles.kllMerge(col("sk")).as("m"))
+      .select(KllQuantiles.kllValues(col("m"), Seq(0.5)).as("qs"))
       .head().getSeq[Double](0).head
     assert(math.abs(mBig - 10000.0) <= 20000.0 * (4.0 / 64.0),
       s"merged p50 $mBig drifted past the doubled rank-error band")
     // mixed sketch widths fail LOUD (silent precision loss otherwise)
     val mixed = rows.limit(100)
       .groupBy(col("shard"))
-      .agg(KllQuantiles.kllSketch(spark, col("v"),
+      .agg(KllQuantiles.kllSketch(col("v"),
         // width depends on the shard: 64 vs 128
         64).as("sk"))
       .union(rows.limit(100).groupBy(col("shard"))
-        .agg(KllQuantiles.kllSketch(spark, col("v"), 128).as("sk")))
+        .agg(KllQuantiles.kllSketch(col("v"), 128).as("sk")))
     val ex = intercept[Exception] {
-      mixed.agg(KllQuantiles.kllMerge(spark, col("sk"))).collect()
+      mixed.agg(KllQuantiles.kllMerge(col("sk"))).collect()
     }
     val msg = Option(ex.getMessage).getOrElse("") +
       Option(ex.getCause).flatMap(c => Option(c.getMessage)).getOrElse("")
@@ -163,7 +163,7 @@ class QuantileSketchSpec extends AnyFunSuite {
     // empty merge input fails loud, not a garbage sketch
     val exEmpty = intercept[Exception] {
       shards.filter(lit(false))
-        .agg(KllQuantiles.kllMerge(spark, col("sk"))).collect()
+        .agg(KllQuantiles.kllMerge(col("sk"))).collect()
     }
     val msgE = Option(exEmpty.getMessage).getOrElse("") +
       Option(exEmpty.getCause).flatMap(c => Option(c.getMessage)).getOrElse("")
@@ -242,9 +242,9 @@ class QuantileSketchSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, lit}
     val df = Seq(("a", Some(1.0)), ("b", None), ("b", None)).toDF("g", "v")
     val out = df.groupBy(col("g"))
-      .agg(KllQuantiles.kllSketch(spark, col("v"), 64).as("sk"))
+      .agg(KllQuantiles.kllSketch(col("v"), 64).as("sk"))
       .select(col("g"),
-        KllQuantiles.kllValues(spark, col("sk"), Seq(0.5)).as("q"))
+        KllQuantiles.kllValues(col("sk"), Seq(0.5)).as("q"))
       .orderBy("g").collect()
     assert(out(0).getSeq[Double](1) == Seq(1.0))
     assert(out(1).isNullAt(1), "empty sketch must read as NULL")
@@ -260,11 +260,11 @@ class QuantileSketchSpec extends AnyFunSuite {
     // unweighted 1..5: pos = (5−1)·p — exact-index and fractional lerp
     val df = (1 to 5).map(i => ("a", i.toDouble, 1L)).toDF("g", "v", "w")
     val sk = df.groupBy(col("g"))
-      .agg(KllQuantiles.kllSketchWeighted(spark, col("v"), col("w"), 64).as("sk"))
-    val qs = sk.select(KllQuantiles.kllValuesInterp(spark, col("sk"),
+      .agg(KllQuantiles.kllSketchWeighted(col("v"), col("w"), 64).as("sk"))
+    val qs = sk.select(KllQuantiles.kllValuesInterp(col("sk"),
       Seq(0.0, 0.25, 0.5, 1.0)).as("q")).head().getSeq[Double](0)
     assert(qs == Seq(1.0, 2.0, 3.0, 5.0), qs.toString)
-    val q2 = sk.select(KllQuantiles.kllValuesInterp(spark, col("sk"),
+    val q2 = sk.select(KllQuantiles.kllValuesInterp(col("sk"),
       Seq(0.3)).as("q")).head().getSeq[Double](0)
     assert(math.abs(q2.head - 2.2) < 1e-12, q2.toString) // 2 + 0.2·(3−2)
     // parity with Spark's own percentile on the EXPANDED multiset:
@@ -274,25 +274,24 @@ class QuantileSketchSpec extends AnyFunSuite {
     val want = exp.selectExpr("percentile(v, array(0.1D, 0.5D, 0.77D)) AS p")
       .head().getSeq[Double](0)
     val got = wdf.groupBy(col("g"))
-      .agg(KllQuantiles.kllSketchWeighted(spark, col("v"), col("w"), 64).as("sk"))
-      .select(KllQuantiles.kllValuesInterp(spark, col("sk"),
+      .agg(KllQuantiles.kllSketchWeighted(col("v"), col("w"), 64).as("sk"))
+      .select(KllQuantiles.kllValuesInterp(col("sk"),
         Seq(0.1, 0.5, 0.77)).as("q")).head().getSeq[Double](0)
     assert(got == want, s"sketch $got != percentile $want")
     // weighted + unweighted state at the same k merge freely (same
     // wire format): two copies of each value ≡ weight-2 inserts
     val raw = (1 to 5).map(i => ("a", i.toDouble)).toDF("g", "v")
       .groupBy(col("g"))
-      .agg(KllQuantiles.kllSketch(spark, col("v"), 64).as("sk"))
+      .agg(KllQuantiles.kllSketch(col("v"), 64).as("sk"))
     val merged = sk.select(col("sk")).union(raw.select(col("sk")))
-      .agg(KllQuantiles.kllMerge(spark, col("sk")).as("m"))
-      .select(KllQuantiles.kllValues(spark, col("m"), Seq(0.5, 1.0)).as("q"))
+      .agg(KllQuantiles.kllMerge(col("sk")).as("m"))
+      .select(KllQuantiles.kllValues(col("m"), Seq(0.5, 1.0)).as("q"))
       .head().getSeq[Double](0)
     assert(merged == Seq(3.0, 5.0), merged.toString) // 1,1,2,2,...,5,5
   }
 
   test("SQL surface type checks: int value column fails analysis, not executors") {
-    KllQuantiles.register(spark)
-    KllQuantiles.registerWeighted(spark)
+    SqlFunctions.register(spark)
     spark.range(5).selectExpr("id AS g", "CAST(id AS INT) AS iv",
       "CAST(id AS DOUBLE) AS dv", "id AS w").createOrReplaceTempView("kll_ty")
     val ex = intercept[Exception] {
@@ -315,7 +314,7 @@ class QuantileSketchSpec extends AnyFunSuite {
   }
 
   test("SQL registration: graft_kll_quantiles over groups, literal guards") {
-    KllQuantiles.register(spark)
+    SqlFunctions.register(spark)
     Seq(("a", 1.0), ("a", 2.0), ("a", 3.0), ("b", 5.0))
       .toDF("g", "v").createOrReplaceTempView("kll_in")
     val out = spark.sql(
