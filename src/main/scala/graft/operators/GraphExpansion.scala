@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.{ColumnMetadata, GraphNode, GraphRelation, TableMetadata}
+import graft.model.{GraphNode, GraphRelation, TableMetadata}
 
 /** The reference's core pipeline as Spark operators (SURVEY §2.A rows
   * A1/G1/G2): flat `information_schema`-shaped rows → nested

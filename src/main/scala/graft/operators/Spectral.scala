@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 
 /** Top principal component of an embedding column — the spectral
   * primitive behind PCA-whitening before ANN indexing, anisotropy

@@ -1545,9 +1545,6 @@ object TextDocs {
   // ASCII, so ord(char) == utf-8 byte.
   private val M = HashReplay.MSql
 
-  /** (z * c) mod 2^64 without overflowing 128-bit signed HUGEINT. */
-  private def mulmod(z: String, c: BigInt): String = HashReplay.mulmodSql(z, c)
-
   /** splitmix64 finalizer as chained CTEs over column `z` of `src`. */
   private def mixCtes(prefix: String, src: String, keys: String): String =
     HashReplay.mixCtesSql(prefix, src, keys)

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.functions.VectorFunctions
 import graft.operators.Similarity
 
 /** Embedding / similarity-search queries: declared Q18 plus ANN

@@ -53,7 +53,7 @@ object TwsRollingDistinct {
       (n, earliest)
     }
 
-    private def rearm(userId: Long, earliest: Option[Long]): Unit = {
+    private def rearm(earliest: Option[Long]): Unit = {
       getHandle.listTimers().foreach(getHandle.deleteTimer)
       earliest.foreach(ts => getHandle.registerTimer(ts + horizonMs))
     }
@@ -69,7 +69,7 @@ object TwsRollingDistinct {
         if (t > prev) lastSeen.updateValue(e.event_type, t)
       }
       val (n, earliest) = prune(timerValues.getCurrentWatermarkInMs())
-      rearm(userId, earliest)
+      rearm(earliest)
       if (n == 0) { lastSeen.clear(); Iterator.empty }
       else Iterator.single(DistinctCount(userId, maxTs, n))
     }
@@ -77,7 +77,7 @@ object TwsRollingDistinct {
     override def handleExpiredTimer(userId: Long, timerValues: TimerValues,
                                     expiredTimerInfo: ExpiredTimerInfo): Iterator[DistinctCount] = {
       val (n, earliest) = prune(timerValues.getCurrentWatermarkInMs())
-      rearm(userId, earliest)
+      rearm(earliest)
       if (n == 0) { lastSeen.clear(); Iterator.empty }
       else Iterator.single(DistinctCount(userId, expiredTimerInfo.getExpiryTimeInMs(), n))
     }

@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftTestSparkAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -14,15 +16,17 @@ import graft.jobs.MetadataJob
 import graft.queries.GraphQ
 import graft.sources.{CsvGraphStage, SqsPublisher}
 
-/** One `MetadataJob.launch` expands the catalog once, leaves no cached
-  * or checkpointed block behind, and reads its stage back with the
-  * header it wrote. */
+/** One `MetadataJob.launch` expands the catalog once, runs its two
+  * stage writes at the same time under the caller's job group, leaves no
+  * cached or checkpointed block or running job behind, and reads its
+  * stage back with the header it wrote. */
 class MetadataJobSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def conf(dir: String, relationDir: String, chunked: Boolean = true) = ScopedConf(
+  private def conf(dir: String, relationDir: String, chunked: Boolean = true,
+                   nodeDir: Option[String] = None) = ScopedConf(
     "extractor.csv.path" -> GraphQ.fixturePath,
-    "loader.csv.node_dir" -> s"$dir/nodes",
+    "loader.csv.node_dir" -> nodeDir.getOrElse(s"$dir/nodes"),
     "loader.csv.relation_dir" -> relationDir,
     "publisher.awssqs.queue_url" -> "q://test",
     "publisher.awssqs.chunked" -> chunked.toString)
@@ -31,36 +35,60 @@ class MetadataJobSpec extends AnyFunSuite {
   // expansion was shared and the stage read back without inference
   private val ParentLaunchJobs = 11
 
-  test("a launch fires at least 3 fewer jobs than before: expand once, no header inference") {
+  /** The job-start events `body` fires, `body`'s own listener-bus
+    * backlog drained before and after. */
+  private def jobStarts(body: => Unit): Seq[SparkListenerJobStart] = {
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger
+    val starts = new ConcurrentLinkedQueue[SparkListenerJobStart]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e): Unit
     }
+    GraftTestSparkAccess.waitListenerBus(sc)
+    sc.addSparkListener(listener)
+    try body
+    finally {
+      GraftTestSparkAccess.waitListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    starts.asScala.toSeq
+  }
+
+  test("a launch fires at least 3 fewer jobs than before: expand once, no header inference") {
     val counts = (1 to 2).map { _ =>
       val dir = Files.createTempDirectory("graft_launch_jobs").toString
       val t = new SqsPublisher.Recording
-      GraftTestSparkAccess.waitListenerBus(sc)
-      jobs.set(0)
-      sc.addSparkListener(listener)
-      try new MetadataJob(spark, conf(dir, s"$dir/relationships"), t).launch()
-      finally {
-        GraftTestSparkAccess.waitListenerBus(sc)
-        sc.removeSparkListener(listener)
-      }
+      val jobs = jobStarts(new MetadataJob(spark, conf(dir, s"$dir/relationships"), t).launch())
       assert(t.sent.nonEmpty)
-      jobs.get
+      jobs.size
     }
     info(s"jobs per launch: ${counts.mkString(", ")} (before: $ParentLaunchJobs)")
     assert(counts.forall(_ <= ParentLaunchJobs - 3), counts)
   }
 
-  /** Run `launch`, then check that no RDD it created is still persisted
-    * or holds a block (the expansion's `localCheckpoint` included). */
+  test("every job of a launch, either stage write's included, carries the caller's job group") {
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("graft_launch_group").toString
+    val t = new SqsPublisher.Recording
+    sc.setJobGroup("g", "metadata push")
+    val jobs =
+      try jobStarts(new MetadataJob(spark, conf(dir, s"$dir/relationships"), t).launch())
+      finally sc.clearJobGroup()
+    assert(t.sent.nonEmpty && jobs.nonEmpty)
+    val groups = jobs.map(e => Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+    assert(groups.forall(_ == "g"), groups)
+  }
+
+  /** Run `launch`, then check that none of its jobs is still running and
+    * no RDD it created is still persisted or holds a block (the
+    * expansion's `localCheckpoint` included). */
   private def assertReleased(launch: => Unit): Unit = {
     val sc = spark.sparkContext
     val before = sc.emptyRDD[Int].id
     launch
+    // a job still running has posted its start but not its end
+    GraftTestSparkAccess.waitListenerBus(sc)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty,
+      s"jobs running after the launch: ${sc.statusTracker.getActiveJobIds.toSeq}")
     assert(sc.getPersistentRDDs.keys.forall(_ <= before),
       s"persisted after the launch: ${sc.getPersistentRDDs.keys.filter(_ > before)}")
     eventually(timeout(10.seconds), interval(50.millis)) {
@@ -69,21 +97,50 @@ class MetadataJobSpec extends AnyFunSuite {
     }
   }
 
+  // also when the node write fails, and no job of the launch is left running
   test("no cache or checkpointed block outlives a launch, also when the relation write fails") {
     val dir = Files.createTempDirectory("graft_launch_release").toString
     assertReleased(new MetadataJob(spark, conf(dir, s"$dir/relationships"),
       new SqsPublisher.Recording).launch())
 
-    // a relation dir under a regular file cannot be created: the node
-    // write succeeds (and stores the cut), the relation write throws
+    // a dir under a regular file cannot be created: that write throws,
+    // the other one succeeds (and stores or reads the cut)
     val blocker = Files.writeString(Path.of(dir, "blocker"), "")
-    val t = new SqsPublisher.Recording
-    val job = new MetadataJob(spark, conf(dir, s"$blocker/relationships"), t)
-    assertReleased {
-      intercept[Exception](job.launch())
+    // (the failing write, its conf, the other write's dir)
+    val failing = Seq(
+      ("relation", conf(dir, s"$blocker/relationships", nodeDir = Some(s"$dir/nodes2")), "nodes2"),
+      ("node", conf(dir, s"$dir/relationships2", nodeDir = Some(s"$blocker/nodes")), "relationships2"))
+    for ((write, c, other) <- failing) {
+      val t = new SqsPublisher.Recording
+      val job = new MetadataJob(spark, c, t)
+      assertReleased {
+        intercept[Exception](job.launch())
+      }
+      assert(job.failed == 1 && job.succeeded == 0 && t.sent.isEmpty, s"$write write failing")
+      // the other write had committed before the launch returned
+      assert(Files.exists(Path.of(dir, other, "_SUCCESS")), s"$write write failing")
     }
-    assert(job.failed == 1 && t.sent.isEmpty)
-    assert(Files.isDirectory(Path.of(dir, "nodes")))
+  }
+
+  test("a node dir equal to, inside or around the relation dir fails the launch before any job") {
+    val dir = Files.createTempDirectory("graft_launch_overlap").toString
+    val overlapping = Seq(
+      s"$dir/stage" -> s"$dir/stage",
+      s"$dir/stage" -> s"$dir/stage/",
+      s"$dir/stage/nodes" -> s"$dir/stage",
+      s"$dir/stage" -> s"file:$dir/stage/x/../relations")
+    for ((nodeDir, relationDir) <- overlapping) {
+      val t = new SqsPublisher.Recording
+      val job = new MetadataJob(spark, conf(dir, relationDir, nodeDir = Some(nodeDir)), t)
+      val jobs = jobStarts {
+        val e = intercept[IllegalArgumentException](job.launch())
+        assert(e.getMessage.contains("loader.csv.node_dir") &&
+          e.getMessage.contains("loader.csv.relation_dir"), e.getMessage)
+      }
+      assert(jobs.isEmpty, s"$nodeDir / $relationDir: ${jobs.size} jobs")
+      assert(job.failed == 1 && job.succeeded == 0 && t.sent.isEmpty)
+      assert(!Files.exists(Path.of(dir, "stage")))
+    }
   }
 
   test("a staged dir whose header differs from the written one fails the read; nothing is published") {
