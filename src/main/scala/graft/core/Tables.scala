@@ -83,21 +83,6 @@ object Tables {
         }
     }
 
-  /** Scale-adaptive fan-out for a CPU-heavy narrow stage: repartition to
-    * the session's parallelism only when the frame's planned layout is
-    * narrower. A small or single-row-group parquet file plans as one
-    * scan task, so every per-row expression downstream (regex chains,
-    * merge loops, pair scoring) would serialize through one core; an
-    * already many-split source passes through untouched — no exchange
-    * is added where the scan is wide (guide §2.5, input-skew remedies).
-    * Inspecting the planned partition count is planning-time only (no
-    * job runs).
-    */
-  def spread(df: DataFrame): DataFrame = {
-    val dp = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < dp) df.repartition(dp) else df
-  }
-
   /** events.ts arrives in whatever physical form the data generator
     * chose — TIMESTAMP(NANOS) (surfaced as a nanosecond long under
     * spark.sql.legacy.parquet.nanosAsLong, set in [[Sessions]]) or a

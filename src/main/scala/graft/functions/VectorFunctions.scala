@@ -26,17 +26,4 @@ object VectorFunctions {
 
   /** Cosine similarity in double precision. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** Random-hyperplane signature (LSH for cosine): sign bits of dot
-    * products with `planes` deterministic pseudo-random hyperplanes,
-    * packed into a long. Used to bucket near-duplicate candidates so
-    * the pair join is per-bucket instead of all-pairs.
-    *
-    * Delegates to the native [[HyperplaneSignature]] expression — the
-    * earlier Column formulation built a dim × planes literal tree that
-    * broke whole-stage codegen past dim ≈ 500 and carried a weight-
-    * scaling bug ([-1, 3) instead of [-1, 1)) that collapsed buckets.
-    */
-  def hyperplaneSignature(vec: Column, planes: Int, seed: Long): Column =
-    HyperplaneSignature.signature(vec, planes, seed)
 }

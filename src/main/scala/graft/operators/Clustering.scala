@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Parallelism
 import graft.functions.{NearestCentroid, QuantizeVec}
 
 /** K-means (Lloyd) clustering over an embedding column — the substrate
@@ -64,12 +65,10 @@ object Clustering {
                    k: Int, iters: Int, scale: Int = 10000,
                    eager: Boolean = false): DataFrame = {
     require(k > 0 && iters > 0, "k and iters must be positive")
-    val spark = df.sparkSession
 
     // one narrow codegen'd pass; in eager mode persisted because every
     // iteration (assignment + update) re-reads it
-    val qbase = df
-      .repartition(spark.sparkContext.defaultParallelism)
+    val qbase = Parallelism.spread(df)
       .select(col(idCol).as("__id"),
         QuantizeVec.quantize(col(vecCol), scale).as("__qv"))
     val qdf = if (eager) qbase.persist(StorageLevel.MEMORY_AND_DISK) else qbase

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Parallelism
+
 /** Basket co-occurrence and triangle counting (SURVEY §2.B graph
   * family, alongside PageRank/connected components): market-basket pair
   * mining and the degree-oriented triangle count every graph-analytics
@@ -23,7 +25,7 @@ object CoOccurrence {
     * item table twice and re-materializes every basket as join output.
     */
   def basketPairs(df: DataFrame, basketCol: String, itemCol: String): DataFrame = {
-    // explicit-N pin on the basket key (guide §2.4/§2.5): the
+    // explicit-N pin on the basket key (Parallelism): the
     // post-shuffle stage (set merge + the quadratic pair expansion +
     // the pair partial agg) is CPU-heavy per byte, so AQE's byte-sized
     // coalescing serialized it to 4 tasks (measured 2.7-3.7 s CPU at
@@ -33,9 +35,7 @@ object CoOccurrence {
     // anyway (a basket's rows are scattered across input partitions).
     // Per-basket arrays are sorted after the merge, so pairs and
     // counts are byte-identical under any partitioning.
-    val baskets = df
-      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-        col(basketCol))
+    val baskets = Parallelism.keyed(df, col(basketCol))
       .groupBy(col(basketCol).as("b"))
       .agg(sort_array(collect_set(col(itemCol))).as("items"))
     // (items[i], items[j]) for i < j; sorted, so u < v canonically
@@ -112,17 +112,14 @@ object CoOccurrence {
     // orient low-(deg, id) -> high; rank carried as an orderable struct
     val ru = struct(col("du").as("d"), col("u").as("n"))
     val rv = struct(col("dv").as("d"), col("v").as("n"))
-    val o = withDeg.select(
+    // pin the wedge self-join's parallelism (Parallelism):
+    // the per-source wedge expansion is quadratic CPU over small-byte
+    // pairs; the source-keyed exchange is the join's own required
+    // partitioning, so nothing extra appears at scale.
+    val o = Parallelism.keyed(withDeg.select(
       when(ru < rv, col("u")).otherwise(col("v")).as("a"),
       when(ru < rv, rv).otherwise(ru).as("rb"))
-      .select(col("a"), col("rb.n").as("b"), col("rb"))
-      // pin the wedge self-join's parallelism (the adamicAdar/SetSimJoin
-      // discipline): the per-source wedge expansion is quadratic CPU over
-      // small-byte pairs and AQE's byte-sized coalescing under-parallelizes
-      // it; the explicit-N source-keyed exchange is the join's own
-      // required partitioning, so nothing extra appears at scale.
-      .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
-        col("a"))
+      .select(col("a"), col("rb.n").as("b"), col("rb")), col("a"))
     val wedges = o.select(col("a"), col("b").as("w1"), col("rb").as("r1"))
       .join(o.select(col("a"), col("b").as("w2"), col("rb").as("r2")), "a")
       .filter(col("r1") < col("r2"))
@@ -171,15 +168,13 @@ object CoOccurrence {
     val withDeg = byU.join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
     val ru = struct(col("du").as("d"), col("u").as("n"))
     val rv = struct(col("dv").as("d"), col("v").as("n"))
-    val o = withDeg.select(
+    // same wedge-parallelism pin as triangleStats: the cached frame
+    // would otherwise hand its byte-coalesced (near-single-task) layout
+    // to the quadratic wedge expansion
+    val o = Parallelism.keyed(withDeg.select(
       when(ru < rv, col("u")).otherwise(col("v")).as("a"),
       when(ru < rv, rv).otherwise(ru).as("rb"))
-      .select(col("a"), col("rb.n").as("b"), col("rb"))
-      // same wedge-parallelism pin as triangleStats: the cached frame
-      // would otherwise hand its byte-coalesced (near-single-task) layout
-      // to the quadratic wedge expansion
-      .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
-        col("a"))
+      .select(col("a"), col("rb.n").as("b"), col("rb")), col("a"))
       .persist(lvl)
     // keep the wedge CENTER (c0) that triangleStats drops: the closing
     // join proves {c0, w1, w2} is a triangle, and all three get credit

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Parallelism
+
 /** The curation pipeline COMPOSED as a library call — the operators a
   * training-data run chains every time (quality gate → keep-best
   * near-dup dedup → leakage-safe grouped split → sequence packing),
@@ -71,8 +73,7 @@ object Curation {
     // each at sf0.1, the whole cost of the funnel query). The first
     // eager pass populates the cache; callers release via
     // [[Stages.release]] (guide §5: cache only what is re-read).
-    val quality = docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    val quality = Parallelism.spread(docs)
       .filter(TextAnalysis.qualityScore(col(textCol)) >= minQuality)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pairs = Dedup.ngramJaccardPairs(quality, idCol, textCol,
@@ -130,8 +131,7 @@ object Curation {
             lit(0L)).as("tokens"))
         .select(lit(name).as("stage"), col("docs"), col("tokens"))
     val report =
-      stage("a_all",
-          docs.repartition(docs.sparkSession.sparkContext.defaultParallelism))
+      stage("a_all", Parallelism.spread(docs))
         .unionAll(stage("b_quality", stages.quality))
         .unionAll(stage("c_dedup", stages.deduped))
         .unionAll(stage("d_train", stages.train))

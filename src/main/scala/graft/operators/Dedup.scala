@@ -4,6 +4,7 @@ import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Parallelism
 import graft.functions.{ShingleHashes, SimHash64}
 
 /** Deduplication operators for the training-data pipeline (SURVEY §2.B
@@ -55,13 +56,11 @@ object Dedup {
     // join is keyed on the 64-bit shingle hash, not the string —
     // smaller shuffle, no interpreted HOFs (a hash collision merging
     // two distinct shingles is ~2^-64 per pair, far below float noise).
-    // Spread (scale-adaptive): parallelize the heavy narrow stage when
-    // the input plans narrower than the session — an already-wide input
-    // (e.g. Curation's repartitioned-and-cached quality frame) passes
-    // through with NO second exchange. Persist: the frame feeds
+    // Spread only a narrow input: Curation's already-spread, cached
+    // quality frame gets no second exchange. Persist: the frame feeds
     // doc-counts, hot-shingle detection AND both join branches (Spark
     // has no subplan sharing across self-joins).
-    val sh = graft.core.Tables.spread(docs)
+    val sh = Parallelism.spreadIfNarrow(docs)
       .select(col(idCol).as("id"),
         explode(ShingleHashes.shingleHashes(col(textCol), n)).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -130,8 +129,7 @@ object Dedup {
                    maxHamming: Int = 3): DataFrame = {
     // Heavy narrow transform: spread across cores even when the scan
     // has few input splits.
-    val sigs = docs
-      .repartition(spark.sparkContext.defaultParallelism)
+    val sigs = Parallelism.spread(docs)
       .select(col(idCol).as("id"), simhash(col(textCol)).as("sig"))
     val banded = sigs.select(col("id"), col("sig"),
       explode(array((0 until 4).map { b =>
@@ -249,8 +247,7 @@ object Dedup {
     * batches never rescan historical text. */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 16): DataFrame = {
-    val spark = docs.sparkSession
-    docs.repartition(spark.sparkContext.defaultParallelism)
+    Parallelism.spread(docs)
       .select(col(idCol).as("id"),
         ShingleHashes.shingleHashes(col(textCol)).as("hs"))
       .filter(size(col("hs")) > 0)
@@ -473,9 +470,7 @@ object Dedup {
     */
   def contaminationReport(docs: DataFrame, idCol: String, textCol: String,
                           splitCol: Column, n: Int = 3): DataFrame = {
-    val spark = docs.sparkSession
-    val sh = docs
-      .repartition(spark.sparkContext.defaultParallelism)
+    val sh = Parallelism.spread(docs)
       .select(col(idCol), splitCol.as("__split"),
         explode(ShingleHashes.shingleHashes(col(textCol), n)).as("__sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -553,8 +548,7 @@ object Dedup {
   def docChunks(docs: DataFrame, idCol: String, textCol: String,
                 width: Int = 8): DataFrame = {
     require(width > 0, "chunk width must be positive")
-    val spark = docs.sparkSession
-    docs.repartition(spark.sparkContext.defaultParallelism)
+    Parallelism.spread(docs)
       .select(col(idCol).as("id"),
         posexplode(graft.functions.ChunkStrings.chunkStrings(
           col(textCol), width)).as(Seq("ck", "chunk")))
@@ -569,8 +563,7 @@ object Dedup {
     */
   private def docChunkHashes(docs: DataFrame, idCol: String, textCol: String,
                              width: Int): DataFrame = {
-    val spark = docs.sparkSession
-    docs.repartition(spark.sparkContext.defaultParallelism)
+    Parallelism.spread(docs)
       .select(col(idCol).as("id"),
         posexplode(graft.functions.ChunkHashes.chunkHashes(
           col(textCol), width)).as(Seq("ck", "__h")))
@@ -720,9 +713,7 @@ object Dedup {
   def scrubDuplicateSpans(docs: DataFrame, idCol: String, textCol: String,
                           width: Int = 8, minDocs: Int = 2,
                           broadcastDupSet: Boolean = true): DataFrame = {
-    val spark = docs.sparkSession
-    val par = spark.sparkContext.defaultParallelism
-    val win = docs.repartition(par)
+    val win = Parallelism.spread(docs)
       .select(col(idCol).as("id"),
         posexplode(graft.functions.RollingHashes.rollingHashes(
           col(textCol), width)).as(Seq("pos", "__h")))
@@ -754,7 +745,7 @@ object Dedup {
     // tokens with positions (width-1 chunks ARE the tokens), flagged by
     // span coverage; spans are disjoint so the left join is 1:≤1 and
     // one aggregation yields text + kept/total counts
-    val toks = docs.repartition(par)
+    val toks = Parallelism.spread(docs)
       .select(col(idCol).as("id"),
         posexplode(graft.functions.ChunkStrings.chunkStrings(
           col(textCol), 1)).as(Seq("pos", "tok")))
@@ -891,8 +882,7 @@ object Dedup {
   def minhashPairsML(docs: DataFrame, idCol: String, textCol: String,
                      jaccardDistanceThreshold: Double,
                      numHashTables: Int = 8, seed: Long = 42L): DataFrame = {
-    val sh = docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    val sh = Parallelism.spread(docs)
       .withColumn("__sh", shingles(col(textCol)))
     val tf = new HashingTF().setInputCol("__sh").setOutputCol("__features")
       .setNumFeatures(1 << 18).setBinary(true)

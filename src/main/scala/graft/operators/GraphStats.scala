@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Parallelism
+
 /** Whole-graph summary statistics — the shape numbers a graph pipeline
   * reads before choosing algorithms and partitioning (is this graph
   * assortative like a citation network or disassortative like a
@@ -76,28 +78,24 @@ object GraphStats {
     // is the single pass the main job pays anyway (guide §5).
     sym.count()
     val deg = sym.groupBy(col("src").as("w")).agg(count(lit(1)).as("degw"))
-    val nbrs = sym.select(col("src").as("w"), col("dst").as("x"))
-      .join(deg.filter(col("degw") <= maxWedgeDegree), Seq("w"))
-      // pin the wedge join's parallelism: the per-center pair expansion
-      // is quadratic CPU over small-byte long pairs, and AQE (sizing by
-      // bytes) ran it in ONE task at sf0.1 (measured: a 1-task 2.2 s-CPU
-      // stage inside a 4 s query). The explicit-N center-keyed exchange
-      // IS the self-join's required partitioning, so at scale it
-      // replaces the join's own shuffle instead of adding one (the
-      // SetSimJoin discipline, guide §2.4/§2.5).
-      .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
-        col("w"))
-    val pairs = nbrs.select(col("w"), col("x").as("u"), col("degw"))
-      .join(nbrs.select(col("w"), col("x").as("v")), Seq("w"))
-      .filter(col("u") < col("v"))
-      // pin the wedge-count aggregation too: wedge pairs are near-unique
-      // (partial aggregation barely reduces them), so AQE's byte-sized
-      // coalescing ran the final hash agg over ~1M wedge rows in one
-      // task. The explicit-N pair-keyed exchange satisfies the agg's
-      // required distribution, so the agg runs complete, in parallel, at
-      // the same single-shuffle cost.
-      .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
-        col("u"), col("v"))
+    // pin the wedge join's parallelism (Parallelism): AQE
+    // ran the per-center pair expansion in ONE task at sf0.1 (measured:
+    // a 1-task 2.2 s-CPU stage inside a 4 s query). The center-keyed
+    // exchange IS the self-join's required partitioning, so at scale it
+    // replaces the join's own shuffle instead of adding one.
+    val nbrs = Parallelism.keyed(
+      sym.select(col("src").as("w"), col("dst").as("x"))
+        .join(deg.filter(col("degw") <= maxWedgeDegree), Seq("w")), col("w"))
+    // pin the wedge-count aggregation too: wedge pairs are near-unique
+    // (partial aggregation barely reduces them), so AQE's byte-sized
+    // coalescing ran the final hash agg over ~1M wedge rows in one
+    // task. The pair-keyed exchange satisfies the agg's required
+    // distribution, so the agg runs complete, in parallel, at the same
+    // single-shuffle cost.
+    val pairs = Parallelism.keyed(
+      nbrs.select(col("w"), col("x").as("u"), col("degw"))
+        .join(nbrs.select(col("w"), col("x").as("v")), Seq("w"))
+        .filter(col("u") < col("v")), col("u"), col("v"))
       .groupBy(col("u"), col("v"))
       .agg(count(lit(1)).as("common"),
         round(sum(lit(1.0) / log(col("degw").cast("double"))), 4).as("aa"))

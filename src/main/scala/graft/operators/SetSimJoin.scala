@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Parallelism
+
 /** Exact set-similarity join via PREFIX FILTERING (the AllPairs /
   * PPJoin family, Bayardo et al. WWW'07; also the blocking behind many
   * entity-resolution engines): all unordered pairs of sets whose
@@ -72,15 +74,11 @@ object SetSimJoin {
     // the prefixes. Plain join: AQE broadcasts the frequency side when
     // it is small, and at vocabulary scale a shuffle join is correct.
     val freq = s.groupBy(col("item")).agg(count(lit(1)).as("f"))
-    val sets = s.join(freq, Seq("item"))
-      // pin the set-building aggregation's parallelism: the per-group
-      // sort_array(collect_list) is CPU-heavy per byte, so AQE's
-      // size-based coalescing under-parallelizes it; the explicit-N
-      // id-keyed exchange IS the aggregation's required partitioning
-      // (N = shuffle.partitions), so no second shuffle appears at any
-      // scale — only the partition count stops being byte-derived
-      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-        col("id"))
+    // pin the set-building aggregation's parallelism (Parallelism): the
+    // per-group sort_array(collect_list) is CPU-heavy per byte; the
+    // id-keyed exchange IS the aggregation's required partitioning, so
+    // no second shuffle appears at any scale
+    val sets = Parallelism.keyed(s.join(freq, Seq("item")), col("id"))
       .groupBy(col("id"))
       .agg(sort_array(collect_list(struct(col("f"), col("item")))).as("fi"))
       .select(col("id"),
@@ -114,7 +112,7 @@ object SetSimJoin {
       ceil(lit(minJaccard) * col("n") - UlpSlack) + 1).cast("int")
     val prefixes = sets.select(col("id"), col("n"),
       explode(slice(col("items"), lit(1), plen)).as("item"))
-    val cand = prefixes.select(col("item"), col("id").as("id_a"), col("n").as("na"))
+    val pairs = prefixes.select(col("item"), col("id").as("id_a"), col("n").as("na"))
       .join(prefixes.select(col("item"), col("id").as("id_b"), col("n").as("nb")),
         Seq("item"))
       .filter(col("id_a") < col("id_b"))
@@ -123,13 +121,12 @@ object SetSimJoin {
       .filter(col("na") >= lit(minJaccard) * col("nb") - UlpSlack &&
         col("nb") >= lit(minJaccard) * col("na") - UlpSlack)
       .select(col("id_a"), col("id_b")).distinct()
-      // the exact verify below is the heavy per-row stage (an
-      // array_intersect over two full sets per candidate) and runs in
-      // THESE partitions when the set side broadcasts — spread it over
-      // the cores regardless of how far AQE coalesced the tiny
-      // (id_a, id_b) exchange (the Dedup repartition discipline;
-      // measured ~free on a many-split source, BASELINE.md §14)
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
+    // the exact verify below is the heavy per-row stage (an
+    // array_intersect over two full sets per candidate) and runs in
+    // THESE partitions when the set side broadcasts — spread it
+    // regardless of how far AQE coalesced the tiny (id_a, id_b)
+    // exchange (measured ~free on a many-split source, BASELINE.md §14)
+    val cand = Parallelism.spread(pairs)
     val out = cand
       .join(sets.select(col("id").as("id_a"), col("items").as("ia"),
         col("n").as("n_a")), Seq("id_a"))
@@ -211,13 +208,10 @@ object SetSimJoin {
     // coalesce to Long.Max and sort last (they cannot join)
     val freq = ix.groupBy(col("item")).agg(count(lit(1)).as("f")).persist(lvl)
     freq.count()
-    def toSets(side: DataFrame, who: String): DataFrame = side
-      .join(freq, Seq("item"), "left")
-      // the jaccardJoin parallelism pin: CPU-heavy per-group sort, so
-      // the explicit-N id-keyed exchange replaces (not adds to) the
-      // aggregation's own shuffle
-      .repartition(side.sparkSession.sessionState.conf.numShufflePartitions,
-        col("id"))
+    // the jaccardJoin parallelism pin: CPU-heavy per-group sort, so the
+    // id-keyed exchange replaces (not adds to) the aggregation's shuffle
+    def toSets(side: DataFrame, who: String): DataFrame =
+      Parallelism.keyed(side.join(freq, Seq("item"), "left"), col("id"))
       .groupBy(col("id"))
       .agg(sort_array(collect_list(struct(
         coalesce(col("f"), lit(Long.MaxValue)).as("f"), col("item")))).as("fi"))
@@ -249,14 +243,14 @@ object SetSimJoin {
     // index side: ALL items (a matching item sits anywhere in B)
     val indexX = iSets.select(col("id").as("id_b"), col("n").as("nb"),
       explode(col("items")).as("item"))
-    val cand = probeX.join(indexX, Seq("item"))
+    val pairs = probeX.join(indexX, Seq("item"))
       .filter(col("id_a") =!= col("id_b"))
       // |B| >= t|A| with the same ε guard at threshold boundaries
       .filter(col("nb") >= lit(minContainment) * col("na") - UlpSlack)
       .select(col("id_a"), col("id_b")).distinct()
-      // spread the exact verify (array_intersect per candidate) — the
-      // jaccardJoin rationale
-      .repartition(probe.sparkSession.sparkContext.defaultParallelism)
+    // spread the exact verify (array_intersect per candidate) — the
+    // jaccardJoin rationale
+    val cand = Parallelism.spread(pairs)
     val out = cand
       .join(pSets.select(col("id").as("id_a"), col("items").as("ia"),
         col("n").as("n_a")), Seq("id_a"))

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.CosineSimilarity
-import graft.functions.VectorFunctions._
+import graft.core.Parallelism
+import graft.functions.{CosineSimilarity, HyperplaneSignature}
 
 /** Similarity search over embedding columns (SURVEY §2.B X17):
   * brute-force cosine top-k as the exact baseline, plus two scale
@@ -128,7 +128,7 @@ object Similarity {
     // the small verified-pairs output is materialized so the cache is
     // released before returning (the dedup-family pattern)
     val sig = corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
-      hyperplaneSignature(col(vecCol), planes, seed).as("bucket"))
+      HyperplaneSignature.signature(col(vecCol), planes, seed).as("bucket"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val out = sig.select(col("bucket"), col("id").as("ida"), col("v").as("va"))
       .join(sig.select(col("bucket"), col("id").as("idb"), col("v").as("vb")), Seq("bucket"))
@@ -374,7 +374,6 @@ object Similarity {
   def hardNegatives(corpus: DataFrame, idCol: String, vecCol: String,
                     labelCol: String, k: Int,
                     maxBroadcast: Long = MaxBroadcastQueries): DataFrame = {
-    val spark = corpus.sparkSession
     val n = corpus.count()
     require(n <= maxBroadcast,
       s"corpus has $n rows > $maxBroadcast broadcast bound; " +
@@ -389,7 +388,7 @@ object Similarity {
     // pair. The shuffle moves only the ≤ maxBroadcast corpus rows, and
     // on a many-split source the repartition is measured ~free
     // (BASELINE.md §14).
-    corpus.repartition(spark.sparkContext.defaultParallelism)
+    Parallelism.spread(corpus)
       .join(q,
         col(idCol) =!= col("__qid") && col(labelCol) =!= col("__qlab"))
       .select(col("__qid"),
@@ -450,7 +449,7 @@ object Similarity {
     // and on a single-split corpus file each would otherwise run in ONE
     // task — the query side inside the join's BROADCAST build (measured
     // 4.8 s of 6.3 s total at sf0.1 in one single-task broadcast
-    // stage). Tables.spread is the identity on an already-wide source.
+    // stage).
     // candidate side: one narrow argmin pass — the ivfPqTopK cell
     // assignment (1-based, ties to the lowest cell id). The cell-keyed
     // repartition distributes the pair scoring: when the planner
@@ -459,7 +458,7 @@ object Similarity {
     // file would otherwise score every pair on one core — and when the
     // planner shuffle-joins at scale, the exchange is exactly the join's
     // own requirement, so it is reused, not an extra pass (guide §2.4).
-    val spreadCorpus = graft.core.Tables.spread(corpus)
+    val spreadCorpus = Parallelism.spreadIfNarrow(corpus)
     val cell = pqCodeCols(vecCol, Array(coarse)).head
     // Deterministic salt on the cell join key (ADVICE r18, guide §2.5):
     // the cell-keyed exchange bounds the pair-scoring reduce side to at
@@ -473,14 +472,13 @@ object Similarity {
     // shuffle partitions. S == 1 whenever |cells| already covers the
     // parallelism — the 100 TB sizing contract — and the plan is then
     // the plain cell-keyed join, exchange reused by ENSURE_REQUIREMENTS.
-    // The repartition carries an EXPLICIT partition count: the keyed
-    // no-N form is advisory to AQE, which sizes by bytes and coalesced
-    // this CPU-heavy-per-byte scoring stage to ONE task at sf0.1
-    // (measured: a 1-task 5.2 s-CPU stage inside a 7.7 s query).
-    val dp = spark.sparkContext.defaultParallelism
-    val nsp = spark.sessionState.conf.numShufflePartitions
-    val saltS = if (coarse.length >= dp) 1
-      else math.ceil(2.0 * dp / coarse.length).toInt
+    // The cell-keyed exchange is an explicit-N pin (Parallelism): the
+    // keyed no-N form is advisory to AQE, which coalesced this scoring
+    // stage to ONE task at sf0.1 (measured: a 1-task 5.2 s-CPU stage
+    // inside a 7.7 s query).
+    val par = Parallelism.width(spark)
+    val saltS = if (coarse.length >= par) 1
+      else math.ceil(2.0 * par / coarse.length).toInt
     val cand0 = spreadCorpus.select(col(idCol), col(vecCol), col(labelCol),
       cell.cast("long").as("__cell"))
     val q0 = spreadCorpus.select(col(idCol).as("__qid"), col(vecCol).as("__qvec"),
@@ -490,14 +488,14 @@ object Similarity {
     // mismatch predicates ride alongside so same-label candidates never
     // reach the aggregate
     val joined = if (saltS == 1) {
-      cand0.repartition(nsp, col("__cell"))
+      Parallelism.keyed(cand0, col("__cell"))
         .join(q0,
           col("__cell") === col("__qcell") &&
             col(idCol) =!= col("__qid") && col(labelCol) =!= col("__qlab"))
     } else {
-      val cand = cand0
-        .withColumn("__csalt", explode(array((0 until saltS).map(s => lit(s.toLong)): _*)))
-        .repartition(nsp, col("__cell"), col("__csalt"))
+      val cand = Parallelism.keyed(cand0
+        .withColumn("__csalt", explode(array((0 until saltS).map(s => lit(s.toLong)): _*))),
+        col("__cell"), col("__csalt"))
       val q = q0.withColumn("__qsalt",
         pmod(xxhash64(col("__qid")), lit(saltS.toLong)))
       cand.join(q,

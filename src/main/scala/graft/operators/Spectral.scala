@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 
+import graft.core.Parallelism
+
 /** Top principal component of an embedding column — the spectral
   * primitive behind PCA-whitening before ANN indexing, anisotropy
   * diagnostics of an embedding space, and "is there a dominant
@@ -262,7 +264,7 @@ object Spectral {
     // count (measured 1 task × ~1.7 s CPU at sf0.1 — guide §2.5);
     // per-row arithmetic and the (resid, id) TakeOrdered are
     // partition-independent, so the top-N is byte-identical
-    val withP = graft.core.Tables.spread(df.filter(col(vecCol).isNotNull))
+    val withP = Parallelism.spreadIfNarrow(df.filter(col(vecCol).isNotNull))
       .select(col(idCol) +: e.as("__e") +: projections.toIndexedSeq: _*)
     // residual r_i = e_i − Σ_c p_c·v_c_i (left-assoc per component),
     // resid = sqrt of the ascending square-sum fold

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Parallelism
 import graft.operators.Moments.{exact, finite, offGrid}
 
 /** Statistical analysis operators: per-group OLS regression, pairwise
@@ -150,18 +151,6 @@ object Stats {
     if (bounds.isEmpty) lit(0)
     else graft.functions.CellBucket.bucket(cellC, bounds)
 
-  /** Task count for the in-bucket window's explicit-N pin, derived
-    * from the histogram's own distinct-value total (scale-adaptive —
-    * guide §2.2): enough tasks for ~4k distinct values each, capped at
-    * the session's shuffle partitions. A tiny counts frame (e.g. 50
-    * distinct integer quantities) keeps 1 task instead of paying 32
-    * empty-task launches; a corpus-sized one gets the full width. */
-  private def cumPinParts(session: org.apache.spark.sql.SparkSession,
-                          ndTotal: Long): Int = {
-    val n = session.sessionState.conf.numShufflePartitions
-    math.max(1L, math.min(n.toLong, (ndTotal + 4095L) / 4096L)).toInt
-  }
-
   /** The PERSISTED per-distinct-value pair-counts frame `(v, na, nb)`
     * the two-sample family shares (collapses ties BEFORE any ordering,
     * so tie handling is exact and the cumsum input is |distinct
@@ -195,14 +184,12 @@ object Stats {
     val nA = hist.map(_._3).sum
     val nB = hist.map(_._4).sum
     val bounds = coarseBoundaries(hist.map(h => (h._1, h._2)), buckets)
-    // explicit-N pin on the window's own bucket clustering — replaces
-    // the advisory exchange AQE coalesces to a handful of tasks on this
-    // small-byte CPU-heavy frame (guide §2.4/§2.5); N derives from the
-    // fold's own distinct-value total (scale-adaptive, 1 task when the
-    // frame is tiny); per-bucket cumsums are byte-identical under any
-    // partitioning
-    val withB = counts.withColumn("b", bucketOfCell(bounds, cc))
-      .repartition(cumPinParts(session, hist.map(_._2).sum), col("b"))
+    // data-capped pin on the window's own bucket clustering
+    // (Parallelism.capped: the fold's distinct-value total sizes it, 1
+    // task when the frame is tiny); per-bucket cumsums are
+    // byte-identical under any partitioning
+    val withB = Parallelism.capped(
+      counts.withColumn("b", bucketOfCell(bounds, cc)), hist.map(_._2).sum, col("b"))
     val inBucket = Window.partitionBy(col("b")).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = withB
@@ -334,9 +321,9 @@ object Stats {
     // boundaries balanced by DISTINCT-value count (the in-bucket window
     // iterates distinct values); offsets folded from the SAME rows
     val bounds = coarseBoundaries(hist.map(h => (h._1, h._2)), buckets)
-    // explicit-N pin on the window's bucket clustering (see [[pairCdf]])
-    val withB = counts.withColumn("b", bucketOfCell(bounds, cc))
-      .repartition(cumPinParts(session, hist.map(_._2).sum), col("b"))
+    // data-capped pin on the window's bucket clustering (see [[pairCdf]])
+    val withB = Parallelism.capped(
+      counts.withColumn("b", bucketOfCell(bounds, cc)), hist.map(_._2).sum, col("b"))
     val inBucket = Window.partitionBy(col("b")).orderBy(col("v"))
     val local = withB.withColumn("lc", sum(col("c")).over(inBucket))
     val perBucket = hist.groupBy(h => bounds.count(_ <= h._1))
@@ -469,14 +456,12 @@ object Stats {
     val marginal = rows.groupBy(_._2).view.mapValues(_.map(_._3).sum)
       .toArray.sortBy(_._1)
     val bounds = coarseBoundaries(marginal, buckets)
-    // explicit-N pin on the window's own (g, b) clustering — same
-    // rationale as [[globalCum]]: replaces the advisory exchange AQE
-    // coalesces to a handful of tasks, parallelizing the in-bucket
-    // cumsum and the rank probe that rides it (guide §2.4/§2.5); N
-    // derives from the fold's distinct-value total (scale-adaptive)
-    val withB = counts.withColumn("b", bucketOfCell(bounds, cc))
-      .repartition(cumPinParts(session, rows.map(_._3).sum),
-        col("g"), col("b"))
+    // data-capped pin on the window's own (g, b) clustering — same
+    // rationale as [[globalCum]], and it parallelizes the rank probe
+    // that rides the in-bucket cumsum too
+    val withB = Parallelism.capped(
+      counts.withColumn("b", bucketOfCell(bounds, cc)), rows.map(_._3).sum,
+      col("g"), col("b"))
     val inBucket = Window.partitionBy(col("g"), col("b")).orderBy(col("v"))
     val local = withB.withColumn("lc", sum(col("c")).over(inBucket))
     val byGroup = rows.groupBy(_._1)
@@ -2167,7 +2152,7 @@ object Stats {
     // project to the consumed columns first so the exchange carries
     // only (metric, covariates, arm flag). Decimal sums and counts are
     // partition-order-independent, so the moments are byte-identical.
-    val pre = graft.core.Tables.spread(df
+    val pre = Parallelism.spreadIfNarrow(df
       .filter(xs.foldLeft(finite(y))((acc, x) => acc && finite(x)))
       .select((metricCol +: covariateCols).distinct.map(col) :+
         when(sampleACond, 1L).otherwise(0L).as("__ia"): _*))
@@ -2523,14 +2508,13 @@ object Stats {
   private[graft] def uniqueKeyedFanout(base: DataFrame, op: String): DataFrame = {
     val others = base.columns.filter(_ != "__k").toSeq
     val aggs = count(lit(1)).as("__c") +: others.map(c => min(col(c)).as(c))
-    // EXPLICIT hash repartition by key, then the aggregation runs
-    // partition-local on top of it (HashPartitioning(__k) satisfies the
+    // keyed pin (Parallelism), then the aggregation runs partition-local
+    // on top of it (HashPartitioning(__k) satisfies the
     // agg's distribution, so Catalyst adds no second exchange). A bare
     // groupBy's own exchange is AQE-coalescible — the narrow keyed rows
     // are a few MB, AQE folds them to ONE partition, and the (B+1)x
     // explode downstream runs single-task (measured 4x wall on the
-    // sf0.1 sweep). An explicit repartition pins the fan-out width.
-    val par = base.sparkSession.sparkContext.defaultParallelism
+    // sf0.1 sweep).
     // NULL __k never reaches the weights: the callers filter NULL keys,
     // but the long CAST can itself produce NULL (non-ANSI sessions; a
     // non-numeric string key), and a NULL key would sail past the
@@ -2545,7 +2529,7 @@ object Stats {
           "weight vector and its row silently vanishes from every " +
           "resample. Supply a key that casts cleanly to long.")))
         .otherwise(col(others.head)))
-    val keyed = nullGuarded.repartition(par, col("__k"))
+    val keyed = Parallelism.keyed(nullGuarded, col("__k"))
       .groupBy(col("__k")).agg(aggs.head, aggs.tail: _*)
     val guard = when(col("__c") > 1, raise_error(concat(
       lit(s"$op: the key column must uniquely identify rows (after the " +
@@ -3789,9 +3773,8 @@ object Stats {
       s"winsorizedStatsSketch: bad bounds [$lo, $hi]")
     // spread the two per-row passes (sketch updates, then the clipped
     // decimal sums): both otherwise run at the scan's task count, and a
-    // single-row-group source serializes them through one core;
-    // Tables.spread no-ops on a many-split corpus (guide §2.5)
-    val base = graft.core.Tables.spread(
+    // single-row-group source serializes them through one core
+    val base = Parallelism.spreadIfNarrow(
       df.filter(col(valCol).isNotNull && col(groupCol).isNotNull)
         .select(col(groupCol).cast("string").as("g"),
           col(valCol).cast("double").as("v")))

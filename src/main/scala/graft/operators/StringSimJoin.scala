@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.core.Parallelism
+
 /** String-similarity self-join under edit distance (SURVEY §2.B dedup
   * family sibling): find all pairs within Levenshtein distance 1 via
   * deletion-neighborhood blocking (the SymSpell scheme), then verify
@@ -37,9 +39,9 @@ object StringSimJoin {
     // serialize every candidate verification through one core. Shuffles
     // only (id, s) rows; measured ~free on a many-split source
     // (BASELINE.md §14 — the Dedup discipline).
-    val base = df.select(col(idCol).as("id"), col(strCol).as("s"))
-      .filter(length(col("s")) >= 1)
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
+    val base = Parallelism.spread(
+      df.select(col(idCol).as("id"), col(strCol).as("s"))
+        .filter(length(col("s")) >= 1))
     // keys: the string itself + every single-character deletion,
     // deduped per string (repeated chars give identical deletions),
     // then HASHED to 64 bits — the join shuffles longs instead of

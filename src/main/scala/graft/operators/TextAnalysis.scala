@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Parallelism
 import graft.functions.Fnv1a64
 
 /** Text-analysis operators for the training-data pipeline (mandated
@@ -175,7 +176,7 @@ object TextAnalysis {
     require(numMerges >= 1 && numMerges <= 65536,
       s"bpeTrain: numMerges must be in [1, 65536], got $numMerges")
     require(maxWords >= 1, s"bpeTrain: maxWords must be positive")
-    val wf = graft.core.Tables.spread(docs)
+    val wf = Parallelism.spreadIfNarrow(docs)
       .select(explode(bpeTokens(
         translate(col(textCol), MergeL + MergeR, ""))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
@@ -436,8 +437,7 @@ object TextAnalysis {
     */
   def ragChunks(docs: DataFrame, idCol: String, textCol: String,
                 width: Int, stride: Int): DataFrame = {
-    val spark = docs.sparkSession
-    docs.repartition(spark.sparkContext.defaultParallelism)
+    Parallelism.spread(docs)
       .select(col(idCol),
         posexplode(graft.functions.OverlapChunkStrings.overlapChunks(
           col(textCol), width, stride)).as(Seq("ck", "chunk")))
@@ -562,7 +562,7 @@ object TextAnalysis {
     // count (measured 2 tasks through the whole x_dsir_select pipeline;
     // guide §2.5). The produced multisets and every count-based
     // consumer are partition-independent.
-    val src = graft.core.Tables.spread(docs)
+    val src = Parallelism.spreadIfNarrow(docs)
     val toks0 = src
       .select(col(idCol).as("__id"),
         posexplode(arr).as(Seq("__pos", "__w")))

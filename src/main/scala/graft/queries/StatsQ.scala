@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Scratch, Tables}
+import graft.core.{Parallelism, Scratch, Tables}
 import graft.operators.{EventAnalytics, GraphTraversal, Stats, StringSimJoin}
 
 /** Statistical-modeling and graph-traversal coverage queries (round 7):
@@ -411,7 +411,7 @@ object StatsQ {
       requireExactSketchRegime(
         t(s, dir, "orders").filter(col("o_totalprice").isNotNull),
         65536, "x_sketch_rollup", col("o_orderpriority"))
-      t(s, dir, "orders")
+      val sketches = t(s, dir, "orders")
         .filter(col("o_totalprice").isNotNull && col("o_orderdate").isNotNull &&
           col("o_orderpriority").isNotNull)
         .groupBy(col("o_orderpriority"),
@@ -419,15 +419,15 @@ object StatsQ {
         .agg(graft.functions.KllQuantiles
             .kllSketch(col("o_totalprice"), 65536).as("sk"),
           count(lit(1)).as("cnt"))
-        // co-locate each month's (few) sketch rows in one task before
-        // the partitioned write: without this every shuffle partition
-        // holding a month's rows opens its own file in that month's
-        // dir (~4 tiny files per partition at local[32]) — one file
-        // per month is the shape a daily-artifact store wants. The N is
-        // EXPLICIT: the keyed no-N form is advisory and AQE coalesced
-        // the whole write to one task (measured 1-task ~2 s stage); with
-        // N, each task writes its own months — still one file per month
-        .repartition(s.sessionState.conf.numShufflePartitions, col("mon"))
+      // co-locate each month's (few) sketch rows in one task before
+      // the partitioned write: without this every shuffle partition
+      // holding a month's rows opens its own file in that month's
+      // dir (~4 tiny files per partition at local[32]) — one file
+      // per month is the shape a daily-artifact store wants. The N is
+      // EXPLICIT: the keyed no-N form is advisory and AQE coalesced
+      // the whole write to one task (measured 1-task ~2 s stage); with
+      // N, each task writes its own months — still one file per month
+      Parallelism.keyed(sketches, col("mon"))
         .write.mode("overwrite").partitionBy("mon")
         .parquet(store.getAbsolutePath)
       s.read.parquet(store.getAbsolutePath)

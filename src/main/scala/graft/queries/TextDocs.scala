@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Scratch, Tables}
+import graft.core.{Parallelism, Scratch, Tables}
 import graft.operators.{Dedup, Hll, Multimodal, Retrieval, Sampling, Sketches, TextAnalysis}
 
 /** Declared document/text queries Q15–Q17 plus the mandated
@@ -490,8 +490,8 @@ object TextDocs {
       val tx = translate(col("text"), "\u0001\u0002", "")
       // spread the merge chain: the regex pre-split + one replace pass
       // per rank is CPU-heavy per row and otherwise rides the scan's
-      // task count (Tables.spread no-ops on a many-split source)
-      Tables.spread(docs(s, dir))
+      // task count
+      Parallelism.spreadIfNarrow(docs(s, dir))
         .select(col("doc_id"), TextAnalysis.bpeTokens(tx).as("pre"))
         .select(col("doc_id"), col("pre"),
           flatten(transform(col("pre"),
@@ -517,7 +517,7 @@ object TextDocs {
       // invariant — see bpeVocabTable).
       val tx = translate(col("text"), "\u0001\u0002", "")
       // spread the classic merge loop (the x_bpe_merges rationale)
-      Tables.spread(docs(s, dir))
+      Parallelism.spreadIfNarrow(docs(s, dir))
         .select(col("doc_id"), TextAnalysis.bpeTokens(tx).as("pre"))
         .select(col("doc_id"), col("pre"),
           graft.functions.BpeEncodeVocab.encode(col("pre"),
@@ -557,7 +557,7 @@ object TextDocs {
       val table = TextAnalysis.bpeTrain(docs(s, dir), "text", bpeTrainMerges)
       val tx = translate(col("text"), "\u0001\u0002", "")
       // spread the classic merge loop (the x_bpe_merges rationale)
-      Tables.spread(docs(s, dir))
+      Parallelism.spreadIfNarrow(docs(s, dir))
         .select(col("doc_id"), TextAnalysis.bpeTokens(tx).as("pre"))
         .select(col("doc_id"), col("pre"),
           graft.functions.BpeEncodeVocab.encode(col("pre"), table).as("toks"))
@@ -581,7 +581,7 @@ object TextDocs {
       val vocab = TextAnalysis.bpeVocabIds(d, "text", table)
       val ids = TextAnalysis.bpeEncodeIds(col("text"), table, vocab)
       // spread the encode (the x_bpe_merges rationale)
-      Tables.spread(d).select(col("doc_id"), ids.as("ids"))
+      Parallelism.spreadIfNarrow(d).select(col("doc_id"), ids.as("ids"))
         .select(col("doc_id"),
           size(col("ids")).as("n_tokens"),
           aggregate(col("ids"), lit(0L), (acc, x) => acc + x).as("sum_ids"),
@@ -744,8 +744,7 @@ object TextDocs {
       // (whitespace runs, zero-token drop) so the oracle semantics
       // match the hash pipeline's, and the per-row shingling stays out
       // of interpreted HOFs; repartition spreads the single-file scan.
-      docs(s, dir)
-        .repartition(s.sparkContext.defaultParallelism)
+      Parallelism.spread(docs(s, dir))
         .select(col("doc_id"),
           explode(graft.functions.ShingleStrings.shingleStrings(
             col("text"))).as("shingle"))
@@ -894,7 +893,7 @@ object TextDocs {
       // count column is one narrow codegen pass; packing is unchanged.
       Sampling.packBins(
         // spread the exact-count pass (the x_bpe_merges rationale)
-        Tables.spread(docs(s, dir)).select(col("doc_id"),
+        Parallelism.spreadIfNarrow(docs(s, dir)).select(col("doc_id"),
           size(TextAnalysis.bpeEncode(col("text"), bpeMergeTable))
             .cast("long").as("toks")),
         "doc_id", "toks", budget = 512)
@@ -983,8 +982,7 @@ object TextDocs {
       // persisted and released after the small top-k materializes.
       // Counts are exact integers; round(4) absorbs cross-engine ln()
       // ulp noise (x_tfidf proved the pattern).
-      val arr = docs(s, dir)
-        .repartition(s.sparkContext.defaultParallelism)
+      val arr = Parallelism.spread(docs(s, dir))
         .select(col("doc_id"),
           filter(split(col("text"), "\\s+"), t => length(t) > 0).as("w"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1092,8 +1090,7 @@ object TextDocs {
       // instead of token text (round-4 verdict item 3). The oracle
       // replays the identical hash (HashReplay.fnvFoldSql), so even a
       // collision would merge the same words on both sides.
-      val toks = docs(s, dir)
-        .repartition(s.sparkContext.defaultParallelism)
+      val toks = Parallelism.spread(docs(s, dir))
         .select(col("source"), explode(split(col("text"), "\\s+")).as("word"))
         .filter(length(col("word")) > 0)
         .select(col("source"),
@@ -1172,13 +1169,13 @@ object TextDocs {
       // the file-count shrink itself is asserted in ScalaTest.
       val d = docs(s, dir)
       val dirF = scratchDir("zones", dir)
-      d.withColumn("bucket", floor(col("doc_id") / 64).cast("int"))
-        // cluster by the partition column BEFORE the write (guide §6):
-        // the single-split source otherwise writes every bucket
-        // directory from one task (measured a 1-task ~1 s write stage);
-        // the bucket-keyed exchange parallelizes the write and keeps
-        // the one-file-per-bucket layout the zone-map stats are built on
-        .repartition(s.sessionState.conf.numShufflePartitions, col("bucket"))
+      // cluster by the partition column BEFORE the write (guide §6):
+      // the single-split source otherwise writes every bucket
+      // directory from one task (measured a 1-task ~1 s write stage);
+      // the bucket-keyed exchange parallelizes the write and keeps
+      // the one-file-per-bucket layout the zone-map stats are built on
+      Parallelism.keyed(d.withColumn("bucket", floor(col("doc_id") / 64).cast("int")),
+          col("bucket"))
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(dirF.getAbsolutePath)
       val clustered = s.read.parquet(dirF.getAbsolutePath)

@@ -225,7 +225,7 @@ class CodegenGuardSpec extends AnyFunSuite {
         UnicodeNormalize.nfc(col("text")).as("a6")).collect()
       df.select(
         CosineSimilarity.cosine(col("vec"), col("vec")).as("b1"),
-        VectorFunctions.hyperplaneSignature(col("vec"), 4, 42L).as("b2"),
+        HyperplaneSignature.signature(col("vec"), 4, 42L).as("b2"),
         RandomProjection.project(col("vec"), 4, 7L).as("b3"),
         QuantStats.stats(col("vec")).as("b4"),
         QuantizeVec.quantize(col("vec"), 1000).as("b5"),
@@ -287,7 +287,7 @@ class CodegenGuardSpec extends AnyFunSuite {
         OverlapChunkStrings.overlapChunks(col("text"), 64, 16).as("a7"),
         RollingHashes.rollingHashes(col("text"), 12).as("a8")).collect()
       df.select(
-        VectorFunctions.hyperplaneSignature(col("vec"), 32, 99L).as("b1"),
+        HyperplaneSignature.signature(col("vec"), 32, 99L).as("b1"),
         RandomProjection.project(col("vec"), 16, 99L).as("b2"),
         QuantizeVec.quantize(col("vec"), 65535).as("b3"),
         HllRegister.registerCoords(col("id"), 14).as("b4"),

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.types.UTF8String
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
 import graft.functions.{ChunkHashes, ChunkStrings, CosineSimilarity, Fnv1a64, MinHashSignature, ShingleHashes, SimHash64}

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{Fnv1a64, VectorFunctions}
+import graft.functions.{Fnv1a64, HyperplaneSignature, VectorFunctions}
 import graft.operators.{AsOfJoin, Dedup, Sampling, TextAnalysis}
 
 class OperatorsSpec extends AnyFunSuite {
@@ -271,7 +271,7 @@ class OperatorsSpec extends AnyFunSuite {
       (3L, Array.fill(8)(-1.0f))
     ).toDF("id", "v")
     val sig = df.select($"id",
-      VectorFunctions.hyperplaneSignature($"v", planes = 12, seed = 42L).as("s"))
+      HyperplaneSignature.signature($"v", planes = 12, seed = 42L).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sig(1L) == sig(2L))
     // -v flips the sign of every projection → every one of the 12 bits
@@ -281,13 +281,13 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("random projection matches the weight-table fold and the signature's signs") {
-    import graft.functions.{HyperplaneSignature, RandomProjection}
+    import graft.functions.RandomProjection
     val rnd = new scala.util.Random(11)
     val vecs = Seq.tabulate(8)(i => (i.toLong, Array.fill(16)(rnd.nextFloat() * 2f - 1f)))
     val df = vecs.toDF("id", "v")
     val got = df.select($"id",
       RandomProjection.project($"v", planes = 12, seed = 42L).as("p"),
-      VectorFunctions.hyperplaneSignature($"v", planes = 12, seed = 42L).as("s"))
+      HyperplaneSignature.signature($"v", planes = 12, seed = 42L).as("s"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1), r.getLong(2))).toList
     got.foreach { case (id, proj, sig) =>
       assert(proj.length == 12)
@@ -314,7 +314,7 @@ class OperatorsSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val vecs = Seq.tabulate(64)(i => (i.toLong, Array.fill(16)(rnd.nextFloat() * 2f - 1f)))
     val sigs = vecs.toDF("id", "v")
-      .select(VectorFunctions.hyperplaneSignature($"v", planes = 12, seed = 42L))
+      .select(HyperplaneSignature.signature($"v", planes = 12, seed = 42L))
       .collect().map(_.getLong(0))
     assert(sigs.distinct.length >= 32, s"only ${sigs.distinct.length} distinct buckets")
   }
@@ -328,7 +328,7 @@ class OperatorsSpec extends AnyFunSuite {
       .toDF("id", "v")
       .repartition(2) // keep the projection out of ConvertToLocalRelation
     val q = wide.select($"id",
-      VectorFunctions.hyperplaneSignature($"v", planes = 24, seed = 1L).as("s"))
+      HyperplaneSignature.signature($"v", planes = 24, seed = 1L).as("s"))
     val out = q.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // inspect the final (post-AQE) plan: the signature must sit inside a
     // whole-stage-codegen span, not an interpreted fallback
@@ -342,7 +342,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(out.size == 8 && out.values.toSet.size > 1)
     // deterministic across plans/runs
     val again = wide.repartition(4).select($"id",
-      VectorFunctions.hyperplaneSignature($"v", planes = 24, seed = 1L).as("s"))
+      HyperplaneSignature.signature($"v", planes = 24, seed = 1L).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(again == out)
   }
@@ -4626,7 +4626,6 @@ class OperatorsSpec extends AnyFunSuite {
     val got = Hits.scores(e, "s", "d", iters = 3)
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
     // round 1: a = (v1: 2/2=1, v2: 1/2); h = (u1: 1.5/1.5=1, u2: 1/1.5)
-    val a1v2 = 1.0 / 2
     val h1u2 = 1.0 / 1.5
     // round 2
     val a2v1raw = 1.0 + h1u2; val a2v2 = 1.0 / a2v1raw

@@ -239,7 +239,7 @@ class QuantileSketchSpec extends AnyFunSuite {
   }
 
   test("KllValues reads an EMPTY sketch (all-NULL group) as NULL, not an index error") {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     val df = Seq(("a", Some(1.0)), ("b", None), ("b", None)).toDF("g", "v")
     val out = df.groupBy(col("g"))
       .agg(KllQuantiles.kllSketch(col("v"), 64).as("sk"))

@@ -33,7 +33,6 @@ class SqsPublisherSpec extends AnyFunSuite {
     val big = Seq.fill(3000)("x" * 100).zipWithIndex
       .map { case (s, i) => (s"k$i", "Label", s) }
       .toDF("KEY", "LABEL", "name")
-    val rels = spark.emptyDataFrame
     val t = new SqsPublisher.Recording
     val e = intercept[SqsPublisher.MessageTooLarge] {
       SqsPublisher.publishParity(big, big.limit(0), t, "q://x")
