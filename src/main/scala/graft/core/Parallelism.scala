@@ -13,13 +13,15 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * CPU-heavy pins the task count here instead of leaving it to AQE
   * (guide §2.4/§2.5).
   *
-  * Every pin takes its width from [[width]], N = max(cores,
-  * `spark.sql.shuffle.partitions`): the core count keeps a local
-  * session's cores busy, and a cluster session whose shuffle partitions
-  * are sized to the data (see [[Sessions]]) sizes every pinned stage
-  * with them, so a corpus-sized frame is never held to the core count.
-  * An operator that both pins and sizes by the width (a salt, a fan-out)
-  * reads it here too, so the two agree by construction.
+  * Every pin takes its width from [[width]], N = the session's core
+  * count (`defaultParallelism`), so an operator that both pins and
+  * sizes by the width (a salt, a fan-out) agrees with its own pins.
+  * N does not follow `spark.sql.shuffle.partitions` above the cores:
+  * on 4 cores with 32 shuffle partitions at sf0.1, N = 32 made
+  * `CorpusCleanJob.clean` ~40% and x_hard_negatives_ivf ~22% slower
+  * (more tiny tasks per pinned stage). Holding the keyed pins to the
+  * cores there cost x_setsim_join ~20% and saved 7-24% on seven other
+  * keyed queries (3 pairs of runs).
   *
   * The pin shapes:
   *  - [[spread]]: round-robin to N, before a heavy narrow stage;
@@ -36,9 +38,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 private[graft] object Parallelism {
 
   /** N, the task count of every pinned stage of `spark`. */
-  def width(spark: SparkSession): Int =
-    math.max(spark.sparkContext.defaultParallelism,
-      spark.sessionState.conf.numShufflePartitions)
+  def width(spark: SparkSession): Int = spark.sparkContext.defaultParallelism
 
   /** Round-robin repartition of `df` to N. */
   def spread(df: DataFrame): DataFrame = df.repartition(width(df.sparkSession))

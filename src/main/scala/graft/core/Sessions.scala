@@ -11,9 +11,9 @@ import org.apache.spark.sql.SparkSession
   * instead of the 200 default. On a real cluster the same builder is
   * used with `master` unset (spark-submit provides it) and
   * `spark.sql.shuffle.partitions` sized to ~2-3x total cores; AQE
-  * coalesces down at runtime either way. That setting also sizes every
-  * pinned CPU-heavy stage: [[Parallelism]] pins them to max(cores,
-  * shuffle partitions) tasks, which AQE does not coalesce.
+  * coalesces down at runtime either way. It does not size the pinned
+  * CPU-heavy stages: [[Parallelism]] pins those to the core count,
+  * which AQE does not coalesce.
   */
 object Sessions {
 

@@ -469,7 +469,7 @@ object Similarity {
     // r18 attempt salted the other way and measured worse) at the cost
     // of replicating the n-row candidate side ×S; the 2× headroom keeps
     // hash-collision occupancy near-full with |cells|·S keys over the
-    // shuffle partitions. S == 1 whenever |cells| already covers the
+    // N pinned partitions. S == 1 whenever |cells| already covers the
     // parallelism — the 100 TB sizing contract — and the plan is then
     // the plain cell-keyed join, exchange reused by ENSURE_REQUIREMENTS.
     // The cell-keyed exchange is an explicit-N pin (Parallelism): the

@@ -17,11 +17,11 @@ import graft.core.Parallelism
 import graft.operators.{Dedup, Stats}
 
 /** One partition-count policy: every explicit pin in `src/main` takes
-  * its width from [[Parallelism]], N = max(cores, shuffle partitions).
-  * A source guard keeps the policy in one file; planning checks build
-  * the pinned operators on the shared `local[4]` session with shuffle
-  * partitions raised to 64 (N = 64) and lowered to 2 (N = 4, the
-  * cores) and read the partition count at each pin. */
+  * its width from [[Parallelism]], N = the core count. A source guard
+  * keeps the policy in one file; planning checks build the pinned
+  * operators on the shared `local[4]` session with shuffle partitions
+  * raised to 64 and lowered to 2 and read the partition count at each
+  * pin: N = 4 at both. */
 class ParallelismSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -83,12 +83,12 @@ class ParallelismSpec extends AnyFunSuite {
       if (i % 4 == 0) "test" else "train")
   }.toDF("id", "text", "split").coalesce(1)
 
-  test("the width is max(cores, shuffle partitions) and every pin shape plans it") {
+  test("the width is the core count at any shuffle-partition setting and every pin shape plans it") {
     val df = corpus
     val shapes: Seq[DataFrame => DataFrame] = Seq(Parallelism.spread,
       Parallelism.spreadIfNarrow, Parallelism.keyed(_, col("id")))
     assert(spark.sparkContext.defaultParallelism == 4)
-    assert(shapes.flatMap(s => pinsAt(64)(s(df))) == Seq(64, 64, 64))
+    assert(shapes.flatMap(s => pinsAt(64)(s(df))) == Seq(4, 4, 4))
     assert(shapes.flatMap(s => pinsAt(2)(s(df))) == Seq(4, 4, 4))
     // already as wide as N: the conditional spread adds no exchange
     assert(pinsAt(2) {
@@ -97,7 +97,7 @@ class ParallelismSpec extends AnyFunSuite {
       wide
     }.distinct == Seq(4))
     // the data-derived cap: min(N, ⌈nd/4096⌉), at least 1
-    for ((nd, at64, at2) <- Seq((0L, 1, 1), (10L, 1, 1), (20000L, 5, 4), (1L << 30, 64, 4)))
+    for ((nd, at64, at2) <- Seq((0L, 1, 1), (10L, 1, 1), (10000L, 3, 3), (1L << 30, 4, 4)))
       assert(pinsAt(64)(Parallelism.capped(df, nd, col("id"))) == Seq(at64) &&
         pinsAt(2)(Parallelism.capped(df, nd, col("id"))) == Seq(at2), s"nd = $nd")
   }
@@ -116,20 +116,20 @@ class ParallelismSpec extends AnyFunSuite {
       "x_winsorize_sketch", "x_zone_scan")
     val builds = queries.map(q => q -> (() => SparkEntry.queries(q)(spark, sfDir))) :+
       ("Dedup.minhashPairsML" -> (() => Dedup.minhashPairsML(corpus, "id", "text", 0.6)))
-    assertWidths(builds, Map(64 -> 64, 2 -> 4))
+    assertWidths(builds, Map(64 -> 4, 2 -> 4))
   }
 
   test("the exact-CDF family's pins are capped by the distinct-value total") {
-    // 20,000 distinct values in two groups: ⌈20000/4096⌉ = 5 tasks, so
-    // N = 64 keeps 5 and N = 4 caps them at 4
-    val values = spark.range(20000).select((col("id") % 2).as("g"),
+    // 10,000 distinct values in two groups: ⌈10000/4096⌉ = 3 tasks,
+    // fewer than N = 4, at either shuffle-partition setting
+    val values = spark.range(10000).select((col("id") % 2).as("g"),
       (col("id") * 0.5).as("v"))
     val builds: Seq[(String, () => DataFrame)] = Seq(
       "ksTest" -> (() => Stats.ksTest(values, "v", col("g") === 0)),
       "exactQuantiles" -> (() => Stats.exactQuantiles(values, "v", Seq(0.5))),
       "groupedExactQuantiles" -> (() =>
         Stats.groupedExactQuantiles(values, "g", "v", Seq(0.5))))
-    assertWidths(builds, Map(64 -> 5, 2 -> 4))
+    assertWidths(builds, Map(64 -> 3, 2 -> 3))
   }
 
   test("the partition-count sources are read only in Parallelism.scala") {
